@@ -27,6 +27,14 @@ object Sessions {
     */
   val ObjectHashFallbackThreshold: Int = 1 << 21
 
+  private val SecretKey = "(?i)secret|password|token|key".r
+
+  /** `k=v` as the extra-conf echo prints it: the value of a key that
+    * looks like a credential is masked, so logs never carry it.
+    */
+  private[graft] def echo(k: String, v: String): String =
+    if (SecretKey.findFirstIn(k).isDefined) s"$k=***" else s"$k=$v"
+
   def local(cpus: String): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -51,7 +59,8 @@ object Sessions {
     // bench/verify logs always record the effective config — a stray
     // env var can no longer silently make the verified session differ
     // from the benched one; empty-key entries (e.g. a leading '=') are
-    // skipped instead of passing an empty config key to Spark.
+    // skipped instead of passing an empty config key to Spark. Values of
+    // credential-like keys are masked in the echo (see `echo`).
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .foreach { kv =>
@@ -59,7 +68,7 @@ object Sessions {
         if (k.trim.isEmpty)
           System.err.println(s"[sessions] SKIPPED extra conf with empty key: '$kv'")
         else {
-          System.err.println(s"[sessions] extra conf: ${k.trim}=${v.trim}")
+          System.err.println(s"[sessions] extra conf: ${echo(k.trim, v.trim)}")
           b.config(k.trim, v.trim)
         }
       }

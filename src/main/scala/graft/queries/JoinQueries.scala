@@ -604,14 +604,7 @@ object JoinQueries {
       graft.MemoTimings.timed("copurchase-edges") {
         val eOut = graft.TempDirs.scoped("graft-copurchase")
         val cOut = graft.TempDirs.scoped("graft-copurchase-cnt")
-        val baskets = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .groupBy(col("ok"))
-          // collect_set = the old DISTINCT (a part on two lineitems of
-          // one order is one basket membership); sorted so the slice
-          // generator emits each pair once, oriented pi < pj
-          .agg(sort_array(collect_set(col("pk"))).as("items"))
-          .persist()
+        val baskets = copurchaseBaskets(s, d).persist()
         baskets
           .select(col("items"), posexplode(col("items")).as(Seq("i", "pi")))
           // elements strictly after 0-based position i = 1-based start
@@ -632,6 +625,20 @@ object JoinQueries {
       })
     (s.read.parquet(edges), s.read.parquet(cnt))
   }
+
+  /** The memo's one lineitem scan: each order's basket as a sorted
+    * distinct item array (ok, items). Exposed so plan specs can pin
+    * its column pruning, which the memoized artifacts hide.
+    */
+  private[graft] def copurchaseBaskets(s: org.apache.spark.sql.SparkSession,
+                                       d: String): org.apache.spark.sql.DataFrame =
+    Tables.lineitem(s, d)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .groupBy(col("ok"))
+      // collect_set = the old DISTINCT (a part on two lineitems of
+      // one order is one basket membership); sorted so the slice
+      // generator emits each pair once, oriented pi < pj
+      .agg(sort_array(collect_set(col("pk"))).as("items"))
 
   private def copurchaseEdges(s: org.apache.spark.sql.SparkSession,
                               d: String): org.apache.spark.sql.DataFrame =
