@@ -1,7 +1,6 @@
 package graft.functions
 
-import java.awt.image.{BufferedImage, ComponentSampleModel, DataBufferByte,
-  DataBufferInt, SinglePixelPackedSampleModel}
+import java.awt.image.{BufferedImage, ComponentSampleModel, DataBufferByte}
 import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
 
@@ -36,16 +35,13 @@ object ImageHash {
     * Measured on one core of a 4-vCPU Xeon (JDK 17), a 1024×1365 JPEG
     * (`TYPE_3BYTE_BGR`) decodes in 11–16 ms; reading its pixels through
     * `BufferedImage.getRGB(x, y)` (a `ColorModel` dispatch and a `byte[]`
-    * per pixel) cost another 45–60 ms, the raster loops below ≈ 4 ms.
-    * So decode is the kernel's cost now: the common layouts read their
-    * samples straight from the raster (interleaved 8-bit RGB/RGBA bytes,
-    * packed `INT_RGB` / `INT_ARGB`, and 8-bit single-band gray or indexed
-    * images through a 256-entry luma table built from the image's own
-    * `ColorModel`, the mapping `getRGB` applies to them). Everything else (16-bit,
-    * premultiplied, custom) goes through `getRGB` a row at a time. Every
-    * path adds the same `(r*299+g*587+b*114)/1000.0` per pixel into the
-    * same cell in the same order, so the hash is bit-identical whichever
-    * path ran.
+    * per pixel) cost another 45–60 ms, the raster loop below ≈ 4 ms.
+    * So decode is the kernel's cost now. Only `TYPE_3BYTE_BGR`, the
+    * layout the JPEG/PNG/BMP decoders yield for RGB scans, reads its
+    * bytes straight from the raster; every other layout goes through
+    * `getRGB` a row at a time. Both paths add the same
+    * `(r*299+g*587+b*114)/1000.0` per pixel into the same cell in the
+    * same order, so the hash is bit-identical whichever path ran.
     */
   private[graft] def hashPixels(img: BufferedImage): Long = {
     val w = img.getWidth
@@ -97,102 +93,60 @@ object ImageHash {
   private def rowKernel(img: BufferedImage, sums: Array[Double],
                         xb: Array[Int]): (Int, Int) => Unit = {
     val raster = img.getRaster
-    val tx = raster.getSampleModelTranslateX
-    val ty = raster.getSampleModelTranslateY
     (img.getType, raster.getSampleModel, raster.getDataBuffer) match {
-      case (BufferedImage.TYPE_3BYTE_BGR | BufferedImage.TYPE_4BYTE_ABGR,
-            sm: ComponentSampleModel, db: DataBufferByte)
-          if sm.getBankIndices.forall(_ == 0) && sm.getPixelStride == sm.getNumBands =>
-        val d = db.getData(0)
-        val px = sm.getPixelStride
-        val scan = sm.getScanlineStride
-        val base = db.getOffsets()(0) - ty * scan - tx * px
-        val Array(r, g, b) = sm.getBandOffsets.take(3)
-        // a literal stride lets the JIT compile the inlined loop as a
-        // counted loop (unrolled, range checks hoisted): 2x faster than
-        // a variable stride on a 1 MP scan
-        if (px == 3) (y, cell) => sumRgbBytes(sums, cell, xb, d, base + y * scan, 3, r, g, b)
-        else (y, cell) => sumRgbBytes(sums, cell, xb, d, base + y * scan, 4, r, g, b)
-      case (BufferedImage.TYPE_INT_RGB | BufferedImage.TYPE_INT_ARGB,
-            sm: SinglePixelPackedSampleModel, db: DataBufferInt) =>
+      case (BufferedImage.TYPE_3BYTE_BGR, sm: ComponentSampleModel, db: DataBufferByte)
+          if sm.getBankIndices.forall(_ == 0) && sm.getPixelStride == 3 =>
         val d = db.getData(0)
         val scan = sm.getScanlineStride
-        val base = db.getOffset - ty * scan - tx
-        val Array(r, g, b) = sm.getBitOffsets.take(3)
-        (y, cell) => sumRgbInts(sums, cell, xb, d, base + y * scan, r, g, b)
-      case (BufferedImage.TYPE_BYTE_GRAY | BufferedImage.TYPE_BYTE_INDEXED,
-            sm: ComponentSampleModel, db: DataBufferByte)
-          if sm.getNumBands == 1 && sm.getSampleSize(0) == 8 && sm.getPixelStride == 1 =>
-        val bank = sm.getBankIndices()(0)
-        val d = db.getData(bank)
-        val scan = sm.getScanlineStride
-        val base = db.getOffsets()(bank) - ty * scan - tx + sm.getBandOffsets()(0)
-        // getRGB(x, y) is ColorModel.getRGB of the pixel's data elements
-        // (a 1-byte array here), so the table reproduces it exactly
-        val cm = img.getColorModel
-        val lut = Array.tabulate(256) { v =>
-          val rgb = cm.getRGB(Array(v.toByte))
-          luma(rgb >> 16, rgb >> 8, rgb)
-        }
-        (y, cell) => sumLutBytes(sums, cell, xb, d, base + y * scan, lut)
+        val base = db.getOffsets()(0) - raster.getSampleModelTranslateY * scan -
+          raster.getSampleModelTranslateX * 3
+        val Array(r, g, b) = sm.getBandOffsets
+        (y, cell) => sumBgrBytes(sums, cell, xb, d, base + y * scan, r, g, b)
       case _ =>
         val w = img.getWidth
         val row = new Array[Int](w)
         (y, cell) => {
           img.getRGB(0, y, w, 1, row, 0, w)
-          sumRgbInts(sums, cell, xb, row, 0, 16, 8, 0)
+          sumRgbInts(sums, cell, xb, row)
         }
     }
   }
 
-  // The three loops below run one grid row's 8 cells, each a run of
+  // The two loops below run one grid row's 8 cells, each a run of
   // adjacent pixels accumulated in a local: the same additions in the
   // same order as one `sums(cell) += ...` per pixel.
 
-  private def sumRgbBytes(sums: Array[Double], cell: Int, xb: Array[Int],
-                          d: Array[Byte], row: Int, px: Int,
-                          r: Int, g: Int, b: Int): Unit = {
+  /** 3-byte pixels. The stride is the literal 3 so that the JIT compiles
+    * the loop as a counted loop (unrolled, range checks hoisted): 2x
+    * faster than a variable stride on a 1 MP scan.
+    */
+  private def sumBgrBytes(sums: Array[Double], cell: Int, xb: Array[Int],
+                          d: Array[Byte], row: Int, r: Int, g: Int, b: Int): Unit = {
     var c = 0
     while (c < 8) {
       var acc = sums(cell + c)
-      var p = row + xb(c) * px
-      val end = row + xb(c + 1) * px
+      var p = row + xb(c) * 3
+      val end = row + xb(c + 1) * 3
       while (p < end) {
         acc += luma(d(p + r), d(p + g), d(p + b))
-        p += px
+        p += 3
       }
       sums(cell + c) = acc
       c += 1
     }
   }
 
+  /** Packed sRGB ints, as `getRGB` returns them. */
   private def sumRgbInts(sums: Array[Double], cell: Int, xb: Array[Int],
-                         d: Array[Int], row: Int,
-                         r: Int, g: Int, b: Int): Unit = {
+                         d: Array[Int]): Unit = {
     var c = 0
     while (c < 8) {
       var acc = sums(cell + c)
-      var p = row + xb(c)
-      val end = row + xb(c + 1)
+      var p = xb(c)
+      val end = xb(c + 1)
       while (p < end) {
         val v = d(p)
-        acc += luma(v >>> r, v >>> g, v >>> b)
-        p += 1
-      }
-      sums(cell + c) = acc
-      c += 1
-    }
-  }
-
-  private def sumLutBytes(sums: Array[Double], cell: Int, xb: Array[Int],
-                          d: Array[Byte], row: Int, lut: Array[Double]): Unit = {
-    var c = 0
-    while (c < 8) {
-      var acc = sums(cell + c)
-      var p = row + xb(c)
-      val end = row + xb(c + 1)
-      while (p < end) {
-        acc += lut(d(p) & 0xff)
+        acc += luma(v >> 16, v >> 8, v)
         p += 1
       }
       sums(cell + c) = acc
@@ -241,11 +195,15 @@ object ImageSource {
     * evaluated once (persist/checkpoint first if the plan is reused).
     * Treat the value as "≥1 means corrupt input exists", not an exact
     * tally; the warn log carries the per-path detail.
-    *
-    * `hash` is the per-file kernel (specs wrap it to count calls).
     */
-  def withHashCounted(images: DataFrame,
-                      hash: Array[Byte] => Long = ImageHash.averageHash)
+  def withHashCounted(images: DataFrame)
+      : (DataFrame, org.apache.spark.util.LongAccumulator) =
+    withHashCounted(images, ImageHash.averageHash)
+
+  /** As above with `hash` as the per-file kernel (specs wrap it to count
+    * calls).
+    */
+  private[graft] def withHashCounted(images: DataFrame, hash: Array[Byte] => Long)
       : (DataFrame, org.apache.spark.util.LongAccumulator) = {
     val sc = images.sparkSession.sparkContext
     val dropped = sc.longAccumulator("graft.images.undecodable")

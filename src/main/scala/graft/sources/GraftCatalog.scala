@@ -420,17 +420,5 @@ private[sources] class GraftStagedTable(
     }
   }
 
-  /** Spark fails the job on its first failed task and kills the others
-    * asynchronously; until they end they can still create or abort
-    * attempt files under the stage dir, and a delete racing them leaves
-    * debris. So wait (at most 10 s) for running tasks to drain first.
-    */
-  override def abortStagedChanges(): Unit = {
-    val tracker = SparkSession.active.sparkContext.statusTracker
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (tracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
-           System.nanoTime() < deadline)
-      Thread.sleep(10)
-    rm(stageDir)
-  }
+  override def abortStagedChanges(): Unit = rm(stageDir)
 }
