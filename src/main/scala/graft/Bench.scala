@@ -184,7 +184,7 @@ object Bench {
     // artifact-build and query regressions stay distinguishable. The
     // memo cost is ALSO inside its first consumer's timing (run 1): the
     // map attributes it, it doesn't subtract it.
-    val memos = MemoTimings.snapshot
+    val memos = Artifacts.timings
     val detail =
       if (memos.isEmpty) detail1
       else detail1.dropRight(1) + "," + "\"memos\":" +

@@ -50,7 +50,7 @@ object JobProfile {
         System.gc()
       }
     }
-    val memos = MemoTimings.snapshot
+    val memos = Artifacts.timings
     if (memos.nonEmpty)
       System.err.println("[memos] " + memos.toSeq.sortBy(-_._2)
         .map { case (n, v) => f"$n=$v%.2f" }.mkString(" "))

@@ -77,23 +77,6 @@ object DedupQueries {
       .select(col("doc_a"), col("doc_b"), floor(col("jac") * 10000).as("jac_e4"))
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** The q40 set-similarity join, reusable (see q40's scaladoc for the
-    * prefix-filter recall argument).
-    *
-    * Memoized per (app, sfDir, t) through a temp parquet, like
-    * [[components]] and for the same reason: q40, q57 and q66 in one
-    * session each need the verified near-dup pair table, which is by
-    * far the most expensive sub-pipeline in the repo (gram explode +
-    * prefix self-join + per-pair verify) — and tiny on disk (near-dup
-    * pairs only). One session computes it once; on a cluster this IS
-    * the pattern (pair table written once to shared storage, every
-    * consumer reads it).
-    */
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Double), String]
-  private val prefixMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Double), String]
-
   /** Every prefix-index consumer's threshold is ≥ this (0.8 is the
     * production threshold; 0.6 is q93's lowest calibration candidate).
     * The RANKED index is built once at this session-minimum and every
@@ -111,7 +94,7 @@ object DedupQueries {
     * builds of the same ranking; now one build serves both).
     */
   private def rankedPrefixIndex(s: SparkSession, d: String): DataFrame =
-    memoParquet(prefixMemo, "graft-jacprefix", s, d, MinPrefixT) {
+    graft.Artifacts.parquet("graft-jacprefix", s, d, MinPrefixT) {
       // materialize the shared gram cache BEFORE the index build fans
       // out (r17): the frequency aggregate and the join-probe exchange
       // are independent AQE stages that otherwise launch concurrently
@@ -148,8 +131,15 @@ object DedupQueries {
       .select(col("doc_id"), col("gram"))
   }
 
+  /** The q40 set-similarity join, reusable (see q40's scaladoc for the
+    * prefix-filter recall argument). A session artifact per threshold:
+    * q40, q57 and q66 in one session each need the verified near-dup
+    * pair table, the most expensive sub-pipeline in the repo (gram
+    * explode + prefix self-join + per-pair verify), and it is tiny
+    * (near-dup pairs only).
+    */
   private def jaccardPairs(s: SparkSession, d: String, t: Double): DataFrame =
-    memoParquet(pairsMemo, "graft-jacpairs", s, d, t) {
+    graft.Artifacts.parquet("graft-jacpairs", s, d, t) {
       val prefix = prefixIndex(s, d, t)
       val cand = prefix.as("x")
         .join(prefix.as("y"),
@@ -161,42 +151,11 @@ object DedupQueries {
 
   /** (doc_id, component) for every near-dup group member at Jaccard
     * threshold `t` — q40's pairs closed under transitivity. Shared by
-    * q57 (group listing) and q66 (apply/keeper join).
-    *
-    * Memoized per (app, sfDir, t) THROUGH A TEMP PARQUET, not a held
-    * DataFrame: the pair-join + label propagation is the most expensive
-    * pipeline in the repo, and q57 + q66 in one session would otherwise
-    * run it twice. A cached frame can't carry the memo — Bench/Verify
-    * sweep every persisted block (including the propagation loop's
-    * final localCheckpoint) between queries, which would leave the held
-    * frame reading freed blocks. The table is tiny (near-dup members
-    * only), so the parquet round-trip is noise; on a cluster the same
-    * pattern writes the component table once to shared storage and
-    * every downstream consumer reads it.
+    * q57 (group listing) and q66 (apply/keeper join) as a session
+    * artifact, so the pair join + label propagation runs once.
     */
-  /** Session-scoped parquet memo: one (applicationId, sfDir, t)-keyed
-    * materialization per JVM, built on first use. See the rationale on
-    * [[jaccardPairs]] — a held DataFrame can't carry the memo because
-    * Bench/Verify sweep persisted blocks between queries.
-    */
-  private def memoParquet(memo: scala.collection.concurrent.TrieMap[(String, String, Double), String],
-                          prefix: String, s: SparkSession, d: String, t: Double)
-                         (build: => DataFrame): DataFrame = {
-    val path = memo.getOrElseUpdate(
-      (s.sparkContext.applicationId, d, t),
-      graft.MemoTimings.timed(prefix) {
-        val out = graft.TempDirs.scoped(prefix)
-        build.write.mode("overwrite").parquet(out)
-        out
-      })
-    s.read.parquet(path)
-  }
-
-  private val componentsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Double), String]
-
   private def components(s: SparkSession, d: String, t: Double = 0.8): DataFrame =
-    memoParquet(componentsMemo, "graft-components", s, d, t) {
+    graft.Artifacts.parquet("graft-components", s, d, t) {
       val edges = jaccardPairs(s, d, t)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       graft.operators.ConnectedComponents.labelPropagation(edges)
@@ -1323,9 +1282,6 @@ object DedupQueries {
         col("doc_id"))
       .limit(n)
 
-  private val sampledPairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Double), String]
-
   /** q40's prefix-filter set-similarity join restricted to the fixed
     * [[SampleN]]-doc sample (gram frequency computed WITHIN the sample
     * — the recall proof is order-agnostic). Memoized like the full
@@ -1333,7 +1289,7 @@ object DedupQueries {
     */
   private def sampledJaccardPairs(s: SparkSession, d: String, t: Double,
                                   n: Int): DataFrame =
-    memoParquet(sampledPairsMemo, "graft-jacpairs-sampled", s, d, t) {
+    graft.Artifacts.parquet("graft-jacpairs-sampled", s, d, (t, n)) {
       val g = grams(s, d)
         .join(broadcast(sampleIds(s, d, n)), "doc_id")
         .persist(StorageLevel.MEMORY_AND_DISK)

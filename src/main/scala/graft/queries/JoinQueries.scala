@@ -13,9 +13,6 @@ object JoinQueries {
 
   private def dec2(c: Column): Column = c.cast("decimal(18,2)")
 
-  private val bucketedMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   val all: Seq[Q] = Seq(
 
     // ---------------------------------------------------------------
@@ -111,8 +108,7 @@ object JoinQueries {
         // session can't clobber each other's catalog entries.
         val tag = Integer.toHexString(d.hashCode)
         val (ot, ct) = (s"graft_q69_orders_$tag", s"graft_q69_customer_$tag")
-        bucketedMemo.getOrElseUpdate((s.sparkContext.applicationId, d),
-          graft.MemoTimings.timed("bucketed-tables") {
+        graft.Artifacts.once("bucketed-tables", s, d) {
           val tmp = graft.TempDirs.scoped("graft_q69")
           Tables.orders(s, d).write.mode("overwrite")
             .bucketBy(8, "o_custkey").sortBy("o_custkey")
@@ -121,7 +117,7 @@ object JoinQueries {
             .bucketBy(8, "c_custkey").sortBy("c_custkey")
             .option("path", s"$tmp/customer").saveAsTable(ct)
           tmp
-        })
+        }
         s.table(ot).hint("merge")
           .join(s.table(ct),
             col("o_custkey") === col("c_custkey"))
@@ -572,16 +568,9 @@ object JoinQueries {
       """))
   )
 
-  private val copurchaseMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
-
   /** The support-filtered (co ≥ 2) co-purchase edge table (pi < pj,
     * co) PLUS the per-item basket-frequency table (pk, n) — shared by
-    * q123/q125/q141/q147, memoized per (app, sfDir) through temp
-    * parquets exactly like DedupQueries' pair memo: one session
-    * computes them once; on a cluster the co-occurrence artifacts are
-    * written once to shared storage and every graph consumer reads
-    * them.
+    * q123/q125/q141/q147 as one session artifact.
     *
     * r18 rewrite of the pair generation (guide §2.4 "remove shuffles
     * outright"): the former distinct(ok, pk) self-join on ok paid the
@@ -599,30 +588,28 @@ object JoinQueries {
   private def copurchaseArtifacts(s: org.apache.spark.sql.SparkSession,
                                   d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val (edges, cnt) = copurchaseMemo.getOrElseUpdate(
-      (s.sparkContext.applicationId, d),
-      graft.MemoTimings.timed("copurchase-edges") {
-        val eOut = graft.TempDirs.scoped("graft-copurchase")
-        val cOut = graft.TempDirs.scoped("graft-copurchase-cnt")
-        val baskets = copurchaseBaskets(s, d).persist()
-        baskets
-          .select(col("items"), posexplode(col("items")).as(Seq("i", "pi")))
-          // elements strictly after 0-based position i = 1-based start
-          // i+2; overshooting length clamps (last element → empty)
-          .select(col("pi"), explode(
-            slice(col("items"), col("i") + lit(2), size(col("items")))).as("pj"))
-          .groupBy(col("pi"), col("pj"))
-          .agg(count(lit(1)).as("co"))
-          .filter(col("co") >= 2)
-          .write.mode("overwrite").parquet(eOut)
-        // sequential second action over the now-cached baskets — no
-        // race guard needed (the edge write materialized the cache)
-        baskets.select(explode(col("items")).as("pk"))
-          .groupBy(col("pk")).agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(cOut)
-        baskets.unpersist()
-        (eOut, cOut)
-      })
+    val (edges, cnt) = graft.Artifacts.once("copurchase-edges", s, d) {
+      val eOut = graft.TempDirs.scoped("graft-copurchase")
+      val cOut = graft.TempDirs.scoped("graft-copurchase-cnt")
+      val baskets = copurchaseBaskets(s, d).persist()
+      baskets
+        .select(col("items"), posexplode(col("items")).as(Seq("i", "pi")))
+        // elements strictly after 0-based position i = 1-based start
+        // i+2; overshooting length clamps (last element → empty)
+        .select(col("pi"), explode(
+          slice(col("items"), col("i") + lit(2), size(col("items")))).as("pj"))
+        .groupBy(col("pi"), col("pj"))
+        .agg(count(lit(1)).as("co"))
+        .filter(col("co") >= 2)
+        .write.mode("overwrite").parquet(eOut)
+      // sequential second action over the now-cached baskets — no
+      // race guard needed (the edge write materialized the cache)
+      baskets.select(explode(col("items")).as("pk"))
+        .groupBy(col("pk")).agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(cOut)
+      baskets.unpersist()
+      (eOut, cOut)
+    }
     (s.read.parquet(edges), s.read.parquet(cnt))
   }
 

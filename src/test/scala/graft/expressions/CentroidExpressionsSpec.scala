@@ -36,6 +36,19 @@ class CentroidExpressionsSpec extends SparkSuite {
     5L -> Seq(10L, 10L, 10L),
     9L -> Seq(-5L, 3L, 100L))
 
+  private val c3: Seq[(Long, Seq[Double], Double)] = Seq(
+    (1L, Seq(1.0, 0.0), 1.0),
+    (4L, Seq(0.0, 1.0), 1.0),
+    // same direction as cid 1: cosine ties must keep the lower cid
+    // first (strict > iteration order)
+    (7L, Seq(2.0, 0.0), 2.0))
+
+  private def top2(emb: Column, nrm: Column): Column =
+    org.apache.spark.sql.GraftBridge.column(
+      Top2CentroidCos(
+        org.apache.spark.sql.GraftBridge.expression(emb),
+        org.apache.spark.sql.GraftBridge.expression(nrm), c3))
+
   test("NearestCentroid equals the HOF fold on dense, tied and edge rows") {
     val rows = Seq(
       (1L, Seq(1L, 1L, 1L)),            // nearest cid 1
@@ -69,12 +82,6 @@ class CentroidExpressionsSpec extends SparkSuite {
   }
 
   test("Top2CentroidCos equals the HOF fold incl. ties and null edges") {
-    val c3: Seq[(Long, Seq[Double], Double)] = Seq(
-      (1L, Seq(1.0, 0.0), 1.0),
-      (4L, Seq(0.0, 1.0), 1.0),
-      // same direction as cid 1: cosine ties must keep the lower cid
-      // first (strict > iteration order)
-      (7L, Seq(2.0, 0.0), 2.0))
     def foldTop2(emb: Column, nrm: Column): Column = {
       val centsLit = typedlit(c3)
       aggregate(centsLit,
@@ -93,11 +100,6 @@ class CentroidExpressionsSpec extends SparkSuite {
             .otherwise(acc)
         })
     }
-    def native(emb: Column, nrm: Column): Column =
-      org.apache.spark.sql.GraftBridge.column(
-        Top2CentroidCos(
-          org.apache.spark.sql.GraftBridge.expression(emb),
-          org.apache.spark.sql.GraftBridge.expression(nrm), c3))
     val rows = Seq(
       (1L, Seq(3.0, 1.0), math.sqrt(10.0)),
       (2L, Seq(1.0, 0.0), 1.0),            // cos tie between cid 1 and 7
@@ -105,7 +107,7 @@ class CentroidExpressionsSpec extends SparkSuite {
       (4L, Seq(1.0, 1.0), math.sqrt(2.0)))
       .toDF("id", "emb", "nrm")
     val both = rows.select(col("id"),
-      native(col("emb"), col("nrm")).as("native"),
+      top2(col("emb"), col("nrm")).as("native"),
       foldTop2(col("emb"), col("nrm")).as("fold"))
     assert(both.filter(col("native") =!= col("fold")).isEmpty,
       both.collect().mkString("\n"))
@@ -116,7 +118,7 @@ class CentroidExpressionsSpec extends SparkSuite {
       (3L, null, java.lang.Double.valueOf(1.0)),
       (4L, Seq[java.lang.Double](1.0, 0.0), null: java.lang.Double))
       .toDF("id", "emb", "nrm")
-    edges.select(native(col("emb"), col("nrm")).as("n")).collect().foreach { r =>
+    edges.select(top2(col("emb"), col("nrm")).as("n")).collect().foreach { r =>
       val s = r.getStruct(0)
       assert(s.getDouble(0) == Double.NegativeInfinity && s.getLong(1) == -1L
         && s.getDouble(2) == Double.NegativeInfinity && s.getLong(3) == -1L, s.toString)
@@ -135,8 +137,25 @@ class CentroidExpressionsSpec extends SparkSuite {
       (4L, Seq[java.lang.Long](1L, 2L)),         // wrong length
       (5L, null))                                // null array
       .toDF("id", "q")
+    // Top2CentroidCos over dense, tied, null-element, wrong-length,
+    // null-array and null-norm rows
+    val embRows = Seq(
+      (1L, Seq[java.lang.Double](3.0, 1.0), java.lang.Double.valueOf(math.sqrt(10.0))),
+      (2L, Seq[java.lang.Double](1.0, 0.0), java.lang.Double.valueOf(1.0)),  // tie 1 vs 7
+      (3L, Seq[java.lang.Double](1.0, null), java.lang.Double.valueOf(1.0)), // null element
+      (4L, Seq[java.lang.Double](1.0, 2.0, 3.0), java.lang.Double.valueOf(1.0)), // wrong length
+      (5L, null, java.lang.Double.valueOf(1.0)),                             // null array
+      (6L, Seq[java.lang.Double](1.0, 0.0), null: java.lang.Double))         // null norm
+      .toDF("id", "emb", "nrm")
+    // the repartition keeps each projection off its LocalRelation:
+    // ConvertToLocalRelation would otherwise run it through eval() at
+    // optimization time in the compiled run too
     def run(): Seq[String] =
-      rows.select(col("id"), KMeans.assignStruct(col("q"), cents).as("m"))
+      rows.repartition(2)
+        .select(col("id"), KMeans.assignStruct(col("q"), cents).as("m"))
+        .orderBy(col("id")).collect().map(_.toString).toSeq ++
+      embRows.repartition(2)
+        .select(col("id"), top2(col("emb"), col("nrm")).as("t"))
         .orderBy(col("id")).collect().map(_.toString).toSeq
     val compiled = run()
     val keys = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
