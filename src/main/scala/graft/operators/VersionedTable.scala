@@ -426,9 +426,6 @@ object VersionedTable {
   def epochYearCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (year(c) - lit(1970)).cast("int")
 
-  /** The supported time-partition granularities, coarse to fine. */
-  val TimeGrans: Seq[String] = Seq("years", "months", "days", "hours")
-
   /** One shared dispatch for every consumer of a time transform (write
     * layout, stats verifier, catalog functions) — no drift.
     */
@@ -440,7 +437,7 @@ object VersionedTable {
       case "months" => epochMonthCol(c)
       case "years" => epochYearCol(c)
       case other => throw new IllegalArgumentException(
-        s"unknown time granularity '$other' (have: $TimeGrans)")
+        s"unknown time granularity '$other' (have: ${Layout.TimeGrans})")
     }
 
   def timePeriod(gran: String, micros: Long): Int = gran match {
@@ -449,7 +446,7 @@ object VersionedTable {
     case "months" => epochMonth(micros)
     case "years" => epochYear(micros)
     case other => throw new IllegalArgumentException(
-      s"unknown time granularity '$other' (have: $TimeGrans)")
+      s"unknown time granularity '$other' (have: ${Layout.TimeGrans})")
   }
 
   /** NDV sketch size: 128 mins ≈ ±9% relative error, ~1.4 KB base64
@@ -1004,55 +1001,31 @@ object VersionedTable {
         .getBytes("UTF-8"))
   }
 
-  /** The declared layout, if any: ("bucket", "n:c1[,c2]") or a time
-    * granularity ("days"|"hours"|"months", col).
+  /** The declared layout, if any — the sidecar line whose kind is a
+    * [[Layout.Kinds]] member, parsed by [[Layout.parse]].
     */
-  def declaredLayout(base: String): Option[(String, String)] =
-    layoutLines(base).find(l =>
-      l._1 == "bucket" || l._1 == "truncate" || TimeGrans.contains(l._1))
+  def declaredLayout(base: String): Option[Layout] =
+    layoutLines(base).find(l => Layout.Kinds.contains(l._1))
+      .map { case (kind, spec) => Layout.parse(kind, spec) }
 
   /** Persist the declared layout (DDL-time; see [[declaredLayout]]).
     * Preserves a declared within-layout sort order, the other sidecar
     * line.
     */
-  def declareLayout(base: String, kind: String, spec: String): Unit = {
-    require(kind == "bucket" || kind == "truncate" ||
-      TimeGrans.contains(kind),
-      s"layout kind must be bucket|truncate|years|months|days|hours, " +
-        s"got '$kind'")
-    // validate the SPEC here, not on the commit hot path: with
-    // declaration-first inheritance a malformed sidecar would make
-    // every subsequent write throw (r15 review) — refuse it at the
-    // declaration instead
-    if (kind == "bucket") {
-      val i = spec.indexOf(':')
-      val head = if (i > 0) spec.substring(0, i).trim else ""
-      require(i > 0 && i < spec.length - 1 &&
-        head.nonEmpty && head.length <= 9 && head.forall(_.isDigit) &&
-        head.toInt >= 1 &&
-        splitBucketCols(spec.substring(i + 1)).nonEmpty,
-        s"bucket layout spec must be '<numBuckets>:<col[,col2]>' with a " +
-          s"positive count, got '$spec'")
-    } else if (kind == "truncate") {
-      val i = spec.indexOf(':')
-      val head = if (i > 0) spec.substring(0, i).trim else ""
-      val tail = if (i > 0) spec.substring(i + 1).trim else ""
-      require(i > 0 && head.nonEmpty && head.length <= 9 &&
-        head.forall(_.isDigit) && head.toInt >= 1 &&
-        tail.nonEmpty && !tail.contains('\t') && !tail.contains(',') &&
-        !tail.contains('\n'),
-        s"truncate layout spec must be '<width>:<col>' with a positive " +
-          s"width and a single column, got '$spec'")
-    } else {
-      require(spec.trim.nonEmpty && !spec.contains('\t') &&
-        !spec.contains(',') && !spec.contains('\n'),
-        s"$kind layout spec must be a single timestamp column name, " +
-          s"got '$spec'")
-    }
-    writeLayoutLines(base, (kind, spec) +:
-      layoutLines(base).filterNot(l =>
-        l._1 == "bucket" || l._1 == "truncate" || TimeGrans.contains(l._1)))
+  def declareLayout(base: String, layout: Layout): Unit = {
+    // validate HERE, through the one parser that reads the line back,
+    // not on the commit hot path: with declaration-first inheritance a
+    // malformed sidecar would make every subsequent write throw
+    Layout.parse(layout.kind, layout.render)
+    writeLayoutLines(base, (layout.kind, layout.render) +:
+      layoutLines(base).filterNot(l => Layout.Kinds.contains(l._1)))
   }
+
+  /** [[declareLayout]] from text (`kind`, `spec` as [[Layout.parse]]
+    * takes them).
+    */
+  def declareLayout(base: String, kind: String, spec: String): Unit =
+    declareLayout(base, Layout.parse(kind, spec))
 
   /** WITHIN-LAYOUT SORT ORDER (r15 — the Iceberg bucket+sort-order
     * shape, the standard 100 TB fact layout: bucket by the join key,
@@ -1324,91 +1297,6 @@ object VersionedTable {
     val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
       .hash(internal, dt, 42L).toInt
     ((h % n) + n) % n
-  }
-
-  /** Split a bucket column SPEC ("c1" or "c1,c2" — comma-joined for
-    * multi-key co-location) into its column names. One definition
-    * shared by the write layout, the verifier, the inherit path and
-    * the SPJ reporter, so the join-key arity can never drift.
-    */
-  def splitBucketCols(cs: String): Seq[String] =
-    cs.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-
-  /** The snapshot's hash-bucket layout, when it provably has one:
-    * EVERY live entry carries exactly one `<cols>#bucket` token and all
-    * agree on (columns, n). One unbucketed file (a later plain append,
-    * a DML rewrite) makes the whole answer None — consumers then fall
-    * back to shuffling/reading, never to a wrong co-location claim.
-    * Column names are the manifest token's (physical on mapped
-    * tables), comma-joined for a multi-key layout ([[splitBucketCols]]).
-    */
-  def bucketSpecOf(es: Seq[ManifestEntry]): Option[(String, Int)] = {
-    if (es.isEmpty) return None
-    val specs = es.map { e =>
-      // a grid-bucketed file carries one token PER KEY COLUMN, all
-      // sharing the per-dimension bucket count; the spec canonicalizes
-      // column order by name so both sides of a join agree
-      val bs = e.stats.collect {
-        case (k, BucketStat(n, _)) if k.endsWith("#bucket") =>
-          (k.stripSuffix("#bucket"), n)
-      }.toSeq.sortBy(_._1)
-      if (bs.nonEmpty && bs.map(_._2).distinct.size == 1)
-        Some((bs.map(_._1).mkString(","), bs.head._2))
-      else None
-    }
-    if (specs.forall(_.isDefined) && specs.flatten.distinct.size == 1)
-      specs.head
-    else None
-  }
-
-  /** The snapshot's day-partition layout, when it provably has one —
-    * the [[bucketSpecOf]] discipline for the `days(ts)` transform:
-    * EVERY live entry carries exactly one `<col>#days` token and all
-    * agree on the column. Returns the (physical) timestamp column.
-    */
-  def daysSpecOf(es: Seq[ManifestEntry]): Option[String] =
-    timeSpecOf(es).collect { case ("days", c) => c }
-
-  /** The snapshot's time-partition layout across ALL granularities
-    * (days/hours/months — r15): every live entry carries exactly one
-    * `<col>#<gran>` time token and all agree on (granularity, column).
-    * Returns (granularity, physical column).
-    */
-  def timeSpecOf(es: Seq[ManifestEntry]): Option[(String, String)] = {
-    if (es.isEmpty) return None
-    val specs = es.map { e =>
-      val ds = e.stats.collect {
-        case (k, DaysStat(_)) =>
-          TimeGrans.collectFirst {
-            case g if k.endsWith(s"#$g") => (g, k.stripSuffix(s"#$g"))
-          }
-      }.toSeq.flatten
-      if (ds.size == 1) Some(ds.head) else None
-    }
-    if (specs.forall(_.isDefined) && specs.flatten.distinct.size == 1)
-      specs.head
-    else None
-  }
-
-  /** The snapshot's truncate-partition layout, when it provably has
-    * one — the [[timeSpecOf]] discipline for `truncate(w, col)`: every
-    * live entry carries exactly one `<col>#trunc` token and all agree
-    * on (column, width). Returns (physical column, width).
-    */
-  def truncSpecOf(es: Seq[ManifestEntry]): Option[(String, Int)] = {
-    if (es.isEmpty) return None
-    val specs = es.map { e =>
-      val ts = e.stats.collect {
-        case (k, TruncStat(w, _)) if k.endsWith("#trunc") =>
-          (k.stripSuffix("#trunc"), w)
-        case (k, TruncStrStat(w, _)) if k.endsWith("#trunc") =>
-          (k.stripSuffix("#trunc"), w)
-      }.toSeq
-      if (ts.size == 1) Some(ts.head) else None
-    }
-    if (specs.forall(_.isDefined) && specs.flatten.distinct.size == 1)
-      specs.head
-    else None
   }
 
   def bloomMayContain(value: Any, k: Int, bits: Array[Byte]): Boolean = {
@@ -1723,16 +1611,13 @@ object VersionedTable {
                    bloomCols: Seq[String] = Nil,
                    txn: Option[(String, Long)] = None,
                    ndvCols: Seq[String] = Nil,
-                   bucketBy: Option[(String, Int)] = None,
-                   inheritBucket: Boolean = true,
-                   daysBy: Option[String] = None,
-                   truncateBy: Option[(String, Int)] = None): Long =
+                   layout: Option[Layout] = None,
+                   inheritBucket: Boolean = true): Long =
     retrying(maxAttempts) {
       val prevV = latestVersion(base)
       commitAt(s, base, df, "append", statsCols, prevV,
         bloomCols = bloomCols, txn = txn, ndvCols = ndvCols,
-        bucketBy = bucketBy, inheritBucket = inheritBucket,
-        daysBy = daysBy, truncateBy = truncateBy,
+        layout = layout, inheritBucket = inheritBucket,
         footprint = ReadNothing)(fresh => (fresh, Seq.empty))
     }
 
@@ -1758,8 +1643,7 @@ object VersionedTable {
   def statsDiscipline(base: String): (Seq[String], Seq[String]) = {
     val (keys, logical) = disciplineKeys(base)
     (keys.filterNot(k => k.endsWith("#bloom") || k.endsWith("#kmv") ||
-        k.endsWith("#bucket") || k.endsWith("#trunc") ||
-        TimeGrans.exists(g => k.endsWith(s"#$g")))
+        Layout.isToken(k))
        .flatMap(logical),
       keys.filter(_.endsWith("#bloom")).map(_.stripSuffix("#bloom"))
         .flatMap(logical))
@@ -2138,18 +2022,16 @@ object VersionedTable {
                     bloomCols: Seq[String] = Nil,
                     txn: Option[(String, Long)] = None,
                     ndvCols: Seq[String] = Nil,
-                    bucketBy: Option[(String, Int)] = None,
-                    inheritBucket: Boolean = true,
-                    daysBy: Option[String] = None,
-                    truncateBy: Option[(String, Int)] = None): Long =
+                    layout: Option[Layout] = None,
+                    inheritBucket: Boolean = true): Long =
     retrying(maxAttempts) {
       val prevV = latestVersion(base)
       val prevPaths = prevV.map(entries(base, _).map(_.path))
         .getOrElse(Seq.empty)
       commitAt(s, base, df, "replace", statsCols, prevV,
-        bloomCols = bloomCols, txn = txn, daysBy = daysBy,
-        ndvCols = ndvCols, bucketBy = bucketBy, truncateBy = truncateBy,
-        inheritBucket = inheritBucket)(fresh => (fresh, prevPaths))
+        bloomCols = bloomCols, txn = txn, ndvCols = ndvCols,
+        layout = layout, inheritBucket = inheritBucket)(
+        fresh => (fresh, prevPaths))
     }
 
   /** REPLACE WHERE — predicate-scoped atomic overwrite (the Delta
@@ -2178,9 +2060,8 @@ object VersionedTable {
                          bloomCols: Seq[String] = Nil,
                          pruneProbes: Seq[PruneRange] = Nil,
                          ndvCols: Seq[String] = Nil,
-                         bucketBy: Option[(String, Int)] = None,
-                         inheritBucket: Boolean = true,
-                         truncateBy: Option[(String, Int)] = None): Long =
+                         layout: Option[Layout] = None,
+                         inheritBucket: Boolean = true): Long =
     retrying(maxAttempts) {
       val prevV = latestVersion(base)
       require(prevV.isDefined,
@@ -2218,8 +2099,7 @@ object VersionedTable {
           .unionByName(df, allowMissingColumns = true)
       commitAt(s, base, newState, "replace_where", statsCols, prevV,
         bloomCols = bloomCols, ndvCols = ndvCols,
-        bucketBy = bucketBy, inheritBucket = inheritBucket,
-        truncateBy = truncateBy,
+        layout = layout, inheritBucket = inheritBucket,
         footprint = ReadScope(touched.map(_.path).toSet, Some(mapped)))(
         fresh => (fresh, touched.map(_.path)))
     }
@@ -2864,6 +2744,7 @@ object VersionedTable {
     */
   def rebucket(s: SparkSession, base: String, bucketCol: String,
                n: Int, statsCols: Seq[String] = Nil): Long = {
+    val layout = Layout.Bucket(n, Layout.splitCols(bucketCol))
     val v = retrying(maxAttempts = 5) {
       val prevV = latestVersion(base)
       require(prevV.isDefined, s"nothing to rebucket in $base")
@@ -2875,7 +2756,7 @@ object VersionedTable {
       val (sc, bc) = statsDiscipline(base)
       val prevPaths = es0.map(_.path)
       commitAt(s, base, snap, "rebucket", (statsCols ++ sc).distinct,
-        prevV, bloomCols = bc, bucketBy = Some((bucketCol, n)),
+        prevV, bloomCols = bc, layout = Some(layout),
         footprint = ReadScope(prevPaths.toSet, None))(
         fresh => (fresh, prevPaths))
     }
@@ -2884,127 +2765,61 @@ object VersionedTable {
     // appends' shape as a side effect of a failed operation) — with
     // declaration-first inheritance a stale sidecar would otherwise
     // silently revert later appends to the pre-rebucket layout
-    if (declaredLayout(base).isDefined)
-      declareLayout(base, "bucket", s"$n:$bucketCol")
+    if (declaredLayout(base).isDefined) declareLayout(base, layout)
     v
   }
 
-  /** [[rebucketStale]] generalized across the LAYOUT FAMILY (r15):
-    * `kind` is `bucket` (spec `n:c1[,c2]`) or a time granularity
-    * (`days|hours|months|years`, spec = the timestamp column). Declares
-    * the new generation, then rewrites ONLY the files whose verified
-    * layout token disagrees — so a days→months archive transition (or
-    * hours→days roll-up of cold data) costs the stale files, not the
-    * table, with the same mid-transition correctness (mixed snapshots
-    * refuse the co-location claim).
+  /** LAYOUT EVOLUTION (r15 — Iceberg partition evolution as the model:
+    * each file's verified layout token IS its layout generation, the
+    * declared layout is the CURRENT one, and they need not agree):
+    * declares `want` the current generation — so from this call on
+    * every append/DML delta lands in it (declaration-first inheritance)
+    * — and rewrites ONLY the files whose token layout differs from it:
+    * O(stale-generation files), the [[compactSmall]] footprint
+    * discipline, so a bucket-count change or a days→months archive
+    * transition costs the stale data, not the table. Mid-transition
+    * reads stay CORRECT by construction: [[Layout.of]] refuses a mixed
+    * snapshot, so joins shuffle until the last stale file retires, then
+    * the zero-exchange claim returns. Returns the new version
+    * (unchanged when nothing is stale).
     */
-  def relayoutStale(s: SparkSession, base: String, kind: String,
-                    spec: String, statsCols: Seq[String] = Nil): Long = {
-    if (kind == "bucket") {
-      val i = spec.indexOf(':')
-      val head = if (i > 0) spec.substring(0, i).trim else ""
-      // validate BEFORE toInt (r15 advice: a non-numeric count like
-      // 'ab:k' must fail with this message, not a bare
-      // NumberFormatException from the parse)
-      require(i > 0 && i < spec.length - 1 && head.nonEmpty &&
-        head.length <= 9 && head.forall(_.isDigit) && head.toInt >= 1,
-        s"bucket layout spec must be '<numBuckets>:<col[,col2]>' with a " +
-          s"positive count, got '$spec'")
-      return rebucketStale(s, base, spec.substring(i + 1).trim,
-        head.toInt, statsCols)
-    }
-    require(kind == "truncate" || TimeGrans.contains(kind),
-      s"layout kind must be bucket|truncate|${TimeGrans.mkString("|")}, " +
-        s"got '$kind'")
-    declareLayout(base, kind, spec)
+  def relayoutStale(s: SparkSession, base: String, want: Layout,
+                    statsCols: Seq[String] = Nil): Long = {
+    // the manifest `#op=` names stay what each leg always wrote
+    val op = if (want.kind == "bucket") "rebucket" else "relayout"
+    declareLayout(base, want)
     retrying(maxAttempts = 5) {
       val prevV = latestVersion(base)
-      require(prevV.isDefined, s"nothing to relayout in $base")
+      require(prevV.isDefined, s"nothing to $op in $base")
       val (es0, schema0) = replay(base, prevV.get)
+      // token names are PHYSICAL on mapped tables, and a file's bucket
+      // columns decode in name order
       val physMap = schema0.filter(ColumnMapping.isMapped)
         .map(ColumnMapping.toPhysical).getOrElse(Map.empty[String, String])
-      // truncate spec is '<w>:<col>'; time specs are the bare column
-      val specCol =
-        if (kind == "truncate") spec.substring(spec.indexOf(':') + 1).trim
-        else spec.trim
-      val wantW =
-        if (kind == "truncate")
-          spec.substring(0, spec.indexOf(':')).trim.toInt
-        else -1
-      val wantCol = physMap.getOrElse(specCol, specCol)
-      def isCurrent(e: ManifestEntry): Boolean =
-        e.stats.exists {
-          case (k, DaysStat(_)) if kind != "truncate" =>
-            k == s"$wantCol#$kind"
-          case (k, TruncStat(w, _)) if kind == "truncate" =>
-            k == s"$wantCol#trunc" && w == wantW
-          case (k, TruncStrStat(w, _)) if kind == "truncate" =>
-            k == s"$wantCol#trunc" && w == wantW
-          case _ => false
-        }
-      val stale = es0.filterNot(isCurrent)
+      val current = want.mapCols(c => Some(physMap.getOrElse(c, c))).map {
+        case Layout.Bucket(n, cs) => Layout.Bucket(n, cs.sorted)
+        case l => l
+      }
+      val stale = es0.filter(e => Layout.ofEntry(e) != current)
       if (stale.isEmpty) prevV.get
       else {
         val rid = featuresAsOf(base, prevV.get).contains("rowid")
         val rows = readEntries(s, base, stale, schema0, withRowIds = rid)
         val (sc, bc) = statsDiscipline(base)
-        // no explicit layout param: declaration-first inheritance
-        // shapes the rewrite into the freshly declared generation
-        commitAt(s, base, rows, "relayout", (statsCols ++ sc).distinct,
-          prevV, bloomCols = bc,
+        commitAt(s, base, rows, op, (statsCols ++ sc).distinct,
+          prevV, bloomCols = bc, layout = Some(want),
           footprint = ReadScope(stale.map(_.path).toSet, None))(
           fresh => (fresh, stale.map(_.path)))
       }
     }
   }
 
-  /** LAYOUT EVOLUTION, the bucket leg (r15 — Iceberg partition
-    * evolution as the model: each file's verified `#bucket` token IS
-    * its layout generation, the declared layout is the CURRENT one,
-    * and they need not agree): rewrite ONLY the files whose token
-    * differs from `(bucketCol, n)` — O(stale-generation files), the
-    * [[compactSmall]] footprint discipline — so a bucket-count change
-    * on a 100 TB table costs the stale data, not the table. Also
-    * declares `(bucketCol, n)` as the current generation, so from this
-    * call on every append/DML delta lands in the new layout
-    * (declaration-first inheritance). Mid-transition reads stay
-    * CORRECT by construction: [[bucketSpecOf]] refuses a mixed
-    * snapshot, so joins shuffle until the last stale file retires,
-    * then the zero-exchange claim returns. Returns the new version
-    * (unchanged when nothing is stale).
+  /** [[relayoutStale]] from text (`kind`, `spec` as [[Layout.parse]]
+    * takes them) — the `relayout_stale` procedure's entry point.
     */
-  def rebucketStale(s: SparkSession, base: String, bucketCol: String,
-                    n: Int, statsCols: Seq[String] = Nil): Long = {
-    declareLayout(base, "bucket", s"$n:$bucketCol")
-    retrying(maxAttempts = 5) {
-      val prevV = latestVersion(base)
-      require(prevV.isDefined, s"nothing to rebucket in $base")
-      val (es0, schema0) = replay(base, prevV.get)
-      // token names are PHYSICAL on mapped tables
-      val physMap = schema0.filter(ColumnMapping.isMapped)
-        .map(ColumnMapping.toPhysical).getOrElse(Map.empty[String, String])
-      val wantCols = splitBucketCols(bucketCol)
-        .map(c => physMap.getOrElse(c, c)).sorted
-      def isCurrent(e: ManifestEntry): Boolean = {
-        val bs = e.stats.collect {
-          case (k, BucketStat(bn, _)) if k.endsWith("#bucket") =>
-            (k.stripSuffix("#bucket"), bn)
-        }.toSeq.sortBy(_._1)
-        bs.map(_._1) == wantCols && bs.forall(_._2 == n)
-      }
-      val stale = es0.filterNot(isCurrent)
-      if (stale.isEmpty) prevV.get
-      else {
-        val rid = featuresAsOf(base, prevV.get).contains("rowid")
-        val rows = readEntries(s, base, stale, schema0, withRowIds = rid)
-        val (sc, bc) = statsDiscipline(base)
-        commitAt(s, base, rows, "rebucket", (statsCols ++ sc).distinct,
-          prevV, bloomCols = bc, bucketBy = Some((bucketCol, n)),
-          footprint = ReadScope(stale.map(_.path).toSet, None))(
-          fresh => (fresh, stale.map(_.path)))
-      }
-    }
-  }
+  def relayoutStale(s: SparkSession, base: String, kind: String,
+                    spec: String): Long =
+    relayoutStale(s, base, Layout.parse(kind, spec))
 
   /** Per-file zone-map SPANS on the declared within-layout sort
     * column — the SORT-ORDER-EVOLUTION inspection surface (r16 ask
@@ -3402,9 +3217,7 @@ object VersionedTable {
     if (cs.nonEmpty) writeConstraints(target, cs)
     // the DDL-declared layout travels like constraints do: the branch
     // keeps shaping its writes per the declaration
-    declaredLayout(source).foreach { case (kind, spec) =>
-      declareLayout(target, kind, spec)
-    }
+    declaredLayout(source).foreach(declareLayout(target, _))
     val sw = declaredSortWithin(source)
     if (sw.nonEmpty) declareSortWithin(target, sw)
     1L
@@ -4129,10 +3942,8 @@ object VersionedTable {
                        bloomCols: Seq[String] = Nil,
                        txn: Option[(String, Long)] = None,
                        ndvCols: Seq[String] = Nil,
-                       bucketBy: Option[(String, Int)] = None,
+                       layout: Option[Layout] = None,
                        inheritBucket: Boolean = true,
-                       daysBy: Option[String] = None,
-                       truncateBy: Option[(String, Int)] = None,
                        footprint: ReadFootprint = ReadEverything)(
       mkDelta: Seq[String] => (Seq[String], Seq[String])): Long = {
     // ONE replay of the previous snapshot feeds both sticky
@@ -4195,160 +4006,76 @@ object VersionedTable {
       require(ok, s"bloom column '$c' must be int, long or string, " +
         s"got ${df.schema(c).dataType}")
     }
-    // BUCKET DISCIPLINE is table-sticky like the NDV discipline: once
-    // the whole snapshot is hash-bucketed, every commit that adds or
-    // rewrites data re-buckets its delta with the same (col, n) — a
-    // DML rewrite, MERGE, compaction or streaming append must not
-    // silently void the co-location claim SPJ plans zero-shuffle
-    // joins on (cost: one shuffle of the DELTA, which rewrites were
-    // paying to write anyway). Explicit layout changes (OPTIMIZE
-    // ZORDER, clusterBy/zorderCols/numFiles writes) opt out via
-    // inheritBucket=false; a frame lacking the bucket column skips
-    // inheritance — in both cases bucketSpecOf goes None and readers
-    // fall back to shuffling, the safe degrade.
-    // the DECLARED layout is the table's CURRENT GENERATION — it wins
-    // over live-file inheritance (r15, the Iceberg partition-evolution
-    // model: switching the declaration makes NEW data take the new
-    // spec while old files keep theirs; the co-location claim stays
-    // voided until a scoped rewrite retires the stale generation —
-    // see [[rebucketStale]]). A declaration whose columns are absent
-    // from this frame skips, the graceful-degrade rule.
-    lazy val declaredBucket: Option[(String, Int)] =
-      declaredLayout(base).collect {
-        case ("bucket", spec) if spec.contains(':') =>
-          val i = spec.indexOf(':')
-          (spec.substring(i + 1), spec.substring(0, i).toInt)
-      }.filter { case (cs, _) =>
-        splitBucketCols(cs).forall(df.columns.contains) }
-    lazy val declaredTime: Option[(String, String)] =
-      declaredLayout(base).collect {
-        case (g, c) if TimeGrans.contains(g) => (g, c)
-      }.filter { case (_, c) => df.columns.contains(c) }
-    lazy val declaredTrunc: Option[(String, Int)] =
-      declaredLayout(base).collect {
-        case ("truncate", spec) if spec.contains(':') =>
-          val i = spec.indexOf(':')
-          (spec.substring(i + 1).trim, spec.substring(0, i).trim.toInt)
-      }.filter { case (c, _) => df.columns.contains(c) }
-    val effBucketBy: Option[(String, Int)] = bucketBy.orElse {
-      // an explicit daysBy/truncateBy is a LAYOUT CHANGE — it overrides
-      // the sticky bucket claim rather than conflicting with it
-      if (!inheritBucket || daysBy.isDefined || truncateBy.isDefined) None
-      else declaredBucket.orElse {
-        if (declaredTime.isDefined || declaredTrunc.isDefined) None
-        else prevSnap.flatMap { case (pes, pschema) =>
-          bucketSpecOf(pes).flatMap { case (physCols, n) =>
-            val logical = splitBucketCols(physCols).map { pc =>
-              (pschema match {
-                case Some(st) if ColumnMapping.isMapped(st) =>
-                  ColumnMapping.toLogical(st).get(pc)
-                case _ => Some(pc)
-              }).filter(df.columns.contains)
-            }
-            if (logical.forall(_.isDefined))
-              Some((logical.flatten.mkString(","), n))
-            else None
+    // LAYOUT DISCIPLINE is table-sticky like the NDV discipline: once
+    // the whole snapshot carries one layout (hash buckets, a time
+    // period, a truncate prefix), every commit that adds or rewrites
+    // data lays its delta out the same way — a DML rewrite, MERGE,
+    // compaction or streaming append must not silently void the
+    // co-location claim SPJ plans zero-shuffle joins on (cost: one
+    // shuffle of the DELTA, which rewrites were paying to write
+    // anyway). The effective layout is the explicit one if given, else
+    // the DECLARED one — the table's CURRENT GENERATION (r15, the
+    // Iceberg partition-evolution model: switching the declaration
+    // makes NEW data take the new spec while old files keep theirs; the
+    // claim stays voided until a scoped rewrite retires the stale
+    // generation, see [[relayoutStale]]) — else the one the live files
+    // carry. Explicit layout changes (OPTIMIZE ZORDER, clusterBy/
+    // zorderCols/numFiles writes) opt out of both via
+    // inheritBucket=false; a declared or inherited layout whose columns
+    // are absent from this frame skips — either way Layout.of goes None
+    // and readers fall back to shuffling, the safe degrade.
+    val effLayout: Option[Layout] = layout.orElse {
+      if (!inheritBucket) None
+      else declaredLayout(base).filter(_.cols.forall(df.columns.contains))
+        .orElse(prevSnap.flatMap { case (pes, pschema) =>
+          val logical: String => Option[String] = pschema match {
+            case Some(st) if ColumnMapping.isMapped(st) =>
+              ColumnMapping.toLogical(st).get
+            case _ => Some(_)
           }
-        }
-      }
+          Layout.of(pes).flatMap(
+            _.mapCols(pc => logical(pc).filter(df.columns.contains)))
+        })
     }
-    // TIME-PARTITIONED layout (`days(ts)` / `hours(ts)` / `months(ts)`
-    // — r15 generalizes the r14 days leg to the Iceberg transform
-    // family): sticky exactly like the bucket discipline — once the
-    // snapshot is time-partitioned, every data-adding commit
-    // re-partitions its delta by the same UTC period unless an
-    // explicit alternative layout opts out (inheritBucket gates both
-    // layout claims). Declaration-first like the bucket leg.
-    val effTimeBy: Option[(String, String)] =
-      daysBy.map(c => ("days", c)).orElse {
-        if (!inheritBucket || effBucketBy.isDefined ||
-            truncateBy.isDefined) None
-        else declaredTime.orElse {
-          if (declaredTrunc.isDefined) None
-          else prevSnap.flatMap { case (pes, pschema) =>
-            timeSpecOf(pes).flatMap { case (g, pc) =>
-              (pschema match {
-                case Some(st) if ColumnMapping.isMapped(st) =>
-                  ColumnMapping.toLogical(st).get(pc)
-                case _ => Some(pc)
-              }).filter(df.columns.contains).map(g -> _)
-            }
+    effLayout.foreach { l =>
+      l.cols.foreach { c =>
+        require(!c.contains('=') && !c.contains('\t') && !c.contains('#') &&
+          !c.contains(','),
+          s"${l.kind} column name '$c' would corrupt the manifest line format")
+      }
+      // bucket hashes and truncate floors are defined (and murmur3 is
+      // stable across engines) for these key types only
+      def intLongOrString(c: String): Unit = {
+        val dt = df.schema(c).dataType
+        require(dt == IntegerType || dt == LongType || dt == StringType,
+          s"${l.kind} column '$c' must be int, long or string, got $dt")
+      }
+      l match {
+        case Layout.Bucket(n, cs) =>
+          require(n >= 1, s"bucketBy bucket count must be >= 1, got $n")
+          require(cs.nonEmpty, "bucketBy needs at least one column")
+          cs.foreach(intLongOrString)
+        case Layout.Truncate(w, c) =>
+          require(w >= 1, s"truncate width must be >= 1, got $w")
+          intLongOrString(c)
+        case Layout.Time(g, c) =>
+          require(df.schema(c).dataType == TimestampType,
+            s"$g column '$c' must be timestamp, got ${df.schema(c).dataType}")
+          // months/years derive CALENDAR fields (year()/month()) which
+          // follow the session zone, while the catalog's months()/years()
+          // functions — what SPJ evaluates — are hard-UTC. days/hours are
+          // pure epoch arithmetic and immune. Enforce the engine's pinned
+          // UTC convention HERE (r15 review) instead of letting a non-UTC
+          // writer mint tokens the planner would mis-group joins on.
+          if (g == "months" || g == "years") {
+            val tz = s.sessionState.conf.sessionLocalTimeZone
+            require(java.time.ZoneId.of(tz).normalized() ==
+              java.time.ZoneOffset.UTC,
+              s"$g(ts) layouts require a UTC session " +
+                s"(spark.sql.session.timeZone=$tz): the calendar-field " +
+                "partition tokens must match the hard-UTC catalog function " +
+                "SPJ evaluates")
           }
-        }
-      }
-    // TRUNCATE-partition layout (`truncate(w, col)` — r16 completes the
-    // Iceberg transform family): sticky + declaration-first exactly
-    // like the bucket/time legs; inheritBucket gates all three claims.
-    val effTruncBy: Option[(String, Int)] = truncateBy.orElse {
-      if (!inheritBucket || effBucketBy.isDefined || effTimeBy.isDefined)
-        None
-      else declaredTrunc.orElse {
-        prevSnap.flatMap { case (pes, pschema) =>
-          truncSpecOf(pes).flatMap { case (pc, w) =>
-            (pschema match {
-              case Some(st) if ColumnMapping.isMapped(st) =>
-                ColumnMapping.toLogical(st).get(pc)
-              case _ => Some(pc)
-            }).filter(df.columns.contains).map(_ -> w)
-          }
-        }
-      }
-    }
-    effTruncBy.foreach { case (c, w) =>
-      require(!c.contains('=') && !c.contains('\t') && !c.contains('#') &&
-        !c.contains(','),
-        s"truncate column name '$c' would corrupt the manifest line format")
-      require(w >= 1, s"truncate width must be >= 1, got $w")
-      require(bucketBy.isEmpty && daysBy.isEmpty,
-        "truncate partitioning is mutually exclusive with bucketBy/daysBy")
-      val ok = df.schema(c).dataType match {
-        case IntegerType | LongType | StringType => true
-        case _ => false
-      }
-      require(ok, s"truncate column '$c' must be int, long or string, " +
-        s"got ${df.schema(c).dataType}")
-    }
-    effTimeBy.foreach { case (g, c) =>
-      require(!c.contains('=') && !c.contains('\t') && !c.contains('#') &&
-        !c.contains(','),
-        s"time-partition column name '$c' would corrupt the manifest " +
-          "line format")
-      require(df.schema(c).dataType == TimestampType,
-        s"$g column '$c' must be timestamp, got ${df.schema(c).dataType}")
-      require(bucketBy.isEmpty,
-        "time partitioning and bucketBy are mutually exclusive layouts")
-      // months/years derive CALENDAR fields (year()/month()) which
-      // follow the session zone, while the catalog's months()/years()
-      // functions — what SPJ evaluates — are hard-UTC. days/hours are
-      // pure epoch arithmetic and immune. Enforce the engine's pinned
-      // UTC convention HERE (r15 review) instead of letting a non-UTC
-      // writer mint tokens the planner would mis-group joins on.
-      if (g == "months" || g == "years") {
-        val tz = s.sessionState.conf.sessionLocalTimeZone
-        require(java.time.ZoneId.of(tz).normalized() ==
-          java.time.ZoneOffset.UTC,
-          s"$g(ts) layouts require a UTC session " +
-            s"(spark.sql.session.timeZone=$tz): the calendar-field " +
-            "partition tokens must match the hard-UTC catalog function " +
-            "SPJ evaluates")
-      }
-    }
-    effBucketBy.foreach { case (cs, n) =>
-      require(effTimeBy.isEmpty,
-        "time partitioning and bucketBy are mutually exclusive layouts")
-      require(n >= 1, s"bucketBy bucket count must be >= 1, got $n")
-      val bcols = splitBucketCols(cs)
-      require(bcols.nonEmpty, "bucketBy needs at least one column")
-      bcols.foreach { c =>
-        require(!c.contains('=') && !c.contains('\t') && !c.contains('#'),
-          s"bucket column name '$c' would corrupt the manifest line format")
-        val ok = df.schema(c).dataType match {
-          case IntegerType | LongType | StringType => true
-          case _ => false
-        }
-        require(ok, s"bucket column '$c' must be int, long or string " +
-          s"(murmur3 hash stability across engines/types), got " +
-          s"${df.schema(c).dataType}")
       }
     }
     // ROW TRACKING: on an enabled table every commit allocates a
@@ -4366,8 +4093,8 @@ object VersionedTable {
       s"frame carries $RowIdCol but row tracking is not enabled on " +
         s"$base (enableRowIds first, or rename the column — it is " +
         "reserved for stable row identity)")
-    // the day/grid write paths derive __graft_day / __graft_b<i>
-    // columns via withColumn and strip them through partitionBy; a
+    // the split-layout write paths derive __graft_k<i> key columns
+    // via withColumn and strip them through partitionBy; a
     // user column wearing one of those names would be silently
     // overwritten and dropped from the written files (r14 advice) —
     // the prefix is reserved, mirroring the RowIdCol check above
@@ -4397,101 +4124,56 @@ object VersionedTable {
     // rule); the sort columns join the zone-map stats set below so the
     // locality is actually readable.
     val sortPhys: Seq[String] =
-      if (effBucketBy.isEmpty && effTimeBy.isEmpty && effTruncBy.isEmpty)
-        Seq.empty
+      if (effLayout.isEmpty) Seq.empty
       else declaredSortWithin(base).filter(df.columns.contains).map(phys)
-    // HASH-BUCKETED LAYOUT: one shuffle at write — partition index IS
-    // pmod(murmur3(col), n) (HashPartitioning's partitionIdExpression
-    // with Spark's seed 42), and each task writes one file, so every
-    // file holds exactly one bucket by construction. collectStats
-    // VERIFIES that (min == max of the bucket expr per file) rather
-    // than trusting it — a layout claim the SPJ planner will elide
-    // shuffles on must be checked, not assumed. The explicit partition
-    // count pins AQE (user-specified repartition is never coalesced).
-    val dfOut = effBucketBy match {
-      case Some((cs, n)) if splitBucketCols(cs).size == 1 =>
-        val r = dfRenamed.repartition(n, col(phys(splitBucketCols(cs).head)))
-        // one bucket per task ⟹ sorting by the secondary alone sorts
-        // the file
-        if (sortPhys.isEmpty) r
-        else r.sortWithinPartitions(sortPhys.map(col): _*)
-      // MULTI-KEY = GRID bucketing: n buckets PER KEY COLUMN, each
-      // file pure in EVERY per-key bucket id. This is the shape
-      // vanilla Spark's SPJ can actually match (KeyGroupedPartitioning
-      // requires single-leaf transforms — one bucket(n, cᵢ) per key);
-      // a tuple-hash layout would co-locate but never elide the
-      // shuffle. The one write shuffle clusters grid cells; file
-      // purity comes from the writer's partitionBy split (derived
-      // bucket columns never land in the files), flattened back to the
-      // one-level layout like the days transform.
-      case Some((cs, n)) =>
-        val bcols = splitBucketCols(cs).map(phys)
-        val idCols = bcols.map(c => pmod(hash(col(c)), lit(n)))
-        var w = dfRenamed
-        bcols.indices.foreach { i =>
-          w = w.withColumn(s"__graft_b$i", idCols(i))
-        }
-        val r = w.repartition(bcols.indices.map(i => col(s"__graft_b$i")): _*)
-        // grid-cell prefix first: the writer's partitionBy requires
-        // ordering on the derived cells — providing it as our prefix
-        // keeps the secondary suffix intact instead of being re-sorted
-        // away by FileFormatWriter
-        if (sortPhys.isEmpty) r
-        else r.sortWithinPartitions(
-          (bcols.indices.map(i => s"__graft_b$i") ++ sortPhys)
-            .map(col): _*)
-      case None => dfRenamed
-    }
+    val physLayout = effLayout.flatMap(_.mapCols(c => Some(phys(c))))
     val next = prevV.getOrElse(0L) + 1L
     // attempt-private dir: concurrent committers (and retries) can
     // never list or overwrite each other's unpublished files
     val dataDir = f"d$next-${java.util.UUID.randomUUID().toString.take(8)}"
-    val gridCols = effBucketBy.map(b => splitBucketCols(b._1)) match {
-      case Some(bs) if bs.size > 1 => bs.indices.map(i => s"__graft_b$i")
-      case _ => Seq.empty
-    }
-    if (effTimeBy.isDefined) {
-      // TIME-PARTITIONED write: one shuffle clusters each period
-      // (day/hour/month), the parquet writer's partitionBy splits
-      // files one-period-pure (the derived period column never lands
-      // in the files — the timestamp does, and the verifier recomputes
-      // the period from it), then the period dirs FLATTEN into the
-      // manifest's flat layout (driver renames, O(files)) so every
-      // path invariant (d{v}-{nonce}/file, stream regexes, bucket-id
-      // lookups) holds unchanged.
-      val (g, c) = effTimeBy.get
-      val dayed = dfOut
-        .withColumn("__graft_day", timePeriodCol(g, col(phys(c))))
-        .repartition(col("__graft_day"))
-      val daySorted =
-        if (sortPhys.isEmpty) dayed
-        else dayed.sortWithinPartitions(
-          ("__graft_day" +: sortPhys).map(col): _*)
-      daySorted.write.partitionBy("__graft_day").parquet(s"$base/$dataDir")
-      flattenPartDirs(Paths.get(base, dataDir))
-    } else if (effTruncBy.isDefined) {
-      // TRUNCATE-partitioned write: the time-leg discipline — one
-      // shuffle clusters each prefix, partitionBy splits files
-      // one-prefix-pure (the derived prefix column never lands in the
-      // files; the verifier recomputes it from the key), the prefix
-      // dirs flatten into the manifest's flat layout
-      val (c, w) = effTruncBy.get
-      val truncd = dfOut
-        .withColumn("__graft_trunc",
-          truncCol(col(phys(c)), w, dfRenamed.schema(phys(c)).dataType))
-        .repartition(col("__graft_trunc"))
-      val truncSorted =
-        if (sortPhys.isEmpty) truncd
-        else truncd.sortWithinPartitions(
-          ("__graft_trunc" +: sortPhys).map(col): _*)
-      truncSorted.write.partitionBy("__graft_trunc").parquet(s"$base/$dataDir")
-      flattenPartDirs(Paths.get(base, dataDir))
-    } else if (gridCols.nonEmpty) {
-      // GRID-bucketed write: same partitionBy-then-flatten discipline
-      dfOut.write.partitionBy(gridCols: _*).parquet(s"$base/$dataDir")
-      flattenPartDirs(Paths.get(base, dataDir))
-    } else {
-      dfOut.write.parquet(s"$base/$dataDir")
+    physLayout match {
+      // HASH-BUCKETED LAYOUT: one shuffle at write — partition index IS
+      // pmod(murmur3(col), n) (HashPartitioning's partitionIdExpression
+      // with Spark's seed 42), and each task writes one file, so every
+      // file holds exactly one bucket by construction. collectStats
+      // VERIFIES that (min == max of the bucket expr per file) rather
+      // than trusting it — a layout claim the SPJ planner will elide
+      // shuffles on must be checked, not assumed. The explicit
+      // partition count pins AQE (user-specified repartition is never
+      // coalesced).
+      case Some(Layout.Bucket(n, Seq(c))) =>
+        val r = dfRenamed.repartition(n, col(c))
+        // one bucket per task ⟹ sorting by the secondary alone sorts
+        // the file
+        (if (sortPhys.isEmpty) r
+         else r.sortWithinPartitions(sortPhys.map(col): _*))
+          .write.parquet(s"$base/$dataDir")
+      // SPLIT LAYOUTS — a time period, a truncate prefix, or a GRID of
+      // buckets (n PER KEY COLUMN, each file pure in every per-key id:
+      // the shape vanilla Spark's SPJ can match, since
+      // KeyGroupedPartitioning requires single-leaf transforms — a
+      // tuple-hash layout would co-locate but never elide the shuffle).
+      // One shuffle clusters each key cell, the parquet writer's
+      // partitionBy splits files key-pure (the derived key columns
+      // never land in the files — the verifier recomputes them from the
+      // keys), then the key dirs FLATTEN into the manifest's flat layout
+      // (driver renames, O(files)) so every path invariant
+      // (d{v}-{nonce}/file, stream regexes, bucket-id lookups) holds.
+      case Some(l) =>
+        val keys = l.keyExprs(c => dfRenamed.schema(c).dataType).map(_._2)
+        val names = keys.indices.map(i => s"__graft_k$i")
+        val keyed = names.zip(keys).foldLeft(dfRenamed) {
+          case (w, (nm, k)) => w.withColumn(nm, k)
+        }.repartition(names.map(col): _*)
+        // key-cell prefix first: the writer's partitionBy requires
+        // ordering on the derived cells — providing it as our prefix
+        // keeps the secondary suffix intact instead of being re-sorted
+        // away by FileFormatWriter
+        (if (sortPhys.isEmpty) keyed
+         else keyed.sortWithinPartitions((names ++ sortPhys).map(col): _*))
+          .write.partitionBy(names: _*).parquet(s"$base/$dataDir")
+        flattenPartDirs(Paths.get(base, dataDir))
+      case None => dfRenamed.write.parquet(s"$base/$dataDir")
     }
     val dirStream = Files.list(Paths.get(base, dataDir))
     val freshNames =
@@ -4537,12 +4219,7 @@ object VersionedTable {
       if (freshNames.isEmpty) Map.empty[String, (Long, Map[String, Stat])]
       else collectStats(s, s"$base/$dataDir",
         (statsCols.map(phys) ++ sortStatsPhys).distinct,
-        bloomCols.map(phys), effNdvCols.map(phys),
-        effBucketBy.map { case (cs, n) =>
-          (splitBucketCols(cs).map(phys).mkString(","), n) },
-        effTimeBy.map { case (g, c) => (g, phys(c)) },
-        effTruncBy.map { case (c, w) =>
-          (phys(c), w, dfRenamed.schema(phys(c)).dataType) })
+        bloomCols.map(phys), effNdvCols.map(phys), physLayout)
     // a fresh file absent from the grouped scan is PROVABLY empty
     // (zero rows ⟹ no group; all-null columns still group) — keep it
     // out of the manifest, so deletes that empty a file don't strand
@@ -4704,9 +4381,7 @@ object VersionedTable {
       statsCols: Seq[String],
       bloomCols: Seq[String] = Nil,
       ndvCols: Seq[String] = Nil,
-      bucketBy: Option[(String, Int)] = None,
-      timeBy: Option[(String, String)] = None,
-      truncBy: Option[(String, Int, DataType)] = None)
+      layout: Option[Layout] = None)
       : Map[String, (Long, Map[String, Stat])] = {
     val df = s.read.parquet(dir)
     def proj(c: String): Column = df.schema(c).dataType match {
@@ -4720,6 +4395,9 @@ object VersionedTable {
     }
     val isStr = statsCols.map(c =>
       c -> (df.schema(c).dataType == StringType)).toMap
+    // layout VERIFICATION per key column: recomputed from the keys
+    // themselves, min == max per file by the write's construction
+    val layoutKeys = layout.toSeq.flatMap(_.keyExprs(df.schema(_).dataType))
     val aggs = count(lit(1)).as("__rows") +:
       (statsCols.flatMap(c => Seq(
         min(proj(c)).as(s"__lo_$c"),
@@ -4734,29 +4412,8 @@ object VersionedTable {
         // aggregate state per file (never ∝ distinct values)
         ndvCols.map(c => graft.expressions.KmvAgg.kmv(
           ndvHash56(col(c)), NdvK).as(s"__kmv_$c")) ++
-        // bucket VERIFICATION per key column: `functions.hash` is
-        // Murmur3 seed 42 — the hash the write partitioned on — so a
-        // bucket-pure file has min == max PER KEY here by construction
-        // (the grid layout verifies every dimension independently)
-        bucketBy.toSeq.flatMap { case (cs, n) =>
-          splitBucketCols(cs).flatMap { c => Seq(
-            min(pmod(hash(col(c)), lit(n))).as(s"__bkt_lo_$c"),
-            max(pmod(hash(col(c)), lit(n))).as(s"__bkt_hi_$c"))
-          }
-        } ++
-        // time-period VERIFICATION: recomputed from the timestamp
-        // itself (the derived partition column never lands in files),
-        // min == max per file by the partitionBy construction — one
-        // dispatch for days/hours/months
-        timeBy.toSeq.flatMap { case (g, c) => Seq(
-          min(timePeriodCol(g, col(c))).as("__day_lo"),
-          max(timePeriodCol(g, col(c))).as("__day_hi"))
-        } ++
-        // truncate-prefix VERIFICATION: recomputed from the key itself,
-        // min == max per file by the partitionBy construction
-        truncBy.toSeq.flatMap { case (c, w, dt) => Seq(
-          min(truncCol(col(c), w, dt)).as("__tr_lo"),
-          max(truncCol(col(c), w, dt)).as("__tr_hi"))
+        layoutKeys.zipWithIndex.flatMap { case ((_, k), i) =>
+          Seq(min(k).as(s"__lk_lo_$i"), max(k).as(s"__lk_hi_$i"))
         })
     df.groupBy(col("_metadata.file_name").as("__f"))
       .agg(aggs.head, aggs.tail: _*)
@@ -4788,62 +4445,15 @@ object VersionedTable {
           s"$c#kmv" -> (KmvStats(NdvK,
             r.getAs[scala.collection.Seq[Long]](s"__kmv_$c").toArray): Stat)
         }.toMap
-        val bkt = bucketBy.toSeq.flatMap { case (cs, n) =>
-          splitBucketCols(cs).map { c =>
-            val lo = r.getAs[Int](s"__bkt_lo_$c")
-            val hi = r.getAs[Int](s"__bkt_hi_$c")
-            require(lo == hi,
-              s"bucketed write produced a MULTI-BUCKET file " +
-                s"(${r.getAs[String]("__f")}: bucket ids $lo..$hi of $n " +
-                s"on '$c') — refusing to record a co-location claim the " +
-                "planner would elide shuffles on")
-            s"$c#bucket" -> (BucketStat(n, lo): Stat)
+        val layoutToks = layout.toSeq.flatMap { l =>
+          layoutKeys.zipWithIndex.map { case ((c, _), i) =>
+            l.token(c) -> l.verified(r.getAs[String]("__f"), c,
+              r.getAs[Any](s"__lk_lo_$i"), r.getAs[Any](s"__lk_hi_$i"))
           }
-        }.toMap
-        val dayTok = timeBy.map { case (g, c) =>
-          // NULL timestamps land in their own default-partition file
-          // whose day extrema are null; getAs[Int] would unbox that to
-          // 0 and record a FALSE verified day-0 claim SPJ would group
-          // on (r14 advice) — refuse the commit instead: a days(ts)
-          // layout requires the partition column non-null, exactly
-          // like Iceberg's identity/days source-column contract
-          require(r.getAs[Any]("__day_lo") != null &&
-            r.getAs[Any]("__day_hi") != null,
-            s"time-partitioned write has NULL '$c' timestamps " +
-              s"(${r.getAs[String]("__f")}) — the $g($c) layout " +
-              "requires a non-null partition column; filter or fill " +
-              "nulls before committing")
-          val lo = r.getAs[Int]("__day_lo")
-          val hi = r.getAs[Int]("__day_hi")
-          require(lo == hi,
-            s"time-partitioned write produced a MULTI-PERIOD file " +
-              s"(${r.getAs[String]("__f")}: $g $lo..$hi on '$c') — " +
-              "refusing to record a co-location claim the planner " +
-              "would elide shuffles on")
-          s"$c#$g" -> (DaysStat(lo): Stat)
-        }.toMap
-        val truncTok = truncBy.map { case (c, w, dt) =>
-          val lo = r.getAs[Any]("__tr_lo")
-          val hi = r.getAs[Any]("__tr_hi")
-          require(lo != null && hi != null,
-            s"truncate-partitioned write has NULL '$c' keys " +
-              s"(${r.getAs[String]("__f")}) — the truncate($w, $c) " +
-              "layout requires a non-null partition column; filter or " +
-              "fill nulls before committing")
-          require(lo == hi,
-            s"truncate-partitioned write produced a MULTI-PREFIX file " +
-              s"(${r.getAs[String]("__f")}: prefixes $lo..$hi of " +
-              s"width $w on '$c') — refusing to record a co-location " +
-              "claim the planner would elide shuffles on")
-          s"$c#trunc" -> ((dt match {
-            case StringType => TruncStrStat(w, lo.asInstanceOf[String])
-            case _ => TruncStat(w, lo.asInstanceOf[Long])
-          }): Stat)
         }.toMap
         r.getAs[String]("__f") ->
           ((r.getAs[Long]("__rows"),
-            per ++ blooms ++ kmvs ++ bkt ++ dayTok ++ truncTok
-              : Map[String, Stat]))
+            per ++ blooms ++ kmvs ++ layoutToks: Map[String, Stat]))
       }.toMap
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.operators.VersionedTable
+import graft.operators.{Layout, VersionedTable}
 
 /** SQL table-valued functions over the commit log — the audit surface
   * as plain FROM-clause citizens (the `table_changes` idiom):
@@ -178,8 +178,9 @@ object GraftTableFunctions {
           .map { case (c, n) => s"$c≈$n" }.mkString("; ")
         // the hash-bucket layout, when the snapshot provably has one
         // (q192's SPJ claim) — '' when any file is unbucketed
-        val bkt = VersionedTable.bucketSpecOf(es)
-          .map { case (c, n) => s"$c:$n" }.getOrElse("")
+        val bkt = Layout.of(es).collect {
+          case Layout.Bucket(n, cs) => s"${cs.mkString(",")}:$n"
+        }.getOrElse("")
         // row tracking: the id high-water mark, -1 when not enabled
         val hwm = if (VersionedTable.featuresAsOf(base, v)
             .contains("rowid")) VersionedTable.rowHwmAsOf(base, v)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.VersionedTable
+import graft.operators.{Layout, VersionedTable}
 
 /** The graft format as a SQL CATALOG — name-addressed tables with
   * VERSION-AS-OF time travel in plain SQL:
@@ -104,57 +104,18 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
   override def tableExists(ident: Identifier): Boolean =
     VersionedTable.latestVersion(basePath(ident)).isDefined
 
-  /** `PARTITIONED BY` transforms the DDL accepts: `bucket(n, c...)`
-    * (the hash/grid layout — one or several keys) and the
-    * `days(ts)`/`hours(ts)`/`months(ts)` time family (r15 completes
-    * the Iceberg set). Identity partitioning is refused with the cure
-    * named; the declared layout persists as the table's DEFAULT
-    * (`VersionedTable.declareLayout`) so the first data write — and
-    * any write after a voided claim — shapes its delta per the
-    * declaration (the Iceberg partition-spec semantic).
-    */
-  private def layoutOf(partitions: Array[Transform])
-      : Option[(String, String)] = {
-    if (partitions.isEmpty) return None
-    require(partitions.length == 1,
-      "graft tables take ONE layout transform: bucket(n, col...), " +
-        s"truncate(w, col) or ${VersionedTable.TimeGrans.mkString("/")}(ts)")
-    val t = partitions.head
-    def cols = t.references().map(_.fieldNames().mkString(".")).mkString(",")
-    t.name() match {
-      case "bucket" =>
-        val n = t.arguments().collectFirst {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-            l.value().toString.toInt
-        }.getOrElse(throw new IllegalArgumentException(
-          "bucket(n, col...) needs a literal bucket count"))
-        Some(("bucket", s"$n:$cols"))
-      case "truncate" =>
-        val w = t.arguments().collectFirst {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-            l.value().toString.toInt
-        }.getOrElse(throw new IllegalArgumentException(
-          "truncate(width, col) needs a literal width"))
-        Some(("truncate", s"$w:$cols"))
-      case g if VersionedTable.TimeGrans.contains(g) => Some((g, cols))
-      case other => throw new UnsupportedOperationException(
-        s"graft supports PARTITIONED BY (bucket(n, col...)), " +
-          s"(truncate(w, col)) and " +
-          s"(${VersionedTable.TimeGrans.mkString("|")}(ts)); got " +
-          s"'$other' — range layouts go through clusterBy/OPTIMIZE " +
-          "ZORDER instead")
-    }
-  }
-
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: JMap[String, String]): Table = {
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
     val base = basePath(ident)
     val s = SparkSession.active
-    layoutOf(partitions).foreach { case (kind, spec) =>
-      VersionedTable.declareLayout(base, kind, spec)
-    }
+    // the `PARTITIONED BY` transform ([[Layout.fromTransform]]) persists
+    // as the table's DEFAULT layout, so the first data write — and any
+    // write after a voided claim — shapes its delta per the declaration
+    // (the Iceberg partition-spec semantic)
+    Layout.fromTransform(partitions)
+      .foreach(VersionedTable.declareLayout(base, _))
     // an empty v1 whose manifest carries the declared schema header —
     // the table reads as zero rows of that shape until the first write
     VersionedTable.commitAppend(s,
@@ -277,9 +238,8 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
     val s = SparkSession.active
     // the declared layout rides the stage dir: the CTAS data commit
     // lands in it pre-publish, so the first write is already shaped
-    layoutOf(partitions).foreach { case (kind, spec) =>
-      VersionedTable.declareLayout(stageDir.toString, kind, spec)
-    }
+    Layout.fromTransform(partitions)
+      .foreach(VersionedTable.declareLayout(stageDir.toString, _))
     VersionedTable.commitAppend(s, stageDir.toString, s.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
     new GraftStagedTable(stageDir, base, schema, replace, ident,
@@ -420,5 +380,24 @@ private[sources] class GraftStagedTable(
     }
   }
 
-  override def abortStagedChanges(): Unit = rm(stageDir)
+  private val tag = s"graft-stage-${java.util.UUID.randomUUID()}"
+
+  override protected def writeJobTag: Option[String] = Some(tag)
+
+  /** Spark fails a job on its first failed task and kills the others
+    * asynchronously; until they end they can still create attempt
+    * files under the stage dir, and a delete racing them leaves debris.
+    * So wait (at most 10 s) for the tasks of THIS table's write stages
+    * to end — never for other jobs' — before deleting it.
+    */
+  override def abortStagedChanges(): Unit = {
+    val tracker = SparkSession.active.sparkContext.statusTracker
+    val stages = tracker.getJobIdsForTag(tag).toSeq
+      .flatMap(tracker.getJobInfo(_)).flatMap(_.stageIds)
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (stages.exists(tracker.getStageInfo(_).exists(_.numActiveTasks > 0))
+        && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    rm(stageDir)
+  }
 }

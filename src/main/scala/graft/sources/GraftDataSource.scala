@@ -16,7 +16,7 @@ import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, And, EqualNullSafe
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.VersionedTable
+import graft.operators.{Layout, VersionedTable}
 import graft.operators.VersionedTable.{LongRange, ManifestEntry, PruneRange, StrRange}
 
 /** DataSource V2 surface of [[VersionedTable]] — the seam that turns
@@ -284,6 +284,11 @@ class GraftTable(val base: String, val snapshotVersion: Option[Long],
     new GraftTable(base, snapshotVersion, tableSchema, acceptAnySchema,
       dvCleanOnly = true)
 
+  /** A Spark job tag the jobs of a write to this table carry, so a
+    * subclass can find them again (see [[GraftStagedTable]]).
+    */
+  protected def writeJobTag: Option[String] = None
+
   private def scanEntries: Seq[ManifestEntry] =
     if (dvCleanOnly) snapshotEntries.filterNot(_.dv.exists(_.count > 0L))
     else snapshotEntries
@@ -476,77 +481,42 @@ class GraftTable(val base: String, val snapshotVersion: Option[Long],
               s"zorderCols takes two or more columns, got $zc")
             require(zc.isEmpty || cb.isEmpty,
               "zorderCols and clusterBy are mutually exclusive")
-            // HASH-BUCKETED layout: `bucketBy=<n>:<col>` — the
-            // co-location knob (storage-partitioned joins + bucket
-            // pruning); the bucket shuffle IS the layout, so the
-            // other layout knobs are mutually exclusive with it
-            val bucketBy = Option(info.options.get("bucketBy")).map { sp =>
-              val i = sp.indexOf(':')
-              require(i > 0 && i < sp.length - 1,
-                s"bucketBy takes <numBuckets>:<column>, got '$sp'")
-              (sp.substring(i + 1).trim, sp.substring(0, i).trim.toInt)
+            val nf = Option(info.options.get("numFiles")).map { v =>
+              Layout.positiveInt(v).getOrElse(
+                throw new IllegalArgumentException(
+                  s"numFiles takes a positive file count, got '$v'"))
             }
-            require(bucketBy.isEmpty ||
-              (zc.isEmpty && cb.isEmpty &&
-                Option(info.options.get("numFiles")).isEmpty),
-              "bucketBy is mutually exclusive with zorderCols/" +
-                "clusterBy/numFiles (the bucket shuffle is the layout)")
-            // WITHIN-LAYOUT SORT ORDER (r15 — Iceberg bucket + sort
-            // order, the standard 100 TB fact layout: join key + time):
+            // PARTITION LAYOUT ([[Layout.fromOptions]]): at most one of
+            // `bucketBy=<n>:<col[,col2]>` (hash buckets — storage-
+            // partitioned joins + bucket pruning), `daysBy`/`hoursBy`/
+            // `monthsBy`/`yearsBy=<tsCol>` (the Iceberg time transforms)
+            // and `truncateBy=<width>:<col>` (id/string prefixes); the
+            // layout's split IS the write shuffle, so it excludes the
+            // other layout knobs
+            val layout = Layout.fromOptions(info.options)
+            // WITHIN-LAYOUT SORT ORDER (r15 — Iceberg bucket + sort order,
+            // the standard 100 TB fact layout: join key + time):
             // `sortWithinBuckets=<c1[,c2]>` declares secondary sort
             // columns each layout-pure write task orders its files by,
-            // so a bucketed (or day-partitioned) table carries tight
-            // zone maps on a SECOND key. Sticky like the bucket
-            // discipline (persisted to the layout sidecar; every
-            // commit path re-applies it); composes with bucketBy and
-            // daysBy, excluded with the competing global sorts.
+            // so a laid-out table carries tight zone maps on a SECOND
+            // key. Sticky like the layout discipline (persisted to the
+            // layout sidecar; every commit path re-applies it); composes
+            // with any layout, excluded with the competing global sorts.
             val swb = colsOpt("sortWithinBuckets")
             require(swb.isEmpty || (zc.isEmpty && cb.isEmpty),
               "sortWithinBuckets composes with bucketBy/daysBy; it is " +
                 "mutually exclusive with zorderCols/clusterBy (those " +
                 "ARE the sort)")
-            // TIME-PARTITIONED layout: `daysBy=<tsCol>` — the Iceberg
-            // days(ts) transform (one-day-pure files, verified; SPJ on
-            // the timestamp key); a layout like bucketBy, so the same
-            // exclusions apply. r15 adds `hoursBy`/`monthsBy` (the rest
-            // of the Iceberg family) — declared as the table's current
-            // layout generation, which declaration-first inheritance
-            // applies to this commit and every one after.
-            val daysBy = Option(info.options.get("daysBy")).map(_.trim)
-            val timeDecl = Seq("hoursBy" -> "hours", "monthsBy" -> "months",
-              "yearsBy" -> "years")
-              .flatMap { case (opt, g) =>
-                Option(info.options.get(opt)).map(_.trim).map(g -> _) }
-            require(daysBy.size + timeDecl.size <= 1,
-              "daysBy/hoursBy/monthsBy/yearsBy are mutually exclusive (one time " +
-                "granularity per table)")
-            require((daysBy.isEmpty && timeDecl.isEmpty) ||
-              (bucketBy.isEmpty && zc.isEmpty && cb.isEmpty &&
-                Option(info.options.get("numFiles")).isEmpty),
-              "daysBy/hoursBy/monthsBy/yearsBy are mutually exclusive with " +
-                "bucketBy/zorderCols/clusterBy/numFiles (the time split " +
-                "is the layout)")
-            // TRUNCATE-partitioned layout (r16 — the last Iceberg
-            // transform): `truncateBy=<width>:<col>` floors long keys /
-            // prefixes string keys, one-prefix-pure files (verified;
-            // SPJ + prefix-range pruning); a layout like bucketBy, so
-            // the same exclusions apply.
-            val truncateBy = Option(info.options.get("truncateBy")).map { sp =>
-              val i = sp.indexOf(':')
-              val w = if (i > 0) sp.substring(0, i).trim else ""
-              require(i > 0 && i < sp.length - 1 && w.nonEmpty &&
-                w.length <= 9 && w.forall(_.isDigit) && w.toInt >= 1,
-                s"truncateBy takes <width>:<column> with a positive " +
-                  s"width, got '$sp'")
-              (sp.substring(i + 1).trim, w.toInt)
+            // hoursBy/monthsBy/yearsBy DECLARE the table's current layout
+            // generation before the commit, which declaration-first
+            // inheritance applies to it and every commit after; the other
+            // layout options shape this commit explicitly and re-sync a
+            // declared generation once it succeeds (below)
+            val predeclared = layout.filter {
+              case Layout.Time(g, _) => g != "days"
+              case _ => false
             }
-            require(truncateBy.isEmpty ||
-              (bucketBy.isEmpty && daysBy.isEmpty && timeDecl.isEmpty &&
-                zc.isEmpty && cb.isEmpty &&
-                Option(info.options.get("numFiles")).isEmpty),
-              "truncateBy is mutually exclusive with bucketBy/daysBy/" +
-                "hoursBy/monthsBy/yearsBy/zorderCols/clusterBy/numFiles " +
-                "(the prefix split is the layout)")
+            val explicit = layout.filterNot(predeclared.contains)
             // sidecar declarations roll back if anything below fails —
             // INCLUDING the validations between here and the commit
             // (r15 review + r15 advice: a refused write must not flip
@@ -554,10 +524,9 @@ class GraftTable(val base: String, val snapshotVersion: Option[Long],
             // declare call sits inside the try that restores the
             // snapshot)
             val layoutPrior: Option[Seq[(String, String)]] =
-              if (timeDecl.nonEmpty || swb.nonEmpty)
+              if (predeclared.nonEmpty || swb.nonEmpty)
                 Some(VersionedTable.layoutSnapshot(base))
               else None
-            val nf = Option(info.options.get("numFiles")).map(_.toInt)
             import org.apache.spark.sql.functions.col
             val clustered =
               if (zc.length >= 2) {
@@ -574,16 +543,16 @@ class GraftTable(val base: String, val snapshotVersion: Option[Long],
                   .sortWithinPartitions(cols: _*)
               } else nf.map(aligned.repartition).getOrElse(aligned)
             // an explicit alternative layout (clusterBy/zorderCols/
-            // numFiles) overrides the sticky bucket discipline — the
+            // numFiles) overrides the sticky layout discipline — the
             // writer asked for THAT layout, and re-bucketing would
             // destroy it; the co-location claim then voids safely
             val inherit = zc.isEmpty && cb.isEmpty && nf.isEmpty
+            val ctx = data.sparkSession.sparkContext
+            writeJobTag.foreach(ctx.addJobTag)
             try {
-            timeDecl.foreach { case (g, c) =>
-              VersionedTable.declareLayout(base, g, c) }
+            predeclared.foreach(VersionedTable.declareLayout(base, _))
             if (swb.nonEmpty) {
-              require(bucketBy.isDefined || daysBy.isDefined ||
-                timeDecl.nonEmpty || truncateBy.isDefined ||
+              require(layout.isDefined ||
                 VersionedTable.declaredLayout(base).isDefined ||
                 VersionedTable.latestVersion(base).isDefined,
                 "sortWithinBuckets needs a bucket/days/truncate layout " +
@@ -611,39 +580,31 @@ class GraftTable(val base: String, val snapshotVersion: Option[Long],
                 (stats ++ sc).distinct,
                 bloomCols = (blooms ++ bc).distinct,
                 pruneProbes = probes.toSeq,
-                // r13 advice: an explicit bucketBy/ndvCols alongside
+                // r13 advice: an explicit layout/ndvCols alongside
                 // overwrite(cond) was silently dropped — pass through
                 // like the append/replace branches
-                ndvCols = ndvs, bucketBy = bucketBy,
-                inheritBucket = inherit, truncateBy = truncateBy)
+                ndvCols = ndvs, layout = explicit, inheritBucket = inherit)
             } else if (replace || overwrite)
               VersionedTable.commitReplace(data.sparkSession, base, clustered,
                 stats, bloomCols = blooms, ndvCols = ndvs,
-                bucketBy = bucketBy, inheritBucket = inherit,
-                daysBy = daysBy, truncateBy = truncateBy)
+                layout = explicit, inheritBucket = inherit)
             else
               VersionedTable.commitAppend(data.sparkSession, base, clustered,
                 stats, bloomCols = blooms, ndvCols = ndvs,
-                bucketBy = bucketBy, inheritBucket = inherit,
-                daysBy = daysBy, truncateBy = truncateBy)
+                layout = explicit, inheritBucket = inherit)
             } catch {
               case t: Throwable =>
                 layoutPrior.foreach(VersionedTable.restoreLayout(base, _))
                 throw t
-            }
-            // an explicit bucketBy/daysBy on a DECLARED table re-syncs
-            // the declaration AFTER the commit succeeds (r15 advice:
+            } finally writeJobTag.foreach(ctx.removeJobTag)
+            // an explicit layout on a DECLARED table re-syncs the
+            // declaration AFTER the commit succeeds (r15 advice:
             // declaration-first inheritance would otherwise flip the
             // very next plain append back to the stale declared
             // generation, silently re-mixing the snapshot a user just
             // relaid out) — mirroring how rebucket syncs post-success
-            if (VersionedTable.declaredLayout(base).isDefined) {
-              bucketBy.foreach { case (c, n) =>
-                VersionedTable.declareLayout(base, "bucket", s"$n:$c") }
-              daysBy.foreach(c => VersionedTable.declareLayout(base, "days", c))
-              truncateBy.foreach { case (c, w) =>
-                VersionedTable.declareLayout(base, "truncate", s"$w:$c") }
-            }
+            if (VersionedTable.declaredLayout(base).isDefined)
+              explicit.foreach(VersionedTable.declareLayout(base, _))
             ()
           }
       }

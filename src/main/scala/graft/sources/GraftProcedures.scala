@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.operators.VersionedTable
+import graft.operators.{Layout, VersionedTable}
 
 /** The table format's MAINTENANCE surface as SQL stored procedures —
   * the Iceberg `CALL catalog.system.<proc>(...)` idiom on Spark 4's
@@ -77,6 +77,12 @@ private[sources] object GraftProcedures {
   private val tableParam =
     ("table", StringType: DataType,
       "table name inside this catalog, e.g. 'ns.t'")
+
+  // the layout procedures' (kind, spec) pair, documented from the one
+  // list of kinds
+  private val kindParam =
+    ("kind", StringType: DataType, Layout.Kinds.mkString("|"))
+  private val specParam = ("spec", StringType: DataType, Layout.SpecHelp)
 
   /** Comma-separated column list → Seq (empty string = none). */
   private def cols(s: String): Seq[String] =
@@ -249,10 +255,7 @@ private[sources] object GraftProcedures {
           "delta from now on takes it, old files keep theirs, the " +
           "co-location claim stays voided (joins shuffle, correctly) " +
           "until rebucket_stale retires the stale generation",
-        Seq(tableParam,
-          ("kind", StringType, "'bucket' or 'days'"),
-          ("spec", StringType,
-            "bucket: '<numBuckets>:<col>[,col2]'; days: '<tsCol>'")),
+        Seq(tableParam, kindParam, specParam),
         out("declared" -> LongType),
         in => {
           VersionedTable.declareLayout(base(in),
@@ -261,16 +264,12 @@ private[sources] object GraftProcedures {
         }))
       case "relayout_stale" => Some(new Proc("relayout_stale",
         "LAYOUT EVOLUTION across the whole family (r15): declare " +
-          "(kind, spec) the current generation -- kind 'bucket' with " +
-          "spec '<n>:<col[,col2]>', or a time granularity " +
-          "days|hours|months|years with spec '<tsCol>' -- and rewrite " +
-          "ONLY the files whose verified layout token disagrees; a " +
+          "(kind, spec) the current generation -- any layout kind " +
+          s"(${Layout.Kinds.mkString("|")}) -- and rewrite ONLY the " +
+          "files whose verified layout token disagrees; a " +
           "days->months archive transition costs the stale files, " +
           "never the table",
-        Seq(tableParam,
-          ("kind", StringType, "'bucket' or days|hours|months|years"),
-          ("spec", StringType,
-            "bucket: '<numBuckets>:<col>[,col2]'; time: '<tsCol>'")),
+        Seq(tableParam, kindParam, specParam),
         out("version" -> LongType),
         in => Seq(VersionedTable.relayoutStale(SparkSession.active,
           base(in), in.getUTF8String(1).toString,
@@ -284,8 +283,9 @@ private[sources] object GraftProcedures {
           ("column", StringType, "int/long/string bucket key column(s)"),
           ("num_buckets", IntegerType, "bucket count (murmur3 mod n)")),
         out("version" -> LongType),
-        in => Seq(VersionedTable.rebucketStale(SparkSession.active,
-          base(in), in.getUTF8String(1).toString, in.getInt(2)))))
+        in => Seq(VersionedTable.relayoutStale(SparkSession.active,
+          base(in), Layout.Bucket(in.getInt(2),
+            Layout.splitCols(in.getUTF8String(1).toString))))))
       case "create_branch" => Some(new Proc("create_branch",
         "WRITE-AUDIT-PUBLISH, step 1: fork a zero-copy WRITABLE BRANCH " +
           "at a committed version (0 = latest) -- stage commits on it " +

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NamedReference}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReaderFactory, Scan, Statistics, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
@@ -11,8 +11,8 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.VersionedTable
-import graft.operators.VersionedTable.{BucketStat, KeyProbe, ManifestEntry}
+import graft.operators.{Layout, VersionedTable}
+import graft.operators.VersionedTable.{KeyProbe, ManifestEntry}
 
 /** DYNAMIC FILE PRUNING: the graft scan as a runtime-filterable DSv2
   * scan. Plan-time zone-map skipping ([[GraftFileIndex]]) covers
@@ -63,139 +63,52 @@ class GraftRuntimeScan(initial: ParquetScan, val base: String,
   // ----- Scan surface: the delegate's machinery verbatim
 
   override def readSchema(): StructType = current.readSchema()
-  override def toBatch: Batch = {
-    // key-grouped snapshot (bucketed or day-partitioned): plan one
-    // key-grouped partition set — each input partition carries its
-    // bucket id / epoch day ([[HasPartitionKey]]), so Spark can group
-    // them under the reported KeyGroupedPartitioning and elide the
-    // join shuffle. Reads `current` at call time: BatchScanExec
-    // re-plans partitions through a fresh toBatch after runtime
-    // filtering, and the grouping must see the pruned index.
-    if (bucketLayout.isDefined)
-      new GraftKeyedBatch(() => current, bucketKeyOf)
-    else if (timeLayout.isDefined)
-      new GraftKeyedBatch(() => current, timeKeyOf)
-    else if (truncLayout.isDefined)
-      new GraftKeyedBatch(() => current, truncKeyOf)
+  override def toBatch: Batch =
+    // key-grouped snapshot (bucketed, time- or truncate-partitioned):
+    // plan one key-grouped partition set — each input partition carries
+    // its partition key ([[HasPartitionKey]]), so Spark can group them
+    // under the reported KeyGroupedPartitioning and elide the join
+    // shuffle. Reads `current` at call time: BatchScanExec re-plans
+    // partitions through a fresh toBatch after runtime filtering, and
+    // the grouping must see the pruned index.
+    if (layout.isDefined) new GraftKeyedBatch(() => current, partitionKeys)
     else current.toBatch
-  }
-
-  /** Per-file partition key (one id per key column, canonical col
-    * order — the same order [[outputPartitioning]] lists transforms).
-    */
-  private def bucketKeyOf: Map[String, Seq[Any]] =
-    VersionedTable.bucketSpecOf(entries).map { case (physCols, _) =>
-      val cols = VersionedTable.splitBucketCols(physCols)
-      entries.map { e =>
-        // scan-key suffix: planned file paths never carry a clone's
-        // `../` prefix (VersionedTable.relKey's contract)
-        VersionedTable.relKey(e.path) -> cols.map(pc =>
-          e.stats(s"$pc#bucket").asInstanceOf[BucketStat].id: Any)
-      }.toMap
-    }.getOrElse(Map.empty)
-
-  private def timeKeyOf: Map[String, Seq[Any]] =
-    entries.flatMap(e => e.stats.collectFirst {
-      case (k, VersionedTable.DaysStat(d))
-          if VersionedTable.TimeGrans.exists(g => k.endsWith(s"#$g")) =>
-        VersionedTable.relKey(e.path) -> Seq(d: Any)
-    }).toMap
-
-  /** Truncate-layout partition keys, INTERNAL form (java Long /
-    * UTF8String — what the HasPartitionKey row must carry).
-    */
-  private def truncKeyOf: Map[String, Seq[Any]] =
-    entries.flatMap(e => e.stats.collectFirst {
-      case (k, VersionedTable.TruncStat(_, v)) if k.endsWith("#trunc") =>
-        VersionedTable.relKey(e.path) -> Seq(java.lang.Long.valueOf(v): Any)
-      case (k, VersionedTable.TruncStrStat(_, v)) if k.endsWith("#trunc") =>
-        VersionedTable.relKey(e.path) -> Seq(
-          org.apache.spark.unsafe.types.UTF8String.fromString(v): Any)
-    }).toMap
 
   // ----- storage-partitioned joins ([[SupportsReportPartitioning]])
 
-  /** The snapshot's hash-bucket layout as THIS scan may claim it:
-    * every live entry carries the same `(col, n)` bucket token
-    * ([[VersionedTable.bucketSpecOf]] — one unbucketed file voids the
-    * claim), the token's column resolves to a logical name, and that
-    * name survived column pruning into the read schema (the transform
-    * reference resolves against the scan relation's output — and a
-    * join that could use SPJ projects its key anyway).
+  /** The snapshot's layout as its manifest tokens prove it
+    * ([[Layout.of]] — one unlaid file or a second generation voids it).
     */
-  private lazy val bucketLayout: Option[(Seq[String], Int)] =
-    VersionedTable.bucketSpecOf(entries).flatMap { case (physCols, n) =>
-      val toLogical = graft.operators.ColumnMapping.toLogical(schema)
-      val isMapped = graft.operators.ColumnMapping.isMapped(schema)
-      val cols = VersionedTable.splitBucketCols(physCols).map { pc =>
-        toLogical.get(pc)
-          .orElse(if (isMapped) None else Some(pc))
-          .filter(c => current.readSchema().fieldNames.contains(c))
-      }
-      if (cols.forall(_.isDefined)) Some((cols.flatten, n)) else None
-    }
+  private lazy val physLayout: Option[Layout] = Layout.of(entries)
 
-  /** The snapshot's time-partition layout (days/hours/months — r15),
-    * claimable by THIS scan — the [[bucketLayout]] discipline for the
-    * Iceberg time-transform family.
+  /** Per-file partition key, by scan-key suffix: planned file paths
+    * never carry a clone's `../` prefix (VersionedTable.relKey's
+    * contract).
     */
-  private lazy val timeLayout: Option[(String, String)] =
-    VersionedTable.timeSpecOf(entries).flatMap { case (g, pc) =>
-      val toLogical = graft.operators.ColumnMapping.toLogical(schema)
-      toLogical.get(pc)
-        .orElse(if (graft.operators.ColumnMapping.isMapped(schema)) None
-                else Some(pc))
-        .filter(c => current.readSchema().fieldNames.contains(c))
-        .map(g -> _)
-    }
+  private lazy val partitionKeys: Map[String, Seq[Any]] =
+    physLayout.map(l => entries.map(e =>
+      VersionedTable.relKey(e.path) -> l.keyOf(e)).toMap)
+      .getOrElse(Map.empty)
 
-  /** The snapshot's truncate-partition layout (r16), claimable by THIS
-    * scan — the [[timeLayout]] discipline for `truncate(w, col)`.
+  /** The layout as THIS scan may claim it: every token column resolves
+    * to a logical name that survived column pruning into the read
+    * schema (the transform reference resolves against the scan
+    * relation's output — and a join that could use SPJ projects its
+    * key anyway).
     */
-  private lazy val truncLayout: Option[(String, Int)] =
-    VersionedTable.truncSpecOf(entries).flatMap { case (pc, w) =>
-      val toLogical = graft.operators.ColumnMapping.toLogical(schema)
-      toLogical.get(pc)
-        .orElse(if (graft.operators.ColumnMapping.isMapped(schema)) None
-                else Some(pc))
-        .filter(c => current.readSchema().fieldNames.contains(c))
-        .map(_ -> w)
-    }
+  private lazy val layout: Option[Layout] = physLayout.flatMap { l =>
+    val toLogical = graft.operators.ColumnMapping.toLogical(schema)
+    val isMapped = graft.operators.ColumnMapping.isMapped(schema)
+    l.mapCols(pc => toLogical.get(pc)
+      .orElse(if (isMapped) None else Some(pc))
+      .filter(c => current.readSchema().fieldNames.contains(c)))
+  }
 
-  override def outputPartitioning(): Partitioning = bucketLayout match {
-    case Some((cols, n)) =>
-      val groups = bucketKeyOf.values.toSeq.distinct.size
-      // GRID layout: ONE single-leaf bucket(n, cᵢ) transform PER KEY —
-      // the only shape Spark's KeyGroupedPartitioning.satisfies0
-      // matches (each partition expression must have exactly one
-      // leaf); a two-key equi-join covers every transform's reference
-      // and EnsureRequirements elides the shuffle on both sides
-      new KeyGroupedPartitioning(
-        cols.map(c => Expressions.bucket(n, c)).toArray, groups)
-    case None => timeLayout match {
-      case Some((g, c)) =>
-        val t = g match {
-          case "days" => Expressions.days(c)
-          case "hours" => Expressions.hours(c)
-          case "months" => Expressions.months(c)
-          case "years" => Expressions.years(c)
-        }
-        new KeyGroupedPartitioning(Array(t),
-          timeKeyOf.values.toSeq.distinct.size)
-      case None => truncLayout match {
-        case Some((c, w)) =>
-          // the WIDTH-PINNED single-arg transform (truncate_<w>(col)):
-          // KeyGroupedPartitioning demands one-leaf expressions whose
-          // every leaf matches a join key, so a literal width argument
-          // can never satisfy a join distribution — the width rides in
-          // the function name instead (GraftTruncateWidthFunction)
-          new KeyGroupedPartitioning(
-            Array(Expressions.apply(s"truncate_$w",
-              Expressions.column(c))),
-            truncKeyOf.values.toSeq.distinct.size)
-        case None => new UnknownPartitioning(0)
-      }
-    }
+  override def outputPartitioning(): Partitioning = layout match {
+    case Some(l) =>
+      new KeyGroupedPartitioning(l.toTransforms.map(t => t: Expression),
+        partitionKeys.values.toSeq.distinct.size)
+    case None => new UnknownPartitioning(0)
   }
   override def description(): String = s"Graft ${current.description()}"
   override def supportedCustomMetrics(): Array[CustomMetric] =

@@ -22,7 +22,8 @@ class DaysLayoutGuardSpec extends SparkSuite {
       (2L, None)
     ).toDF("k", "ts").select(col("k"), col("ts").cast("timestamp").as("ts"))
     val e = intercept[Exception] {
-      VersionedTable.commitAppend(spark, base, df, daysBy = Some("ts"))
+      VersionedTable.commitAppend(spark, base, df,
+        layout = Some(Layout.Time("days", "ts")))
     }
     assert(e.getMessage.contains("NULL"), s"got: ${e.getMessage}")
     // nothing published

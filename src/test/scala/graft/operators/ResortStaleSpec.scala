@@ -59,8 +59,9 @@ class ResortStaleSpec extends SparkSuite {
       assert(spans3.values.flatten.max < staleWorst,
         s"resort should tighten the worst span: $spans3")
       // layout survived: still bucketed 4-ways on k (sticky discipline)
-      assert(VersionedTable.bucketSpecOf(
-        VersionedTable.entries(base, v3)) === Some(("k", 4)))
+      assert(Layout.of(
+        VersionedTable.entries(base, v3)) ===
+        Some(Layout.Bucket(4, Seq("k"))))
       // rows are exactly preserved
       assert(VersionedTable.readVersion(spark, base, v3).count() === 6000L)
       // a second resort at the same threshold is a no-op IF everything

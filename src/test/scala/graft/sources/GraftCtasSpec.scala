@@ -87,4 +87,55 @@ class GraftCtasSpec extends SparkSuite {
       assert(leftovers.isEmpty, s"staging debris: $leftovers")
     }
   }
+
+  test("aborting a failed CTAS waits for its own write only, leaving no " +
+      "debris") {
+    val n = ns
+    val sc = spark.sparkContext
+    val tracker = sc.statusTracker
+    // an unrelated job holding one task busy until it is cancelled
+    val other = s"unrelated-$n"
+    val job = new Thread(() => {
+      sc.addJobTag(other)
+      try sc.parallelize(Seq(1), 1).foreach { _ =>
+        val ctx = org.apache.spark.TaskContext.get()
+        val end = System.nanoTime() + 120L * 1000 * 1000 * 1000
+        while (!ctx.isInterrupted() && System.nanoTime() < end)
+          Thread.sleep(20)
+      } catch { case _: Exception => () }
+      finally sc.removeJobTag(other)
+    })
+    job.start()
+    def otherRunning: Boolean = tracker.getJobIdsForTag(other).toSeq
+      .flatMap(tracker.getJobInfo(_)).flatMap(_.stageIds)
+      .exists(tracker.getStageInfo(_).exists(_.numActiveTasks > 0))
+    try {
+      val wait = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!otherRunning && System.nanoTime() < wait) Thread.sleep(20)
+      assert(otherRunning, "the unrelated job never started its task")
+      val t0 = System.nanoTime()
+      intercept[Exception] {
+        spark.sql(s"CREATE TABLE graft.$n.t AS " +
+          "SELECT assert_true(id < 5, 'boom') AS a, id AS k FROM range(10)")
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(otherRunning, "the abort must not wait for the unrelated job")
+      assert(secs < 10.0, s"the failed CTAS took $secs s")
+      assert(!spark.catalog.tableExists(s"graft.$n.t"))
+      val nsDir = java.nio.file.Paths.get(
+        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse/$n")
+      if (java.nio.file.Files.isDirectory(nsDir)) {
+        val stream = java.nio.file.Files.list(nsDir)
+        val leftovers =
+          try {
+            import scala.jdk.CollectionConverters._
+            stream.iterator().asScala.map(_.getFileName.toString).toSeq
+          } finally stream.close()
+        assert(leftovers.isEmpty, s"staging debris: $leftovers")
+      }
+    } finally {
+      sc.cancelJobsWithTag(other)
+      job.join(60000)
+    }
+  }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSuite
-import graft.operators.VersionedTable
+import graft.operators.{Layout, VersionedTable}
 import org.apache.spark.sql.functions._
 
 /** LAYOUT EVOLUTION (r15 — Iceberg partition evolution as the model):
@@ -51,12 +51,12 @@ class GraftLayoutEvolutionSpec extends SparkSuite {
       .mode("append").save(bBase)
     def entries() = VersionedTable.entries(aBase,
       VersionedTable.latestVersion(aBase).get)
-    def spec() = VersionedTable.bucketSpecOf(entries())
+    def spec() = Layout.of(entries())
     def genOf(e: VersionedTable.ManifestEntry): Option[Int] =
       e.stats.collectFirst {
         case (k, VersionedTable.BucketStat(n, _)) if k.endsWith("#bucket") => n
       }
-    assert(spec() === Some(("k", 8)))
+    assert(spec() === Some(Layout.Bucket(8, Seq("k"))))
     val oldGen = entries().map(_.path).toSet
     // step 1: declare the new generation — O(1), no data movement
     spark.sql(s"CALL graft.system.set_layout('$ns.fact', 'bucket', '16:k')")
@@ -94,7 +94,7 @@ class GraftLayoutEvolutionSpec extends SparkSuite {
       "current-generation files must survive the scoped rewrite")
     assert((post -- preNew).intersect(oldGen).isEmpty,
       "every stale-generation file must be retired")
-    assert(spec() === Some(("k", 16)))
+    assert(spec() === Some(Layout.Bucket(16, Seq("k"))))
     // the zero-exchange claim returns, rows unchanged
     withSpj {
       val j = joined
@@ -107,7 +107,7 @@ class GraftLayoutEvolutionSpec extends SparkSuite {
     // the new generation is sticky for later appends
     (441L to 450L).map(k => (k, k * 10L)).toDF("k", "v")
       .write.format("graft").mode("append").save(aBase)
-    assert(spec() === Some(("k", 16)))
+    assert(spec() === Some(Layout.Bucket(16, Seq("k"))))
     // nothing stale → a second call is a no-op commit-wise
     val v0 = VersionedTable.latestVersion(aBase)
     spark.sql(s"CALL graft.system.rebucket_stale('$ns.fact', 'k', 16)")
@@ -129,9 +129,9 @@ class GraftLayoutEvolutionSpec extends SparkSuite {
       .option("daysBy", "ts").mode("append").save(aBase)
     rows(0 until 90).write.format("graft")
       .option("monthsBy", "ts").mode("append").save(bBase)
-    def spec() = VersionedTable.timeSpecOf(VersionedTable.entries(aBase,
+    def spec() = Layout.of(VersionedTable.entries(aBase,
       VersionedTable.latestVersion(aBase).get))
-    assert(spec() === Some(("days", "ts")))
+    assert(spec() === Some(Layout.Time("days", "ts")))
     val oldGen = VersionedTable.entries(aBase,
       VersionedTable.latestVersion(aBase).get).map(_.path).toSet
     // declare months; the next append takes the NEW granularity
@@ -162,7 +162,7 @@ class GraftLayoutEvolutionSpec extends SparkSuite {
       "current-generation month files must survive the scoped rewrite")
     assert((post -- preNew).intersect(oldGen).isEmpty,
       "every stale day file must be retired")
-    assert(spec() === Some(("months", "ts")))
+    assert(spec() === Some(Layout.Time("months", "ts")))
     withSpj {
       val j = joined
       assert(!j.queryExecution.executedPlan.toString
@@ -185,7 +185,7 @@ class GraftLayoutEvolutionSpec extends SparkSuite {
       .write.format("graft").option("bucketBy", "4:k")
       .mode("append").save(base)
     spark.sql(s"CALL graft.system.set_layout('$ns.heal', 'bucket', '4:k')")
-    def spec() = VersionedTable.bucketSpecOf(VersionedTable.entries(base,
+    def spec() = Layout.of(VersionedTable.entries(base,
       VersionedTable.latestVersion(base).get))
     // explicit alternative layout voids the claim for that file
     Seq((999L, 9L)).toDF("k", "v").write.format("graft")
@@ -205,6 +205,6 @@ class GraftLayoutEvolutionSpec extends SparkSuite {
     }), "the declared layout must shape deltas even after a void")
     // one scoped rewrite heals the whole claim
     spark.sql(s"CALL graft.system.rebucket_stale('$ns.heal', 'k', 4)")
-    assert(spec() === Some(("k", 4)))
+    assert(spec() === Some(Layout.Bucket(4, Seq("k"))))
   }
 }

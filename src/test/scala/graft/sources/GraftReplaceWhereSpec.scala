@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.{SparkSuite, TempDirs}
-import graft.operators.VersionedTable
+import graft.operators.{Layout, VersionedTable}
 import org.apache.spark.sql.functions._
 
 /** REPLACE WHERE — predicate-scoped atomic overwrite: delete the slice
@@ -98,10 +98,10 @@ class GraftReplaceWhereSpec extends SparkSuite {
     VersionedTable.commitReplaceWhere(spark, base,
       kv((0L until 20L).map(k => (k, -k))), col("k") >= 0L,
       pruneRanges = Seq(("k", 0L, 19L)), statsCols = Seq("k"),
-      bucketBy = Some(("k", 4)))
+      layout = Some(Layout.Bucket(4, Seq("k"))))
     val es = VersionedTable.entries(base,
       VersionedTable.latestVersion(base).get)
-    assert(VersionedTable.bucketSpecOf(es) === Some(("k", 4)),
+    assert(Layout.of(es) === Some(Layout.Bucket(4, Seq("k"))),
       "replace-where must apply the explicit bucket layout")
     // DSv2 surface: .option("bucketBy").overwrite(cond) must not be
     // silently ignored
@@ -115,7 +115,7 @@ class GraftReplaceWhereSpec extends SparkSuite {
       .writeTo(t).option("bucketBy", "4:k").overwrite(col("k") >= 0L)
     val es2 = VersionedTable.entries(tBase,
       VersionedTable.latestVersion(tBase).get)
-    assert(VersionedTable.bucketSpecOf(es2) === Some(("k", 4)))
+    assert(Layout.of(es2) === Some(Layout.Bucket(4, Seq("k"))))
     assert(spark.table(t).count() === 20L)
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.{SparkSuite, TempDirs}
-import graft.operators.VersionedTable
+import graft.operators.{Layout, VersionedTable}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -68,7 +68,7 @@ class GraftSinkSpec extends SparkSuite {
     q.start().awaitTermination()
     val es = VersionedTable.entries(base,
       VersionedTable.latestVersion(base).get)
-    assert(VersionedTable.bucketSpecOf(es) === Some(("k", 4)),
+    assert(Layout.of(es) === Some(Layout.Bucket(4, Seq("k"))),
       s"streaming appends must inherit the bucket layout")
     assert(spark.read.format("graft").load(base).count() === 104L)
   }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSuite
-import graft.operators.VersionedTable
+import graft.operators.{Layout, VersionedTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
@@ -83,7 +83,7 @@ class GraftSpjSpec extends SparkSuite {
     val es = VersionedTable.entries(base,
       VersionedTable.latestVersion(base).get)
     assert(es.size === 8, s"expected 8 one-bucket files, got ${es.size}")
-    assert(VersionedTable.bucketSpecOf(es) === Some(("k", 8)))
+    assert(Layout.of(es) === Some(Layout.Bucket(8, Seq("k"))))
     // DSv2 read with an equality literal: the planned scan keeps only
     // the one file whose bucket id matches — no zone maps, no blooms,
     // pure O(1)-per-file hash arithmetic
@@ -107,18 +107,18 @@ class GraftSpjSpec extends SparkSuite {
     import s.implicits._
     val base = mkTable("void", (1L to 100L).map(k => (k, k)), 4)
     mkTable("void2", (1L to 100L).map(k => (k, k * 2L)), 4)
-    def spec() = VersionedTable.bucketSpecOf(VersionedTable.entries(base,
+    def spec() = Layout.of(VersionedTable.entries(base,
       VersionedTable.latestVersion(base).get))
     // a PLAIN append inherits the table's bucket layout (the sticky
     // discipline — streaming ingest must not void SPJ), and its fresh
     // file carries a verified token
     Seq((1000L, 1L)).toDF("k", "v").write.format("graft")
       .mode("append").save(base)
-    assert(spec() === Some(("k", 4)))
+    assert(spec() === Some(Layout.Bucket(4, Seq("k"))))
     // a DML rewrite re-buckets the files it rewrites — claim intact
     VersionedTable.commitDelete(spark, base, col("k") === 50L,
       pruneRanges = Seq(("k", 50L, 50L)))
-    assert(spec() === Some(("k", 4)))
+    assert(spec() === Some(Layout.Bucket(4, Seq("k"))))
     withSpj {
       val j = spark.table(s"graft.$ns.void").as("a")
         .join(spark.table(s"graft.$ns.void2").as("b"),
@@ -160,15 +160,15 @@ class GraftSpjSpec extends SparkSuite {
     val v = spark.sql(
       s"CALL graft.system.rebucket('$ns.rb', 'k', 8)").head().getLong(0)
     assert(v === VersionedTable.latestVersion(base).get)
-    def spec() = VersionedTable.bucketSpecOf(VersionedTable.entries(base,
+    def spec() = Layout.of(VersionedTable.entries(base,
       VersionedTable.latestVersion(base).get))
-    assert(spec() === Some(("k", 8)))
+    assert(spec() === Some(Layout.Bucket(8, Seq("k"))))
     assert(spark.sql(s"SELECT bucket_spec FROM graft_detail('$base')")
       .head().getString(0) === "k:8")
     // the sticky discipline then holds the NEW layout through appends
     Seq((1000L, 1L)).toDF("k", "v").write.format("graft")
       .mode("append").save(base)
-    assert(spec() === Some(("k", 8)))
+    assert(spec() === Some(Layout.Bucket(8, Seq("k"))))
     assert(VersionedTable.readLatest(spark, base).count() === 202L)
   }
 
@@ -192,7 +192,7 @@ class GraftSpjSpec extends SparkSuite {
       VersionedTable.latestVersion(base).get)
     assert(es.size > 4, s"expected >4 files (split buckets), got ${es.size}")
     // every file single-bucket (commit-verified), spec still provable
-    assert(VersionedTable.bucketSpecOf(es) === Some(("k", 4)))
+    assert(Layout.of(es) === Some(Layout.Bucket(4, Seq("k"))))
     withSpj {
       val j = spark.table(s"graft.$ns.mrf").as("a")
         .join(spark.table(s"graft.$ns.mrf2").as("b"),
@@ -283,7 +283,7 @@ class GraftSpjSpec extends SparkSuite {
     val es = VersionedTable.entries(base,
       VersionedTable.latestVersion(base).get)
     assert(es.forall(_.dv.isEmpty))
-    assert(VersionedTable.bucketSpecOf(es) === Some(("k", 4)))
+    assert(Layout.of(es) === Some(Layout.Bucket(4, Seq("k"))))
     withSpj {
       val j = spark.table(s"graft.$ns.dvlc").as("a")
         .join(spark.table(s"graft.$ns.dvlc2").as("b"),
@@ -316,7 +316,7 @@ class GraftSpjSpec extends SparkSuite {
     } finally { pool.shutdownNow(); () }
     val es = VersionedTable.entries(base,
       VersionedTable.latestVersion(base).get)
-    assert(VersionedTable.bucketSpecOf(es) === Some(("k", 4)),
+    assert(Layout.of(es) === Some(Layout.Bucket(4, Seq("k"))),
       "every racing append must inherit the layout (sticky discipline)")
     assert(spark.read.format("graft").load(base).count() === 120L)
     withSpj {
@@ -365,7 +365,7 @@ class GraftSpjSpec extends SparkSuite {
     // every file holds exactly one TUPLE bucket (the verifier's claim)
     val es = VersionedTable.entries(aBase,
       VersionedTable.latestVersion(aBase).get)
-    assert(VersionedTable.bucketSpecOf(es) === Some(("k1,k2", 8)))
+    assert(Layout.of(es) === Some(Layout.Bucket(8, Seq("k1", "k2"))))
     withSpj {
       val j = spark.table(s"graft.$ns.mk_a").as("a")
         .join(spark.table(s"graft.$ns.mk_b").as("b"),
@@ -561,16 +561,18 @@ class GraftSpjSpec extends SparkSuite {
       "PARTITIONED BY (bucket(4, k))")
     spark.sql(s"INSERT INTO graft.$ns.ddl_a SELECT id, id * 2 FROM range(0, 400)")
     val aBase = s"$warehouse/$ns/ddl_a"
-    assert(VersionedTable.bucketSpecOf(VersionedTable.entries(aBase,
-      VersionedTable.latestVersion(aBase).get)) === Some(("k", 4)))
+    assert(Layout.of(VersionedTable.entries(aBase,
+      VersionedTable.latestVersion(aBase).get)) ===
+      Some(Layout.Bucket(4, Seq("k"))))
     // two-key grid via DDL
     spark.sql(s"CREATE TABLE graft.$ns.ddl_g (k1 BIGINT, k2 BIGINT, v BIGINT) " +
       "PARTITIONED BY (bucket(4, k1, k2))")
     spark.sql(s"INSERT INTO graft.$ns.ddl_g " +
       "SELECT id % 20, id / 20, id FROM range(0, 400)")
     val gBase = s"$warehouse/$ns/ddl_g"
-    assert(VersionedTable.bucketSpecOf(VersionedTable.entries(gBase,
-      VersionedTable.latestVersion(gBase).get)) === Some(("k1,k2", 4)))
+    assert(Layout.of(VersionedTable.entries(gBase,
+      VersionedTable.latestVersion(gBase).get)) ===
+      Some(Layout.Bucket(4, Seq("k1", "k2"))))
     // days via DDL
     spark.sql(s"CREATE TABLE graft.$ns.ddl_d (ts TIMESTAMP, v BIGINT) " +
       "PARTITIONED BY (days(ts))")
@@ -578,8 +580,9 @@ class GraftSpjSpec extends SparkSuite {
       "SELECT timestamp_micros(CAST(id * 43200000000 AS BIGINT)), id " +
       "FROM range(0, 20)")
     val dBase = s"$warehouse/$ns/ddl_d"
-    assert(VersionedTable.daysSpecOf(VersionedTable.entries(dBase,
-      VersionedTable.latestVersion(dBase).get)) === Some("ts"))
+    assert(Layout.of(VersionedTable.entries(dBase,
+      VersionedTable.latestVersion(dBase).get)) ===
+      Some(Layout.Time("days", "ts")))
     assert(spark.table(s"graft.$ns.ddl_d").count() === 20L)
     // identity partitioning names the cure
     val e = intercept[Exception] {
@@ -617,7 +620,7 @@ class GraftSpjSpec extends SparkSuite {
       VersionedTable.latestVersion(factBase).get)
     // claim 1: the bucket layout is intact (the sort must not break
     // single-bucket purity) — zero-exchange join on the key
-    assert(VersionedTable.bucketSpecOf(entries()) === Some(("k", 4)))
+    assert(Layout.of(entries()) === Some(Layout.Bucket(4, Seq("k"))))
     assert(entries().size > 4, "expected several files per bucket")
     withSpj {
       val j = spark.table(s"graft.$ns.so_fact").as("a")
@@ -660,14 +663,14 @@ class GraftSpjSpec extends SparkSuite {
     (4000 until 4400).map(i => (i.toLong % 16L, i.toLong, i.toLong * 3L))
       .toDF("k", "ts", "v").write.format("graft")
       .mode("append").save(factBase)
-    assert(VersionedTable.bucketSpecOf(entries()) === Some(("k", 4)))
+    assert(Layout.of(entries()) === Some(Layout.Bucket(4, Seq("k"))))
     val fresh = entries().filter(_.stats.get("ts").isEmpty)
     assert(fresh.isEmpty, "appended files must carry the ts zone map " +
       "(sticky sort discipline re-collects the sort column's stats)")
     // DML rewrite keeps both claims
     VersionedTable.commitDelete(spark, factBase, col("ts") === 123L,
       pruneRanges = Seq(("ts", 123L, 123L)))
-    assert(VersionedTable.bucketSpecOf(entries()) === Some(("k", 4)))
+    assert(Layout.of(entries()) === Some(Layout.Bucket(4, Seq("k"))))
     entries().foreach { e =>
       val ts = spark.read.parquet(s"$factBase/${e.path}")
         .select(col("ts")).as[Long].collect().toSeq
@@ -702,13 +705,13 @@ class GraftSpjSpec extends SparkSuite {
       .option("hoursBy", "ts").mode("append").save(haBase)
     rows(3 until 9, 4, 3600000L).write.format("graft")
       .option("hoursBy", "ts").mode("append").save(hbBase)
-    def spec(base: String) = VersionedTable.timeSpecOf(
+    def spec(base: String) = Layout.of(
       VersionedTable.entries(base, VersionedTable.latestVersion(base).get))
-    assert(spec(haBase) === Some(("hours", "ts")))
+    assert(spec(haBase) === Some(Layout.Time("hours", "ts")))
     // every file carries ONE hour token; a plain append inherits
     rows(9 until 10, 2, 3600000L).write.format("graft")
       .mode("append").save(haBase)
-    assert(spec(haBase) === Some(("hours", "ts")))
+    assert(spec(haBase) === Some(Layout.Time("hours", "ts")))
     withSpj {
       val j = spark.table(s"graft.$ns.hr_a").as("a")
         .join(spark.table(s"graft.$ns.hr_b").as("b"),
@@ -731,7 +734,7 @@ class GraftSpjSpec extends SparkSuite {
       "timestamp'2023-11-15 00:00:00' + make_interval(0, id, 0, CAST(id AS INT) % 3), " +
       "id * 2 FROM range(0, 8)")
     val moBase = s"$warehouse/$ns/mo_a"
-    assert(spec(moBase) === Some(("months", "ts")))
+    assert(spec(moBase) === Some(Layout.Time("months", "ts")))
     // the month index crosses a year boundary in this fixture — pin
     // the shared definition against the driver-side epochMonth
     val es = VersionedTable.entries(moBase,
@@ -758,7 +761,7 @@ class GraftSpjSpec extends SparkSuite {
         s"${2020 + y}-03-0${1 + y % 3} 12:00:00"), y.toLong))
       .toDF("ts", "v").write.format("graft")
       .option("yearsBy", "ts").mode("append").save(yaBase)
-    assert(spec(yaBase) === Some(("years", "ts")))
+    assert(spec(yaBase) === Some(Layout.Time("years", "ts")))
     val yes = VersionedTable.entries(yaBase,
       VersionedTable.latestVersion(yaBase).get)
     assert(yes.flatMap(_.stats.collect {
@@ -795,12 +798,12 @@ class GraftSpjSpec extends SparkSuite {
     // across a later plain append
     val es = VersionedTable.entries(aBase,
       VersionedTable.latestVersion(aBase).get)
-    assert(VersionedTable.daysSpecOf(es) === Some("ts"))
+    assert(Layout.of(es) === Some(Layout.Time("days", "ts")))
     rows(8 until 10, 3).write.format("graft")
       .mode("append").save(aBase)
     val es2 = VersionedTable.entries(aBase,
       VersionedTable.latestVersion(aBase).get)
-    assert(VersionedTable.daysSpecOf(es2) === Some("ts"),
+    assert(Layout.of(es2) === Some(Layout.Time("days", "ts")),
       "a plain append on a day-partitioned table must inherit the layout")
     withSpj {
       val j = spark.table(s"graft.$ns.dy_a").as("a")
@@ -849,14 +852,14 @@ class GraftSpjSpec extends SparkSuite {
       .option("truncateBy", "100:k").mode("append").save(aBase)
     (200L to 600L).map(k => (k, k * 7L)).toDF("k", "w").write.format("graft")
       .option("truncateBy", "100:k").mode("append").save(bBase)
-    def specOf(b: String) = VersionedTable.truncSpecOf(
+    def specOf(b: String) = Layout.of(
       VersionedTable.entries(b, VersionedTable.latestVersion(b).get))
-    assert(specOf(aBase) === Some(("k", 100)))
-    assert(specOf(bBase) === Some(("k", 100)))
+    assert(specOf(aBase) === Some(Layout.Truncate(100, "k")))
+    assert(specOf(bBase) === Some(Layout.Truncate(100, "k")))
     // a PLAIN append inherits the truncate layout (sticky discipline)
     Seq((450L, 9L)).toDF("k", "v").write.format("graft")
       .mode("append").save(aBase)
-    assert(specOf(aBase) === Some(("k", 100)),
+    assert(specOf(aBase) === Some(Layout.Truncate(100, "k")),
       "a plain append on a truncate-partitioned table must inherit it")
     withSpj {
       val j = spark.table(s"graft.$ns.tr_a").as("a")
@@ -882,7 +885,7 @@ class GraftSpjSpec extends SparkSuite {
     assert(kept < total,
       s"prefix slice should prune trunc files, kept $kept of $total")
     // MIXED GENERATIONS (the negative control): declare a NEW width —
-    // the next append lands width-50 files, truncSpecOf goes None, and
+    // the next append lands width-50 files, Layout.of goes None, and
     // the join falls back to shuffling (correct, never a stale claim)
     VersionedTable.declareLayout(aBase, "truncate", "50:k")
     Seq((460L, 10L)).toDF("k", "v").write.format("graft")
@@ -901,9 +904,9 @@ class GraftSpjSpec extends SparkSuite {
     // every file then carries width 50 and the b side rebuilt to match
     // re-establishes SPJ
     VersionedTable.relayoutStale(spark, aBase, "truncate", "50:k")
-    assert(specOf(aBase) === Some(("k", 50)))
+    assert(specOf(aBase) === Some(Layout.Truncate(50, "k")))
     VersionedTable.relayoutStale(spark, bBase, "truncate", "50:k")
-    assert(specOf(bBase) === Some(("k", 50)))
+    assert(specOf(bBase) === Some(Layout.Truncate(50, "k")))
     withSpj {
       val j = spark.table(s"graft.$ns.tr_a").as("a")
         .join(spark.table(s"graft.$ns.tr_b").as("b"),
@@ -965,7 +968,7 @@ class GraftSpjSpec extends SparkSuite {
       .option("truncateBy", "5:url").mode("append").save(bBase)
     val es = VersionedTable.entries(aBase,
       VersionedTable.latestVersion(aBase).get)
-    assert(VersionedTable.truncSpecOf(es) === Some(("url", 5)))
+    assert(Layout.of(es) === Some(Layout.Truncate(5, "url")))
     // every file is prefix-pure per its verified token
     es.foreach { e =>
       e.stats.get("url#trunc") match {
