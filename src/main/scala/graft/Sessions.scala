@@ -35,8 +35,12 @@ object Sessions {
   private[graft] def echo(k: String, v: String): String =
     if (SecretKey.findFirstIn(k).isDefined) s"$k=***" else s"$k=$v"
 
-  def local(cpus: String): SparkSession = {
-    val b = SparkSession.builder()
+  /** [[local]]'s engine settings without the environment's overrides:
+    * specs build their session from this, so a variable left in the
+    * shell cannot change what they test.
+    */
+  private[graft] def localBuilder(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // the graft table format as a named SQL catalog (graft.ns.tbl,
@@ -49,7 +53,18 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         ObjectHashFallbackThreshold.toString)
+      // list paths on the driver, never through a listing job: a file
+      // stream's micro-batch indexes its N new files as N root paths, and
+      // past 32 of them Spark lists them with one task per file — which,
+      // in one JVM, runs on the driver's own cores with task overhead on
+      // top. [[deployment]] keeps the default: on a cluster the
+      // executors do that listing.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
       .config("spark.ui.enabled", "false")
+
+  def local(cpus: String): SparkSession = {
+    val b = localBuilder(cpus)
     // Environment passthrough for engine tuning (the optimization-round
     // parameterization rule: scale-dependent settings ride conf/env, not
     // constants): SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides/extends the
@@ -91,7 +106,9 @@ object Sessions {
     *  - checkpoint GC on (`cleanCheckpoints=true`) so long sessions
     *    don't accumulate barrier files;
     *  - shuffle partitions are left to the deployment (cluster sizing,
-    *    AQE coalescing), not pinned to a local CPU count.
+    *    AQE coalescing), not pinned to a local CPU count;
+    *  - path listing keeps Spark's parallel-listing threshold, so the
+    *    executors list a micro-batch's many new files.
     * UTC, nanosAsLong, the ObjectHashAggregate threshold and the graft
     * extensions are the same engine invariants as [[local]].
     */

@@ -81,12 +81,15 @@ object Enrichment {
       .toDF("img_id", "response")
   }
 
-  /** Parse raw response JSON into the `readResponses` shape (S6 parity)
-    * so the batch pipeline's flatten/pivot runs unchanged downstream.
+  /** Parse raw response JSON into (img_id, ExpenseDocuments), keeping
+    * only the summary subtree ([[TextractSchema.summaries]]): all that
+    * `ReceiptPipeline.flattenSummary` reads. The parser skips Geometry
+    * and line items instead of building them; every caller feeds
+    * flatten → summarize.
     */
   def parse(responses: DataFrame): DataFrame =
     responses
       .select(col("img_id"),
-        from_json(col("response"), TextractSchema.response).as("r"))
+        from_json(col("response"), TextractSchema.summaries).as("r"))
       .select(col("img_id"), col("r.*"))
 }

@@ -32,9 +32,11 @@ object ReceiptPipeline {
 
   /** P1 — nested multi-level projection + flatten (the jmespath query at
     * `anarcptlib.py:20-25`): two array explodes + 6-field struct
-    * projection. Geometry is never referenced, so nested-schema pruning
-    * drops it at the scan. Positions are retained for deterministic
-    * last-match pivoting.
+    * projection. Geometry is never referenced, but a JSON scan still
+    * parses it (Spark prunes nested fields at the scan for Parquet/ORC
+    * only), so `readResponses` input carries it; `Enrichment.parse`
+    * input does not ([[TextractSchema.summaries]]). Positions are
+    * retained for deterministic last-match pivoting.
     */
   def flattenSummary(responses: DataFrame): DataFrame =
     responses

@@ -7,16 +7,17 @@ import org.apache.spark.sql.types._
   * `/root/reference/output1.json`, documented in FIXTURES.md §A.1).
   *
   * Declaring the full nested schema — instead of schema inference — keeps
-  * reads single-pass and lets Catalyst's nested-schema pruning drop the
-  * Geometry subtrees (BoundingBox + Polygon are ~80% of the bytes) as
-  * soon as a query only projects Text/Confidence, which is the pruning
-  * win called out in SURVEY.md §4.
+  * reads single-pass. It does not prune: Spark drops unread nested
+  * fields at the scan for Parquet/ORC, not for JSON, and never narrows a
+  * `from_json` read through an explode, so the batch `readResponses`
+  * path parses every Geometry subtree (BoundingBox + Polygon, ~80% of
+  * the bytes). Consumers that read less parse with a narrower schema
+  * derived from this one: [[summaries]].
   */
 object TextractSchema {
 
-  /** Geometry: BoundingBox + Polygon (parsed then discarded by every
-    * downstream operator — reference `anarcptlib.py:20-25` projects only
-    * Text/Confidence).
+  /** Geometry: BoundingBox + Polygon (read by no downstream operator —
+    * reference `anarcptlib.py:20-25` projects only Text/Confidence).
     */
   val geometry: StructType = StructType(Seq(
     StructField("BoundingBox", StructType(Seq(
@@ -28,11 +29,14 @@ object TextractSchema {
       StructField("X", DoubleType),
       StructField("Y", DoubleType)))))))
 
-  /** One detected text span: text + model confidence + geometry. */
-  val detection: StructType = StructType(Seq(
+  /** Text + model confidence: all a summary consumer reads of a span. */
+  val textConf: StructType = StructType(Seq(
     StructField("Text", StringType),
-    StructField("Confidence", DoubleType),
-    StructField("Geometry", geometry)))
+    StructField("Confidence", DoubleType)))
+
+  /** One detected text span: text + model confidence + geometry. */
+  val detection: StructType =
+    StructType(textConf.fields :+ StructField("Geometry", geometry))
 
   /** One expense field: Type tag + optional label detection + value
     * detection (reference `anarcptlib.py:20-25`; same struct is reused
@@ -40,9 +44,7 @@ object TextractSchema {
     */
   val expenseField: StructType = StructType(Seq(
     StructField("PageNumber", IntegerType),
-    StructField("Type", StructType(Seq(
-      StructField("Text", StringType),
-      StructField("Confidence", DoubleType)))),
+    StructField("Type", textConf),
     StructField("LabelDetection", detection),
     StructField("ValueDetection", detection)))
 
@@ -57,4 +59,15 @@ object TextractSchema {
         StructField("LineItemGroupIndex", IntegerType),
         StructField("LineItems", ArrayType(StructType(Seq(
           StructField("LineItemExpenseFields", ArrayType(expenseField))))))))))))))))
+
+  /** What the summary consumers read (`ReceiptPipeline.flattenSummary`):
+    * `ExpenseDocuments → SummaryFields → Type / LabelDetection /
+    * ValueDetection {Text, Confidence}`. No Geometry, no line items.
+    */
+  val summaries: StructType = StructType(Seq(
+    StructField("ExpenseDocuments", ArrayType(StructType(Seq(
+      StructField("SummaryFields", ArrayType(StructType(Seq(
+        StructField("Type", textConf),
+        StructField("LabelDetection", textConf),
+        StructField("ValueDetection", textConf)))))))))))
 }

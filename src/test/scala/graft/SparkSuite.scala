@@ -3,23 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one per suite, lazily started). */
+/** Shared local session for specs (one per suite, lazily started): the
+  * CLI's own session, so specs run every setting it pins, minus the
+  * `SPARK_GRAFT_EXTRA_CONF` overrides, so specs are hermetic.
+  */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    // the production extension point (Sessions.local sets the same):
-    // SQL functions, the HOF->native rewrite, and the analyzer-level
-    // DML rules (SQL UPDATE) all ride it
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    .config("spark.sql.catalog.graft.warehouse",
-      s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      Sessions.ObjectHashFallbackThreshold.toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.localBuilder("4").getOrCreate()
 }

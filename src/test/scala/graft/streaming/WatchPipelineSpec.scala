@@ -1,11 +1,16 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.functions.SyntheticImages
-import graft.receipts.FixtureAnalyzer
+import graft.receipts.{ExpenseAnalyzer, FixtureAnalyzer, TextractJson}
 
 /** T1-T4 semantics: end-to-end AvailableNow run, checkpointed
   * exactly-once across restarts (T3), and cross-batch content dedup.
@@ -40,6 +45,35 @@ class WatchPipelineSpec extends SparkSuite {
     assert(result.select("vendor_name").distinct().head().getString(0).nonEmpty)
   }
 
+  test("fixture-free drain of 42 files: one receipt per distinct scan, listed on the driver") {
+    import WatchPipelineSpec._
+    val (raw, out, ckpt, _) = freshDirs()
+    // more new files than Spark's 32-path parallel-listing threshold
+    for (i <- 1 to 40) scan(raw, f"Scan_$i%03d.png", i)
+    scan(raw, "Rescan_001.png", 1)
+    scan(raw, "Rescan_002.png", 2)
+
+    val jobs = new JobDescriptions
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      WatchPipeline.runAvailableNow(spark, raw.toString, out, ckpt, new StubAnalyzer)
+      jobs.fence(spark)
+    } finally spark.sparkContext.removeSparkListener(jobs)
+
+    val rows = spark.read.parquet(out).collect()
+    val ids = rows.map(_.getAs[String]("img_id"))
+    assert(rows.length === 40 && ids.distinct.length === 40)
+    for (r <- rows) {
+      val id = r.getAs[String]("img_id")
+      assert(r.getAs[String]("vendor_name") === vendorOf(id))
+      assert(BigDecimal(r.getAs[java.math.BigDecimal]("total")) === BigDecimal(centsOf(id), 2))
+      assert(r.getMap[String, String](r.fieldIndex("other_data")).toMap ===
+        Map("CASHIER" -> id.take(4), "STORE" -> "12"))
+    }
+    val listing = jobs.seen.asScala.filter(_.startsWith("Listing leaf files and directories"))
+    assert(listing.isEmpty, listing)
+  }
+
   test("parquet batch sink is idempotent per batchId (replay-safe T3)") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_sink").toString
@@ -70,5 +104,52 @@ class WatchPipelineSpec extends SparkSuite {
     val result = spark.read.parquet(out)
     assert(result.count() === 3, "expected exactly one new summary")
     assert(result.select("img_id").distinct().count() === 3)
+  }
+}
+
+object WatchPipelineSpec {
+
+  def vendorOf(imgId: String): String = s"Shop ${imgId.take(6)}"
+
+  def centsOf(imgId: String): Int = Integer.parseInt(imgId.take(5), 16) % 100000
+
+  /** Textract-shaped responses derived from the img_id (the content
+    * address), with Geometry, line items and a repeated OTHER label
+    * whose last value wins.
+    */
+  final class StubAnalyzer extends ExpenseAnalyzer {
+    def open(): (String, Array[Byte]) => String = (id, _) => {
+      val c = centsOf(id)
+      TextractJson.response(Seq(
+        ("VENDOR_NAME", None, vendorOf(id)),
+        ("OTHER", Some("CASHIER"), "Ann"),
+        ("TOTAL", Some("TOTAL"), f"$$${c / 100}.${c % 100}%02d"),
+        ("OTHER", Some("STORE"), "12"),
+        ("OTHER", Some("CASHIER"), id.take(4))),
+        Seq(("PATCH", "$6.99", "1")))
+    }
+  }
+
+  /** Descriptions of the jobs started while registered. */
+  final class JobDescriptions extends SparkListener {
+    val seen = new ConcurrentLinkedQueue[String]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        .getOrElse(""))
+
+    /** Waits until every job started before this call has been seen:
+      * one listener queue delivers in order, so a marker job's start
+      * comes after all of theirs.
+      */
+    def fence(spark: SparkSession): Unit = {
+      val sc = spark.sparkContext
+      val marker = s"fence ${System.nanoTime()}"
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(5)
+      require(seen.contains(marker), "listener events did not arrive")
+    }
   }
 }
