@@ -1,22 +1,64 @@
 package graft
 
+import java.lang.management.ManagementFactory
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeUnit
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import graft.functions.SyntheticImages
+import graft.receipts.TextractJson
 import graft.sources.Sinks
 
-/** Drives every CLI subcommand in-process (the reference's Typer
-  * surface, `main.py:20-141`): happy path + the reference's validation
-  * errors, exit code 2 on bad parameters.
+/** Drives every CLI subcommand (the reference's Typer surface,
+  * `main.py:20-141`): happy path + the reference's validation errors,
+  * exit code 2 on bad parameters. All run in-process against the suite
+  * session except `watch --once`, which runs as a child JVM: `watch`
+  * takes no `--fixture` and reads its responses only from
+  * `GRAFT_FIXTURE`, the bundled resource or the dev path, and an
+  * environment variable can be set only for a new process.
   */
 class MainSpec extends SparkSuite {
+
+  private lazy val fixture = TextractJson.tempFile("response.json").toString
 
   private def runCli(args: String*): (Int, List[String]) = {
     val lines = mutable.ListBuffer.empty[String]
     val code = Main.run(args.toList, spark, lines += _)
     (code, lines.toList)
+  }
+
+  /** Runs `graft.Main` in a child JVM on this JVM's classpath, with its
+    * `--add-opens` and `-D` options (build.sbt's `javaOptions`), a 1 GB
+    * heap, two cores and `GRAFT_FIXTURE` set to [[fixture]]; stderr
+    * passes through. Returns the exit code and stdout lines; the child
+    * never outlives the call.
+    */
+  private def runCliJvm(args: String*): (Int, List[String]) = {
+    val inherited = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(a => a.startsWith("--add-opens=") || a.startsWith("-D"))
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val stdout = Files.createTempFile("graft_cli_stdout", ".txt")
+    val pb = new ProcessBuilder((Seq(java, "-Xmx1g") ++ inherited ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.Main") ++ args).asJava)
+      // anything the child leaves in its working dir stays out of the checkout
+      .directory(Files.createTempDirectory("graft_cli_cwd").toFile)
+      .redirectOutput(stdout.toFile)
+      .redirectError(ProcessBuilder.Redirect.INHERIT)
+    // hermetic like the suite session: no overrides from the shell
+    pb.environment().remove("SPARK_GRAFT_EXTRA_CONF")
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    pb.environment().put("GRAFT_FIXTURE", fixture)
+    val p = pb.start()
+    try {
+      assert(p.waitFor(5, TimeUnit.MINUTES), s"graft ${args.mkString(" ")} timed out")
+      (p.exitValue(), Files.readAllLines(stdout, StandardCharsets.UTF_8).asScala.toList)
+    } finally {
+      p.destroyForcibly()
+      p.waitFor()
+    }
   }
 
   private def tempImage(seed: Long, name: String): java.nio.file.Path = {
@@ -58,7 +100,8 @@ class MainSpec extends SparkSuite {
   test("analyze --image-file inserts the summary and echoes it") {
     val img = tempImage(3, "Receipt_003.png")
     val url = s"jdbc:derby:memory:cli_a1;create=true"
-    val (code, out) = runCli("analyze", "-f", img.toString, "--db-url", url)
+    val (code, out) = runCli("analyze", "-f", img.toString, "--db-url", url,
+      "--fixture", fixture)
     assert(code === 0 && out.nonEmpty)
     val back = Sinks.readJdbc(spark, url, "receiptsummary")
     assert(back.count() === 1)
@@ -74,7 +117,7 @@ class MainSpec extends SparkSuite {
     val (code, _) = runCli("analyze",
       "-s3key", img.getFileName.toString,
       "-s3bucket", s"file://${img.getParent}",
-      "--db-url", url)
+      "--db-url", url, "--fixture", fixture)
     assert(code === 0)
     val back = Sinks.readJdbc(spark, url, "receiptsummary")
     assert(back.select("img_id").head().getString(0) === "Receipt_004")
@@ -93,7 +136,7 @@ class MainSpec extends SparkSuite {
       SyntheticImages.encode(SyntheticImages.blockImage(5), "png"))
     Files.write(raw.resolve("Scan_002.png"),
       SyntheticImages.encode(SyntheticImages.blockImage(6), "png"))
-    val (code, out) = runCli("watch", raw.toString, outDir.toString, "--once")
+    val (code, out) = runCliJvm("watch", raw.toString, outDir.toString, "--once")
     assert(code === 0)
     assert(out.exists(_.startsWith("Watching")))
     val batches = spark.read.parquet(s"$outDir/batch_id=0")

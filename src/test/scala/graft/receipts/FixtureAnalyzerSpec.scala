@@ -16,7 +16,7 @@ class FixtureAnalyzerSpec extends AnyFunSuite {
   }
 
   test("load reads a filesystem path") {
-    assert(FixtureAnalyzer.load("/root/reference/output1.json")
+    assert(FixtureAnalyzer.load(TextractJson.tempFile("response.json").toString)
       .contains("ExpenseDocuments"))
   }
 

@@ -1,5 +1,7 @@
 package graft.receipts
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
@@ -10,11 +12,19 @@ import graft.SparkSuite
   * is the reference's own recorded output of the P1 flatten for it —
   * the expectations below are transcribed from that golden file.
   * The FARMERS MARKET expectations come from `output-7e7.json`.
+  * The capture is not in the repository: each test that reads it is
+  * canceled where it is absent and asserts wherever it exists.
   */
 class ReceiptPipelineSpec extends SparkSuite {
 
+  private val capture = Paths.get("/root/reference/output1.json")
+
   private lazy val responses =
-    ReceiptPipeline.readResponses(spark, "/root/reference/output1.json")
+    ReceiptPipeline.readResponses(spark, capture.toString)
+
+  private def assumeCapture(): Unit =
+    assume(Files.isRegularFile(capture),
+      s"the captured Textract response $capture is absent")
 
   // (TypeText, LabelText, ValueText) rows of output-7ff.json, in document order.
   private val goldenFlat: Seq[(String, Option[String], String)] = Seq(
@@ -34,6 +44,7 @@ class ReceiptPipelineSpec extends SparkSuite {
     ("TAX", Some("MO 9.679% TAX"), "1.48"))
 
   test("P1 flatten reproduces the reference's golden projection (output-7ff)") {
+    assumeCapture()
     val flat = ReceiptPipeline.flattenSummary(responses)
       .orderBy("doc_pos", "field_pos")
       .select("TypeText", "LabelText", "ValueText")
@@ -44,6 +55,7 @@ class ReceiptPipelineSpec extends SparkSuite {
   }
 
   test("P1 carries confidences (spot-checked against output-7ff)") {
+    assumeCapture()
     val first = ReceiptPipeline.flattenSummary(responses)
       .orderBy("doc_pos", "field_pos").limit(1)
       .select("TypeConfidence", "ValueConfidence").head()
@@ -52,6 +64,7 @@ class ReceiptPipelineSpec extends SparkSuite {
   }
 
   test("A1 pivot produces the CVS ReceiptSummary") {
+    assumeCapture()
     val s = ReceiptPipeline.summaries(responses).collect()
     assert(s.length === 1)
     val r = s.head
@@ -70,6 +83,7 @@ class ReceiptPipelineSpec extends SparkSuite {
   }
 
   test("A3 line items: ITEM/PRICE/QUANTITY extraction with F1/F5/F6 cleaning") {
+    assumeCapture()
     val items = ReceiptPipeline.items(responses).collect().sortBy(_.item_name)
     assert(items.length === 2)
     // price "8.29T" → 8.29 (money regex); quantity "F 1" → default 1 (F6)
@@ -82,6 +96,7 @@ class ReceiptPipelineSpec extends SparkSuite {
   }
 
   test("J1 join and denormalized array-column variant agree") {
+    assumeCapture()
     val j = ReceiptPipeline.joined(responses)
     assert(j.count() === 2) // 1 summary × 2 line items
     val d = ReceiptPipeline.denormalized(responses)
@@ -135,6 +150,7 @@ class ReceiptPipelineSpec extends SparkSuite {
   }
 
   test("S7 CSV render/re-parse path equals the direct nested extraction") {
+    assumeCapture()
     val direct = ReceiptPipeline.lineItems(responses)
     val viaCsv = ReceiptPipeline.itemsViaCsv(
       ReceiptPipeline.renderItemsCsv(responses))

@@ -1,5 +1,8 @@
 package graft.receipts
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path}
+
 /** Textract-shaped `analyze_expense` JSON for fixture-free specs: every
   * detection carries a Geometry block (the bytes a summary parse skips),
   * and the document carries line items next to its summary fields.
@@ -41,5 +44,20 @@ object TextractJson {
     s"""{"DocumentMetadata":{"Pages":1},"ExpenseDocuments":[{"ExpenseIndex":1,""" +
       s""""SummaryFields":[${summary.mkString(",")}],""" +
       s""""LineItemGroups":[{"LineItemGroupIndex":1,"LineItems":[${lineItems.mkString(",")}]}]}]}"""
+  }
+
+  /** A small receipt response (vendor, total, subtotal, tax, an `OTHER`
+    * label and one line item) written as `name` into a fresh temp
+    * directory; `readResponses` gives it the img_id of `name`'s stem.
+    */
+  def tempFile(name: String): Path = {
+    val f = Files.createTempDirectory("graft_textract").resolve(name)
+    Files.write(f, response(Seq(
+      ("VENDOR_NAME", None, "CVS pharmacy"),
+      ("OTHER", Some("CHARGE"), "16.76"),
+      ("TOTAL", Some("TOTAL"), "$16.76"),
+      ("SUBTOTAL", Some("SUBTOTAL"), "15.28"),
+      ("TAX", Some("MO 9.679% TAX"), "1.48")),
+      Seq(("CVS H/C PATCH SM", "$6.99", "1"))).getBytes(StandardCharsets.UTF_8))
   }
 }

@@ -4,11 +4,11 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
-import graft.receipts.ReceiptPipeline
+import graft.receipts.{ReceiptPipeline, TextractJson}
 
 class SinksSpec extends SparkSuite {
 
-  private val fixture = "/root/reference/output1.json"
+  private lazy val fixture = TextractJson.tempFile("receipt.json").toString
   private def derbyUrl(db: String) = s"jdbc:derby:memory:$db;create=true"
 
   test("K1: JDBC round-trip of pivoted summaries (Derby in-memory)") {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.functions.SyntheticImages
-import graft.receipts.{ExpenseAnalyzer, FixtureAnalyzer, TextractJson}
+import graft.receipts.{ExpenseAnalyzer, TextractJson}
 
 /** T1-T4 semantics: end-to-end AvailableNow run, checkpointed
   * exactly-once across restarts (T3), and cross-batch content dedup.
@@ -37,11 +37,11 @@ class WatchPipelineSpec extends SparkSuite {
     Files.write(raw.resolve("notes.txt"), "not an image".getBytes)
 
     WatchPipeline.runAvailableNow(spark, raw.toString, out, ckpt,
-      new FixtureAnalyzer())
+      new WatchPipelineSpec.StubAnalyzer)
     val result = spark.read.parquet(out)
     assert(result.count() === 2) // glob dropped .txt, dedup collapsed re-scan
     assert(result.select("img_id").distinct().count() === 2)
-    // enrichment seam filled the pivoted summary from the fixture
+    // enrichment seam filled the pivoted summary from the analyzer's response
     assert(result.select("vendor_name").distinct().head().getString(0).nonEmpty)
   }
 
@@ -91,7 +91,7 @@ class WatchPipelineSpec extends SparkSuite {
     scan(raw, "Scan_001.png", 1)
     scan(raw, "Scan_002.png", 2)
     WatchPipeline.runAvailableNow(spark, raw.toString, out, ckpt,
-      new FixtureAnalyzer())
+      new WatchPipelineSpec.StubAnalyzer)
     assert(spark.read.parquet(out).count() === 2)
 
     // restart: one genuinely new scan + one re-scan of a prior batch's
@@ -100,7 +100,7 @@ class WatchPipelineSpec extends SparkSuite {
     scan(raw, "Scan_003.png", 3)
     scan(raw, "Scan_004.png", 1)
     WatchPipeline.runAvailableNow(spark, raw.toString, out, ckpt,
-      new FixtureAnalyzer())
+      new WatchPipelineSpec.StubAnalyzer)
     val result = spark.read.parquet(out)
     assert(result.count() === 3, "expected exactly one new summary")
     assert(result.select("img_id").distinct().count() === 3)
