@@ -18,13 +18,14 @@ import scala.collection.concurrent.TrieMap
   *    not form a cycle.
   *  - A build that throws is not kept; the next caller rebuilds.
   *  - Timed: each build's wall seconds are recorded under its name and
-  *    read by Bench and JobProfile through [[timings]], so an artifact
-  *    build and its first consumer's query time stay distinguishable.
+  *    read by the measurement harness through [[timings]]
+  *    ([[Harness.memos]]), so an artifact build and its first
+  *    consumer's query time stay distinguishable.
   *    The cost is still inside the first consumer's wall time; the map
   *    attributes it, it does not subtract it.
   *
   * Artifacts are held as files (a parquet round-trip, or table dirs),
-  * never as a persisted DataFrame: Bench and Verify sweep every
+  * never as a persisted DataFrame: [[Harness.sweep]] frees every
   * persisted block between queries (including a build's final
   * localCheckpoint), which would leave a held frame reading freed
   * blocks. The shared tables are small (near-dup pairs, edge lists,
@@ -57,9 +58,8 @@ object Artifacts {
              (build: => A): A = {
     val k = (name, s.sparkContext.applicationId, sfDir, key)
     val cell = cells.getOrElseUpdate(k, new Cell(() => {
-      val t0 = System.nanoTime()
-      val r = build
-      seconds.put(name, (System.nanoTime() - t0) / 1e9)
+      val (r, sec) = Harness.time(build)
+      seconds.put(name, sec)
       r
     }))
     try cell.value.asInstanceOf[A]

@@ -1,44 +1,26 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: times every registry query flagged `bench` on the
   * SPARK_GRAFT_SF_DIR tables and prints one JSON line. Each query is
-  * fully evaluated through a `noop`-format write — `.count()` would let
-  * Catalyst prune unreferenced projections and time a near-empty plan
-  * for pure-projection queries.
-  *
-  * Session hygiene between queries (OUTSIDE the timed window — the
-  * measured dt is query work only): r2 showed late queries running 2-5×
-  * slower in-session than in isolation. Three leak classes accumulate
-  * across a 55-query session and are each cleaned per query:
-  *  - cached frames (clearCache) — the per-query persists;
-  *  - localCheckpoint blocks (getPersistentRDDs sweep) — checkpointed
-  *    RDDs bypass the catalog cache, so clearCache never frees them;
-  *  - broadcast vars + shuffle files — released by the ContextCleaner
-  *    only after their references are GC'd, so nudge a GC each query.
+  * fully evaluated through [[Harness.noop]] and followed by a
+  * [[Harness.sweep]] outside its timed window, so the measured dt is
+  * query work only.
   */
 object Bench {
 
-  /** Harness stdout tail window: the driver parses the metric line out
-    * of the LAST 2000 chars of stdout; line + newline must fit.
+  /** Stdout tail window: the metric line is parsed out of the LAST
+    * 2000 chars of stdout, so line + newline must fit.
     */
   val TailWindow = 1995
 
-  /** Median of a non-empty sample (avg of middle two for even n) —
-    * the per-query statistic the measurement protocol compares: this
-    * host's run-to-run spread is ~2× (BASELINE.md), so single runs
-    * can't distinguish host noise from a real regression; medians of
-    * N≥3 can (regression rule: per-query median > 1.5× baseline
-    * median).
-    */
-  def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    val n = s.length
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
-  }
+  /** [[Harness.median]], the per-query statistic of both lines. */
+  def median(xs: Seq[Double]): Double = Harness.median(xs)
 
   /** The two driver-facing JSON lines, as pure formatting (unit-tested
-    * by BenchLineSpec so registry growth can't re-break the harness
-    * parse): `_1` the full-precision full-name detail line
+    * by BenchLineSpec so registry growth can't re-break the metric
+    * line parse): `_1` the full-precision full-name detail line
     * (BENCH_DETAIL.json — always the complete record), `_2` the stdout
     * metric line. The stdout map keys are the short `qNN` ids (the
     * name up to the first underscore — asserted unique) because at 80+
@@ -50,118 +32,71 @@ object Bench {
   def lines(results: Seq[(String, Double, Boolean)],
             failed: Seq[String], sfName: String,
             extras: String = ""): (String, String) = {
-    def fmt(prec: String, v: Double): String = // Locale.ROOT: "." always
-      String.format(java.util.Locale.ROOT, prec, Double.box(v))
     val shortKeys = results.map(_._1.takeWhile(_ != '_'))
     val stdoutKeys = // collision → full names (degradation still guards)
       if (shortKeys.distinct.length == shortKeys.length) shortKeys
       else results.map(_._1)
-    def qsJson(keys: Seq[String], prec: String) =
+    def qsJson(keys: Seq[String], fmt: Double => String) =
       keys.zip(results).map { case (k, (_, v, _)) =>
-        s"\"" + k + "\":" + fmt(prec, v)
+        Harness.str(k) + ":" + fmt(v)
       }.mkString("{", ",", "}")
     // failed queries' time-to-failure is not work done — report it
     // separately, not inside the headline total
     val total = results.collect { case (_, v, true) => v }.sum
     val failedJson =
-      if (failed.isEmpty) ""
-      else ",\"failed\":" + failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      if (failed.isEmpty) "" else ",\"failed\":" + Harness.strs(failed)
     def line(qs: String) =
-      s"""{"metric":"total","value":${fmt("%.2f", total)},"queries":$qs$failedJson$extras,"sf":"$sfName"}"""
-    val detail = line(qsJson(results.map(_._1), "%.2f"))
-    val stdout = Seq(qsJson(stdoutKeys, "%.1f"), qsJson(stdoutKeys, "%.0f"), "{}")
+      s"""{"metric":"total","value":${Harness.fmt2(total)},"queries":$qs$failedJson$extras,"sf":"$sfName"}"""
+    val detail = line(qsJson(results.map(_._1), Harness.fmt2))
+    val stdout = Seq(qsJson(stdoutKeys, Harness.fmt("%.1f", _)),
+      qsJson(stdoutKeys, Harness.fmt("%.0f", _)), "{}")
       .map(line).find(_.length <= TailWindow)
       .getOrElse(line("{}")) // headline-only; > window only if q-count is absurd
     (detail, stdout)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // the target environment is local[32] with 32 shuffle partitions
-    // (brief/driver config); override via SPARK_GRAFT_CPUS to isolate
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed JVM/codegen warmup: the first measured query otherwise
-    // absorbs one-off session costs (classloading, codegen compiler
-    // init, parquet footer reads) that are not query work. r17 widened
-    // the warmup to the bench's own SF dir — the sf0.001 pass alone
-    // left the benched tables' footers and scan codegen cold, and the
-    // recorded r16 runs show the first timed query absorbing up to
-    // 15 s of that session cost (q1 run-1 16.09 s vs 1.24 s warm).
-    // r18 (r17 verdict #9, warmup hygiene): the SF-dir pass is now a
-    // plain full noop scan of EACH core table instead of running
-    // q5_region_revenue — a benched query must not get an untimed
-    // rehearsal of its own plan; the session costs the warmup exists
-    // for (footers, column decode codegen, OS page cache) are
-    // table-level, and this warms them uniformly for all ten tables
-    // rather than just q5's four. Still one declared untimed warmup,
-    // still no result reuse — every timed run recomputes from parquet.
-    // NonFatal only: an OOM/LinkageError here must crash, and a broken
-    // entry query must be VISIBLE (a silently dead warmup both hides a
-    // regression and skews the first timed query)
-    try {
-      SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-      Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
-        Tables.region, Tables.nation, Tables.customer, Tables.supplier,
-        Tables.part, Tables.orders, Tables.lineitem, Tables.events,
-        Tables.documents, Tables.embeddings)
-        .foreach(t => t(spark, sfDir)
-          .write.format("noop").mode("overwrite").save())
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] warmup FAILED: $e")
-    }
-    // optional comma-separated name filter for isolating queries
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSet)
-    // SPARK_GRAFT_BENCH_RUNS=N (default 1): run each query N times
-    // CONSECUTIVELY and report the per-query MEDIAN in both JSON lines;
-    // the detail file additionally carries the per-run arrays. For
-    // memoized queries (q40's pair memo, q123's edge table) runs 2..N
-    // are warm — the median is then the warm cost and run 1 in the
-    // array keeps the cold number; medians are the regression-rule
-    // statistic, the protocol BASELINE.md records.
-    val runsN = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "1").toInt.max(1)
+  /** The benched queries (those named in `only`, if given) on `sfDir`,
+    * each run `runsN` times CONSECUTIVELY; returns the detail record
+    * and the stdout metric line. Both carry per-query MEDIANS, the
+    * regression-rule statistic; for memoized queries (q40's pair memo,
+    * q123's edge table) runs 2..N are warm, so run 1 in the detail
+    * file's per-run arrays keeps the cold number.
+    */
+  def record(spark: SparkSession, sfDir: String, only: Option[Set[String]],
+             runsN: Int): (String, String) = {
     var failed = List.empty[String]
     val runResults: Seq[(String, Seq[Double], Boolean)] =
       SparkEntry.registry.filter(_.bench)
         .filter(q => only.forall(_.contains(q.name))).map { q =>
       var ok = true
       val times = (1 to runsN).map { _ =>
-        val t0 = System.nanoTime()
-        try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
-          if (ok) failed ::= q.name
-          ok = false
+        val (_, dt) = Harness.time {
+          try Harness.noop(q.run(spark, sfDir))
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
+            if (ok) failed ::= q.name
+            ok = false
+          }
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        System.gc()
+        Harness.sweep(spark)
         dt
       }
       if (ok) System.err.println(f"[bench] ${q.name}%-28s ${median(times)}%8.2f s" +
-        (if (runsN > 1) times.map(t => f"$t%.2f").mkString("  [", " ", "]") else ""))
+        (if (runsN > 1) times.map(Harness.fmt2).mkString("  [", " ", "]") else ""))
       (q.name, times, ok)
     }
     val results = runResults.map { case (n, ts, ok) => (n, median(ts), ok) }
-    // r13 judge ask #8 — PROTOCOL ALIGNMENT: the driver measures one
-    // cold run, the builder records median-of-3, and the two disagreed
-    // 25× on memo-payers. Both protocols now ride in the line itself:
-    // cold_total = Σ run-1 (the driver's signal — with RUNS=1 it equals
-    // "value"); warm_total = Σ median(runs 2..N) (the steady-state
-    // signal, memo builds amortized — equals cold_total when only one
-    // run exists). BASELINE.md's regression rule cites which applies.
-    def fmt2(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    // both protocols ride in the line: cold_total = Σ run-1 (what one
+    // cold run measures; with RUNS=1 it equals "value"), warm_total =
+    // Σ median(runs 2..N) (steady state, memo builds amortized; equals
+    // cold_total when only one run exists)
     val coldTotal = runResults.collect { case (_, ts, true) => ts.head }.sum
     val warmTotal =
       if (runsN <= 1) coldTotal
       else runResults.collect { case (_, ts, true) => median(ts.tail) }.sum
     val extras =
-      s""","cold_total":${fmt2(coldTotal)},"warm_total":${fmt2(warmTotal)}"""
-    // Per-query 100ms/10ms precision: far below this host's run-to-run
+      s""","cold_total":${Harness.fmt2(coldTotal)},"warm_total":${Harness.fmt2(warmTotal)}"""
+    // Per-query 100ms/10ms precision: far below the host's run-to-run
     // variance (±30%+); "unit" dropped and sf shortened to its basename
     // (seconds are the shape declared in BASELINE.md; the driver
     // records the full sf itself). See `lines` for the tail-window
@@ -174,34 +109,27 @@ object Bench {
       if (runsN <= 1) detail0
       else {
         val runsJson = runResults.map { case (n, ts, _) =>
-          "\"" + n + "\":" + ts.map(fmt2).mkString("[", ",", "]")
+          Harness.str(n) + ":" + ts.map(Harness.fmt2).mkString("[", ",", "]")
         }.mkString("{", ",", "}")
         detail0.dropRight(1) + s""","runs_n":$runsN,"runs":$runsJson}"""
       }
-    // session-memo build attribution (r10 judge nit: q97's time silently
-    // absorbed the shared PQ artifact build; q40/q123 likewise own their
-    // memos' cost) — the per-memo seconds ride in the detail file so
-    // artifact-build and query regressions stay distinguishable. The
-    // memo cost is ALSO inside its first consumer's timing (run 1): the
-    // map attributes it, it doesn't subtract it.
-    val memos = Artifacts.timings
-    val detail =
-      if (memos.isEmpty) detail1
-      else detail1.dropRight(1) + "," + "\"memos\":" +
-        memos.toSeq.sortBy(_._1).map { case (n, v) =>
-          "\"" + n + "\":" + fmt2(v)
-        }.mkString("{", ",", "}") + "}"
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      (detail + "\n").getBytes("UTF-8"))
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] BENCH_DETAIL.json write failed: $e")
-    }
+    // artifact builds are attributed separately, so an artifact-build
+    // regression and a query regression stay distinguishable
+    val detail = Harness.memos.fold(detail1)(m => detail1.dropRight(1) + ",\"memos\":" + m + "}")
+    (detail, out)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Harness.sfDir
+    // optional comma-separated name filter for isolating queries
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    val runsN = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "1").toInt.max(1)
+    val (detail, out) = Harness.suite(sfDir)(record(_, sfDir, only, runsN))
+    Harness.write("BENCH_DETAIL.json", detail)
     if (out.length > TailWindow)
       System.err.println(s"[bench] WARNING metric line ${out.length} chars may exceed harness tail window")
     // the metric line is the LAST stdout line (showSuccess off), so the
     // 2000-char tail contains it whole as long as line+newline <= 2000
     println(out)
-    spark.stop()
   }
 }

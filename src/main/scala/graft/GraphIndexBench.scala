@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Harness.fmt2
 import graft.operators.VersionedTable
 import graft.streaming.GraphIndexPipeline
 
@@ -16,11 +18,10 @@ import graft.streaming.GraphIndexPipeline
   */
 object GraphIndexBench {
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val deltaN = sys.env.getOrElse("SPARK_GRAFT_GRAPHIDX_DELTA", "50").toLong
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+  /** Bootstrap, two deltas (`deltaN` and 5 vectors) and two repair
+    * rounds over `sfDir`'s embeddings; returns the `graphidx` record.
+    */
+  def record(spark: SparkSession, sfDir: String, deltaN: Long): String = {
     val vb = TempDirs.scoped("gixb_vecs")
     val eb = TempDirs.scoped("gixb_edges")
     val rb = TempDirs.scoped("gixb_route")
@@ -32,9 +33,6 @@ object GraphIndexBench {
     val maxId = vecs.agg(max(col("vec_id"))).head().getLong(0)
     val cut2 = maxId - delta2N + 1 // the second, smaller delta
     val cut1 = cut2 - deltaN       // the first delta
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     // the ∝-delta signal, measured EXACTLY via time travel (r15 — the
     // atomic replace's ADD files carry untouched survivors alongside
     // the merged rows, so counting add-file srcs would read ≈ corpus
@@ -66,7 +64,7 @@ object GraphIndexBench {
     VersionedTable.commitMerge(spark, vb,
       vecs.filter(col("vec_id") < cut1), "vec_id", Seq("vec_id"),
       statsCols = Seq("vec_id"))
-    val bootstrapSec = timed {
+    val (_, bootstrapSec) = Harness.time {
       GraphIndexPipeline.runAvailableNow(spark, vb, eb, rb, cb, cp,
         maintain = false)
     }
@@ -74,7 +72,7 @@ object GraphIndexBench {
     VersionedTable.commitMerge(spark, vb,
       vecs.filter(col("vec_id") >= cut1 && col("vec_id") < cut2),
       "vec_id", Seq("vec_id"), statsCols = Seq("vec_id"))
-    val delta1Sec = timed {
+    val (_, delta1Sec) = Harness.time {
       GraphIndexPipeline.runAvailableNow(spark, vb, eb, rb, cb, cp,
         maintain = false)
     }
@@ -83,7 +81,7 @@ object GraphIndexBench {
     VersionedTable.commitMerge(spark, vb,
       vecs.filter(col("vec_id") >= cut2), "vec_id", Seq("vec_id"),
       statsCols = Seq("vec_id"))
-    val delta2Sec = timed {
+    val (_, delta2Sec) = Harness.time {
       GraphIndexPipeline.runAvailableNow(spark, vb, eb, rb, cb, cp,
         maintain = false)
     }
@@ -92,40 +90,42 @@ object GraphIndexBench {
     // REPAIR cost ∝ degraded srcs (r15): two delete rounds of very
     // different size, each followed by repair — the repaired-src count
     // and wall seconds must scale with the churn, not the corpus
-    var repaired1 = 0L; var repaired2 = 0L
     val del1 = math.max(1L, cut1 / 100L) // ~1% of the corpus
-    val repair1Sec = timed {
+    val (repaired1, repair1Sec) = Harness.time {
       VersionedTable.commitDelete(spark, vb,
         col("vec_id") < del1, Seq(("vec_id", 0L, del1 - 1)),
         statsCols = Seq("vec_id"))
       GraphIndexPipeline.runAvailableNow(spark, vb, eb, rb, cb, cp,
         maintain = false)
-      repaired1 = GraphIndexPipeline.repair(spark, vb, eb, rb)
+      GraphIndexPipeline.repair(spark, vb, eb, rb)
     }
-    val repair2Sec = timed {
+    val (repaired2, repair2Sec) = Harness.time {
       VersionedTable.commitDelete(spark, vb,
         col("vec_id") >= del1 && col("vec_id") < del1 + 3L,
         Seq(("vec_id", del1, del1 + 2L)), statsCols = Seq("vec_id"))
       GraphIndexPipeline.runAvailableNow(spark, vb, eb, rb, cb, cp,
         maintain = false)
-      repaired2 = GraphIndexPipeline.repair(spark, vb, eb, rb)
+      GraphIndexPipeline.repair(spark, vb, eb, rb)
     }
-    def f(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     // the ∝-delta proof is srcs_rewritten scaling with the delta (each
     // delta row touches ~2·cellsize candidates — the batch build's own
     // per-row width), while bootstrap_sec carries the full O(N·√N) build
-    println(s"""{"metric":"graphidx","bootstrap_sec":${f(bootstrapSec)},""" +
+    s"""{"metric":"graphidx","bootstrap_sec":${fmt2(bootstrapSec)},""" +
       s""""n_bootstrap":${cut1},""" +
-      s""""delta1_sec":${f(delta1Sec)},"n_delta1":$deltaN,""" +
+      s""""delta1_sec":${fmt2(delta1Sec)},"n_delta1":$deltaN,""" +
       s""""srcs_rewritten1":$srcs1,"files_touched1":$files1,""" +
-      s""""delta2_sec":${f(delta2Sec)},"n_delta2":$delta2N,""" +
+      s""""delta2_sec":${fmt2(delta2Sec)},"n_delta2":$delta2N,""" +
       s""""srcs_rewritten2":$srcs2,"files_touched2":$files2,""" +
-      s""""n_deleted1":$del1,"repair1_sec":${f(repair1Sec)},""" +
+      s""""n_deleted1":$del1,"repair1_sec":${fmt2(repair1Sec)},""" +
       s""""srcs_repaired1":$repaired1,""" +
-      s""""n_deleted2":3,"repair2_sec":${f(repair2Sec)},""" +
+      s""""n_deleted2":3,"repair2_sec":${fmt2(repair2Sec)},""" +
       s""""srcs_repaired2":$repaired2,""" +
-      s""""edges_total":$edgesTotal,"sf":"${new java.io.File(sfDir).getName}"}""")
-    spark.stop()
+      s""""edges_total":$edgesTotal,"sf":"${new java.io.File(sfDir).getName}"}"""
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Harness.sfDir
+    val deltaN = sys.env.getOrElse("SPARK_GRAFT_GRAPHIDX_DELTA", "50").toLong
+    println(Harness.suite(sfDir)(record(_, sfDir, deltaN)))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 
 /** Optimization-round scratch: runs one registry query cold and prints
   * every Spark job's wall time + callsite, so multi-job operators
@@ -8,21 +9,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * their seconds go. Not part of the driver contract.
   *
   * Usage: PROFILE_QUERY=q97_ann_recall[,q160_...] sbt "runMain graft.JobProfile"
-  * Each named query runs cold-then-warm (2 passes) with Bench's
-  * inter-query hygiene, so memo builds are visible in pass 1 and the
+  * Each named query runs cold-then-warm (2 passes) with the harness's
+  * inter-query sweep, so memo builds are visible in pass 1 and the
   * steady-state job breakdown in pass 2.
   */
 object JobProfile {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val names = sys.env.getOrElse("PROFILE_QUERY", "q1_pricing_summary")
-      .split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = Sessions.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup like Bench
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case scala.util.control.NonFatal(e) => System.err.println(s"warmup: $e") }
+
+  /** Both passes of each query in `names` on `sfDir`, job lines to stderr. */
+  def profile(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
@@ -40,21 +34,19 @@ object JobProfile {
     names.foreach { name =>
       (1 to 2).foreach { pass =>
         System.err.println(s"=== $name pass $pass ===")
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[total] $name pass $pass $dt%.2f s")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        System.gc()
+        val (_, dt) = Harness.time(Harness.noop(SparkEntry.queries(name)(spark, sfDir)))
+        System.err.println(s"[total] $name pass $pass ${Harness.fmt2(dt)} s")
+        Harness.sweep(spark)
       }
     }
-    val memos = Artifacts.timings
-    if (memos.nonEmpty)
-      System.err.println("[memos] " + memos.toSeq.sortBy(-_._2)
-        .map { case (n, v) => f"$n=$v%.2f" }.mkString(" "))
+    Harness.memos.foreach(m => System.err.println(s"[memos] $m"))
     Thread.sleep(500) // let listener events drain
-    spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Harness.sfDir
+    val names = sys.env.getOrElse("PROFILE_QUERY", "q1_pricing_summary")
+      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    Harness.suite(sfDir)(profile(_, sfDir, names))
   }
 }

@@ -54,6 +54,14 @@ object Main {
   private def missingValue(opt: String): Nothing =
     throw BadParameter(s"Option '$opt' requires an argument")
 
+  /** The analyzer replaying `path` (a file or `classpath:` resource),
+    * checked here: a missing fixture is a bad parameter, not a failure
+    * inside the first Spark task.
+    */
+  private def fixtureAnalyzer(path: String): FixtureAnalyzer =
+    if (FixtureAnalyzer.exists(path)) new FixtureAnalyzer(path)
+    else throw BadParameter(s"$path does not exists.")
+
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("WARN")
@@ -158,6 +166,7 @@ object Main {
     if (imageFile.isDefined && s3Key.isDefined)
       throw BadParameter(
         "analyze either a local image receipt or one stored on s3 not both.")
+    val analyzer = fixtureAnalyzer(fixture)
     val (imgId, bytes) = imageFile match {
       case Some(f) =>
         val p = Paths.get(f)
@@ -174,7 +183,7 @@ object Main {
     import spark.implicits._
     val images = Seq((imgId, bytes)).toDF("img_id", "content")
     val responses = Enrichment.parse(
-      Enrichment.analyze(images, new FixtureAnalyzer(fixture)))
+      Enrichment.analyze(images, analyzer))
     val summary = ReceiptPipeline.summarize(
       ReceiptPipeline.flattenSummary(responses))
     Sinks.writeJdbc(summary, dbUrl, "receiptsummary")
@@ -224,13 +233,14 @@ object Main {
     // the watcher looks for scans
     if (outReal.startsWith(watchReal))
       throw BadParameter("OUT_DIR can not be inside WATCH_DIR.")
+    val analyzer = fixtureAnalyzer(FixtureAnalyzer.resolve())
     out(s"Watching $watchDir for newly scanned receipts...")
     val checkpoint = s"$outDir/_checkpoint"
     if (once)
-      WatchPipeline.runAvailableNow(spark, watchDir, outDir, checkpoint)
+      WatchPipeline.runAvailableNow(spark, watchDir, outDir, checkpoint, analyzer)
     else {
       val q = WatchPipeline.start(spark, watchDir, checkpoint,
-        new FixtureAnalyzer(), WatchPipeline.parquetBatchSink(outDir),
+        analyzer, WatchPipeline.parquetBatchSink(outDir),
         Trigger.ProcessingTime(s"$pause seconds"))
       q.awaitTermination()
     }

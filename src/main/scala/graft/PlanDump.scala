@@ -12,14 +12,12 @@ package graft
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Harness.sfDir
     val tag = sys.env.getOrElse("PLAN_TAG", "r17")
     val suffix = sys.env.getOrElse("PLAN_SUFFIX", "before")
     val names = sys.env.getOrElse("PLAN_QUERIES", "")
       .split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = Sessions.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("32")
     val byName = SparkEntry.queries
     val dir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(dir)

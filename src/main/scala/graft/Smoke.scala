@@ -1,15 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local mirror of the driver's t1 smoke: run SparkEntry.entry on
   * sf0.001 and assert rows > 0. Optional arg: a query name to run and
   * show instead (on the dir given as second arg, default sf0.001).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.local("4")
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("4")
     args.headOption match {
       case None =>
         val df = SparkEntry.entry(spark)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Storage-partitioned-join measurement (the q192 scale evidence):
@@ -18,21 +19,11 @@ import org.apache.spark.sql.functions._
   */
 object SpjBench {
 
-  private def timeMs[A](body: => A): (Long, A) = {
-    val t0 = System.nanoTime()
-    val r = body
-    ((System.nanoTime() - t0) / 1000000L, r)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption
-      .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
-      .getOrElse("/root/testdata/sf0.1")
-    val r = sys.env.get("SPARK_GRAFT_SPJ_R").map(_.toInt).getOrElse(20)
+  /** The shuffle-vs-SPJ join measurement over `sfDir`'s lineitem and
+    * orders replicated `r`×; returns the `spj_join` record.
+    */
+  def record(spark: SparkSession, sfDir: String, r: Int): String = {
     val buckets = 32
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
     val root = TempDirs.scoped("spj_bench")
 
     val li0 = Tables.lineitem(spark, sfDir)
@@ -55,13 +46,13 @@ object SpjBench {
     // elides the exchange
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val ns = s"spjbench${System.nanoTime() % 1000000}"
-    val (tBucketedIngest, _) = timeMs {
+    val (_, bucketedSec) = Harness.time {
       li.write.format("graft").option("bucketBy", s"$buckets:l_orderkey")
         .mode("append").save(s"$wh/$ns/li")
       ord.write.format("graft").option("bucketBy", s"$buckets:o_orderkey")
         .mode("append").save(s"$wh/$ns/ord")
     }
-    val (tPlainIngest, _) = timeMs {
+    val (_, plainSec) = Harness.time {
       li.write.format("graft").mode("append").save(s"$root/li_plain")
       ord.write.format("graft").mode("append").save(s"$root/ord_plain")
     }
@@ -81,15 +72,13 @@ object SpjBench {
       val exchanges = "Exchange hashpartitioning".r
         .findAllIn(j.queryExecution.executedPlan.toString).size -
         1 // the groupBy's own exchange is mode-independent; subtract it
-      val (ms, rows) = timeMs(
-        j.collect().map(_.getLong(1)).sum)
-      (ms, rows, exchanges)
+      val (rows, sec) = Harness.time(j.collect().map(_.getLong(1)).sum)
+      (Harness.millis(sec), rows, exchanges)
     }
     // interleave modes, median of 3 each (the BASELINE.md protocol)
     val runs = (1 to 3).map(_ => (run(spj = false), run(spj = true)))
-    def med(xs: Seq[Long]): Long = xs.sorted.apply(xs.size / 2)
-    val shuffleMs = med(runs.map(_._1._1))
-    val spjMs = med(runs.map(_._2._1))
+    val shuffleMs = Harness.median(runs.map(_._1._1.toDouble)).toLong
+    val spjMs = Harness.median(runs.map(_._2._1.toDouble)).toLong
     val exShuffle = runs.head._1._3
     val exSpj = runs.head._2._3
     val rowsJoined = runs.head._1._2
@@ -97,15 +86,20 @@ object SpjBench {
       "row-count mismatch between modes — SPJ dropped rows")
     require(exSpj == 0 && exShuffle >= 2,
       s"expected 0 SPJ / >=2 shuffle join exchanges, got $exSpj/$exShuffle")
-    println(s"""{"metric":"spj_join","sf_dir":"$sfDir","replicate":$r,""" +
+    s"""{"metric":"spj_join","sf_dir":${Harness.str(sfDir)},"replicate":$r,""" +
       s""""buckets":$buckets,"li_rows":$liRows,"ord_rows":$ordRows,""" +
       s""""rows_joined":$rowsJoined,""" +
       s""""join_shuffle_ms":$shuffleMs,"join_spj_ms":$spjMs,""" +
       s""""exchanges_shuffle":$exShuffle,"exchanges_spj":$exSpj,""" +
-      s""""ingest_bucketed_ms":$tBucketedIngest,""" +
-      s""""ingest_plain_ms":$tPlainIngest,""" +
+      s""""ingest_bucketed_ms":${Harness.millis(bucketedSec)},""" +
+      s""""ingest_plain_ms":${Harness.millis(plainSec)},""" +
       s""""runs_shuffle_ms":[${runs.map(_._1._1).mkString(",")}],""" +
-      s""""runs_spj_ms":[${runs.map(_._2._1).mkString(",")}]}""")
-    spark.stop()
+      s""""runs_spj_ms":[${runs.map(_._2._1).mkString(",")}]}"""
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = args.headOption.getOrElse(Harness.sfDir)
+    val r = sys.env.get("SPARK_GRAFT_SPJ_R").map(_.toInt).getOrElse(20)
+    println(Harness.suite(sfDir)(record(_, sfDir, r)))
   }
 }

@@ -60,7 +60,8 @@ object StreamingQueries {
       (s, _) => {
         val scans = SyntheticImages.fixtureDir()
         val base = graft.TempDirs.scoped("graft_watch_q")
-        WatchPipeline.runAvailableNow(s, scans, s"$base/out", s"$base/ckpt")
+        WatchPipeline.runAvailableNow(s, scans, s"$base/out", s"$base/ckpt",
+          new graft.receipts.FixtureAnalyzer())
         val sink = s.read.parquet(s"$base/out")
         val blobFacts = graft.functions.ImageSource
           .withHash(graft.functions.ImageSource.images(s, scans))

@@ -54,6 +54,14 @@ object FixtureAnalyzer {
         .map(_ => ClasspathPrefix + Resource))
       .getOrElse(DevPath)
 
+  /** Whether [[load]] finds `path`: a regular file, or an existing
+    * `classpath:` resource.
+    */
+  def exists(path: String): Boolean =
+    if (path.startsWith(ClasspathPrefix))
+      getClass.getResource(path.stripPrefix(ClasspathPrefix)) != null
+    else Files.isRegularFile(Paths.get(path))
+
   def load(path: String): String =
     if (path.startsWith(ClasspathPrefix)) {
       val in = getClass.getResourceAsStream(path.stripPrefix(ClasspathPrefix))

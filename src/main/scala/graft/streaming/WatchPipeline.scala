@@ -87,9 +87,7 @@ object WatchPipeline {
     * new (per the checkpoint) and stop.
     */
   def runAvailableNow(spark: SparkSession, rawDir: String, outDir: String,
-                      checkpointDir: String,
-                      analyzer: ExpenseAnalyzer =
-                        new graft.receipts.FixtureAnalyzer()): Unit = {
+                      checkpointDir: String, analyzer: ExpenseAnalyzer): Unit = {
     val q = start(spark, rawDir, checkpointDir, analyzer,
       parquetBatchSink(outDir), Trigger.AvailableNow())
     q.awaitTermination()

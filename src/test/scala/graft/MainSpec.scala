@@ -129,6 +129,13 @@ class MainSpec extends SparkSuite {
     assert(out.head.contains("not both"))
   }
 
+  test("analyze with a missing --fixture is a bad parameter, exit 2") {
+    val img = tempImage(7, "Receipt_007.png")
+    val (code, out) = runCli("analyze", "-f", img.toString, "--fixture", "/nonexistent")
+    assert(code === 2)
+    assert(out.head === "Error: /nonexistent does not exists.")
+  }
+
   test("watch --once drains the directory into per-batch parquet") {
     val raw = Files.createTempDirectory("graft_cli_raw")
     val outDir = Files.createTempDirectory("graft_cli_out")
