@@ -27,6 +27,16 @@ object Sessions {
     */
   val ObjectHashFallbackThreshold: Int = 1 << 21
 
+  /** The engine invariants every profile sets at build, and
+    * [[deployment]] re-sets at runtime: the UTC session zone,
+    * `nanosAsLong` and [[ObjectHashFallbackThreshold]].
+    */
+  private val Invariants: Map[String, String] = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
+      ObjectHashFallbackThreshold.toString)
+
   private val SecretKey = "(?i)secret|password|token|key".r
 
   /** `k=v` as the extra-conf echo prints it: the value of a key that
@@ -42,6 +52,7 @@ object Sessions {
   private[graft] def localBuilder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(Invariants)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // the graft table format as a named SQL catalog (graft.ns.tbl,
       // VERSION AS OF time travel) — warehouse layout IS the identity
@@ -49,10 +60,6 @@ object Sessions {
       .config("spark.sql.catalog.graft.warehouse",
         s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        ObjectHashFallbackThreshold.toString)
       // list paths on the driver, never through a listing job: a file
       // stream's micro-batch indexes its N new files as N root paths, and
       // past 32 of them Spark lists them with one task per file — which,
@@ -116,11 +123,8 @@ object Sessions {
     require(checkpointDir.nonEmpty,
       "deployment profile requires a replicated-storage checkpoint dir")
     val s = SparkSession.builder()
+      .config(Invariants)
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        ObjectHashFallbackThreshold.toString)
       .config(graft.operators.Reliable.Flag, "true")
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
@@ -131,10 +135,7 @@ object Sessions {
     // timestamps, and the default ObjectHashAggregate threshold would
     // re-open the r6 sort-fallback blow-up)
     s.conf.set(graft.operators.Reliable.Flag, "true")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      ObjectHashFallbackThreshold.toString)
+    Invariants.foreach { case (k, v) => s.conf.set(k, v) }
     s.sparkContext.setCheckpointDir(checkpointDir)
     s
   }

@@ -811,16 +811,28 @@ object VersionedTable {
     (op, adds.toSeq, rems.toSeq)
   }
 
-  /** Write the full-snapshot checkpoint for version `v`. Content is a
-    * pure function of the log, so concurrent/duplicate writes are
-    * idempotent — published with an atomic same-dir move.
-    */
   /** [[writeCheckpoint]] for the manifest-scale bench/spec (synthetic
     * logs have no commit path to ride the cadence through).
     */
   private[graft] def checkpointAt(base: String, v: Long): Unit =
     writeCheckpoint(base, v)
 
+  /** The checkpoint cadence, run by every commit path once version `v`
+    * has published: every [[CheckpointEvery]]th version writes one.
+    * Best-effort — replay works without it and its content is a pure
+    * function of the log — so a failed write never fails the commit.
+    * Returns `v`.
+    */
+  private def checkpointed(base: String, v: Long): Long = {
+    if (v % CheckpointEvery == 0)
+      try writeCheckpoint(base, v) catch { case _: Exception => () }
+    v
+  }
+
+  /** Write the full-snapshot checkpoint for version `v`. Content is a
+    * pure function of the log, so concurrent/duplicate writes are
+    * idempotent — published with an atomic same-dir move.
+    */
   private def writeCheckpoint(base: String, v: Long): Unit = {
     val (es, schema) = replay(base, v)
     val entryLines = es.map(formatEntry)
@@ -1592,9 +1604,7 @@ object VersionedTable {
         lines.map("+" + _)).mkString("", "\n", "\n")
       val v = latest + 1L
       publish(base, v, body)
-      if (v % CheckpointEvery == 0)
-        try writeCheckpoint(base, v) catch { case _: Exception => () }
-      v
+      checkpointed(base, v)
     }
   }
 
@@ -2063,9 +2073,9 @@ object VersionedTable {
                          layout: Option[Layout] = None,
                          inheritBucket: Boolean = true): Long =
     retrying(maxAttempts) {
-      val prevV = latestVersion(base)
-      require(prevV.isDefined,
-        s"nothing to replace in $base (first write is a plain append)")
+      val sc = predicateScope(base,
+        s"nothing to replace in $base (first write is a plain append)",
+        pruneRanges, pruneProbes)
       val escaped = df.filter(!coalesce(rowPred, lit(false))).limit(1)
         .collect()
       require(escaped.isEmpty,
@@ -2073,35 +2083,22 @@ object VersionedTable {
           s"e.g. ${escaped.headOption.getOrElse("")} does not satisfy " +
           "the replaced slice — refusing (the Delta replaceWhere " +
           "contract: incoming rows must all match)")
-      val (es, schema) = replay(base, prevV.get)
-      val mapped = ColumnMapping.mapRanges(schema,
-        pruneRanges.map { case (c, lo, hi) => LongRange(c, lo, hi) } ++
-          pruneProbes)
-      val touched = pruneTyped(es, mapped)
-      if (verifyFootprint) {
-        val untouched = es.filterNot(touched.toSet)
-        if (untouched.nonEmpty) {
-          val leaked = readEntries(s, base, untouched, schema)
-            .filter(rowPred).count()
-          require(leaked == 0L,
-            s"REPLACE WHERE footprint violation: $leaked matching row(s) " +
-              s"live in the ${untouched.size} file(s) the scope excluded " +
-              "— the replace would be silently incomplete")
-        }
+      if (verifyFootprint) sc.audit(s, rowPred) { (leaked, files) =>
+        s"REPLACE WHERE footprint violation: $leaked matching row(s) " +
+          s"live in the $files file(s) the scope excluded " +
+          "— the replace would be silently incomplete"
       }
       // remainder rows keep their ids (materialized); the replacement
       // frame has none and takes fresh implicit ids from its file base
-      val rid = featuresAsOf(base, prevV.get).contains("rowid")
       val newState =
-        if (touched.isEmpty) df
-        else readEntries(s, base, touched, schema, withRowIds = rid)
+        if (sc.touched.isEmpty) df
+        else sc.rows(s)
           .filter(!coalesce(rowPred, lit(false)))
           .unionByName(df, allowMissingColumns = true)
-      commitAt(s, base, newState, "replace_where", statsCols, prevV,
-        bloomCols = bloomCols, ndvCols = ndvCols,
+      commitAt(s, base, newState, "replace_where", statsCols,
+        Some(sc.prevV), bloomCols = bloomCols, ndvCols = ndvCols,
         layout = layout, inheritBucket = inheritBucket,
-        footprint = ReadScope(touched.map(_.path).toSet, Some(mapped)))(
-        fresh => (fresh, touched.map(_.path)))
+        footprint = sc.footprint)(sc.replace)
     }
 
   private def retrying(maxAttempts: Int)(attempt: => Long): Long = {
@@ -2116,6 +2113,119 @@ object VersionedTable {
       }
     }
     -1L // unreachable
+  }
+
+  /** A scoped DML's FOOTPRINT at snapshot `prevV` (the Delta
+    * find-touched-files step): `touched` are the snapshot entries whose
+    * zone maps and blooms can hold a row in scope, `addPredicate` what
+    * a racing winner's added rows are tested against ([[ReadScope]]).
+    * Files outside `touched` carry forward as implicit manifest lines.
+    */
+  private final case class DmlScope(base: String, prevV: Long,
+                                    es: Seq[ManifestEntry],
+                                    schema: Option[StructType],
+                                    touched: Seq[ManifestEntry],
+                                    addPredicate: Option[Seq[PruneRange]]) {
+    /** The touched files' rows; on a row-tracking table with their ids
+      * materialized, so the rewrite keeps each survivor's identity.
+      */
+    def rows(s: SparkSession): DataFrame =
+      readEntries(s, base, touched, schema,
+        withRowIds = featuresAsOf(base, prevV).contains("rowid"))
+
+    /** The `verifyFootprint` audit: one counting scan of the files the
+      * scope excluded; refuses with `violation(leaked, files)` when any
+      * of them holds a `rowPred` row.
+      */
+    def audit(s: SparkSession, rowPred: Column)(
+        violation: (Long, Int) => String): Unit = {
+      val untouched = es.filterNot(touched.toSet)
+      if (untouched.nonEmpty) {
+        val leaked = readEntries(s, base, untouched, schema)
+          .filter(rowPred).count()
+        require(leaked == 0L, violation(leaked, untouched.size))
+      }
+    }
+
+    def footprint: ReadFootprint =
+      ReadScope(touched.map(_.path).toSet, addPredicate)
+
+    /** [[commitAt]]'s delta: the fresh files replace exactly `touched`. */
+    def replace(fresh: Seq[String]): (Seq[String], Seq[String]) =
+      (fresh, touched.map(_.path))
+  }
+
+  /** The footprint of a predicate DML on the latest version: the files
+    * whose stats `pruneRanges`/`pruneProbes` cannot rule out (the
+    * caller's row predicate must imply them). `missing` is the refusal
+    * when the table has no version.
+    */
+  private def predicateScope(base: String, missing: String,
+                             pruneRanges: Seq[(String, Long, Long)],
+                             pruneProbes: Seq[PruneRange]): DmlScope = {
+    val prevV = latestVersion(base)
+    require(prevV.isDefined, missing)
+    val (es, schema) = replay(base, prevV.get)
+    val mapped = ColumnMapping.mapRanges(schema,
+      pruneRanges.map { case (c, lo, hi) => LongRange(c, lo, hi) } ++
+        pruneProbes)
+    DmlScope(base, prevV.get, es, schema, pruneTyped(es, mapped),
+      Some(mapped))
+  }
+
+  /** Loans `body` the footprint of a delete-by-key-set on `prevV` and
+    * the anti-join that drops the keyed rows from a frame, with the
+    * distinct non-NULL keys persisted for the loan's duration.
+    *
+    * The footprint is the key extrema, plus bloom probes when the
+    * distinct count fits `probeLimit` (one bounded collect; probing a
+    * sample would be unsound). An empty key set scopes no file and no
+    * added row. Keys must be string or integral: those are the types a
+    * zone-map range describes soundly (`op` names the refusal).
+    */
+  private def withKeyScope(base: String, prevV: Long, op: String,
+                           keyCol: String, keys: DataFrame,
+                           probeLimit: Int)(
+      body: (DmlScope, DataFrame => DataFrame) => Long): Long = {
+    // NULL keys can never match the anti-join (SQL equality), and a
+    // NULL-only frame would give n>0 with null extrema — drop them up
+    // front. A double/timestamp key would fall into the LongRange
+    // branch and misprune.
+    val keyType = keys.schema(keyCol).dataType
+    val isStr = keyType == StringType
+    require(isStr || (keyType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }), s"$op key '$keyCol' must be string or integral, got $keyType")
+    val k = keys.select(col(keyCol)).filter(col(keyCol).isNotNull)
+      .distinct().persist()
+    try {
+      val ext = k.agg(min(col(keyCol)).as("__lo"),
+        max(col(keyCol)).as("__hi"),
+        count(lit(1)).as("__n")).head()
+      val n = ext.getAs[Long]("__n")
+      val (es, schema) = replay(base, prevV)
+      val sc =
+        if (n == 0L) DmlScope(base, prevV, es, schema, Seq.empty, None)
+        else {
+          val range =
+            if (isStr) StrRange(keyCol, ext.getAs[String]("__lo"),
+              ext.getAs[String]("__hi"))
+            else LongRange(keyCol, ext.getAs[Number]("__lo").longValue,
+              ext.getAs[Number]("__hi").longValue)
+          val probes: Seq[PruneRange] =
+            if (n <= probeLimit)
+              normalizedKeyProbe(schema, keyCol,
+                k.collect().map(_.get(0)).toIndexedSeq)
+            else Seq.empty
+          val mapped = ColumnMapping.mapRanges(schema, range +: probes)
+          DmlScope(base, prevV, es, schema, pruneTyped(es, mapped),
+            Some(mapped))
+        }
+      val side = if (n <= probeLimit) broadcast(k) else k
+      body(sc, rows => rows.join(side, rows(keyCol) === side(keyCol),
+        "left_anti"))
+    } finally { k.unpersist(); () }
   }
 
   /** DELETE WHERE as a commit — the GDPR/right-to-be-forgotten path a
@@ -2167,35 +2277,18 @@ object VersionedTable {
                    pruneProbes: Seq[PruneRange] = Nil)(
                    beforePublish: () => Unit): Long =
     retrying(maxAttempts) {
-      val prevV = latestVersion(base)
-      require(prevV.isDefined, s"nothing to delete from in $base")
-      val (es, schema) = replay(base, prevV.get)
-      val mapped = ColumnMapping.mapRanges(schema,
-        pruneRanges.map { case (c, lo, hi) => LongRange(c, lo, hi) } ++
-          pruneProbes)
-      val touched = pruneTyped(es, mapped)
-      if (touched.isEmpty) prevV.get
+      val sc = predicateScope(base, s"nothing to delete from in $base",
+        pruneRanges, pruneProbes)
+      if (sc.touched.isEmpty) sc.prevV
       else {
-        val untouched = es.filterNot(touched.toSet)
-        if (verifyFootprint && untouched.nonEmpty) {
-          val leaked = readEntries(s, base, untouched, schema)
-            .filter(rowPred).count()
-          require(leaked == 0L,
-            s"commitDelete footprint violation: $leaked row(s) matching " +
-              s"rowPred live in the ${untouched.size} file(s) pruneRanges " +
-              "excluded — the delete would be silently incomplete")
+        if (verifyFootprint) sc.audit(s, rowPred) { (leaked, files) =>
+          s"commitDelete footprint violation: $leaked row(s) matching " +
+            s"rowPred live in the $files file(s) pruneRanges " +
+            "excluded — the delete would be silently incomplete"
         }
-        // row tracking: surviving rows keep their ids — read them and
-        // MATERIALIZE into the rewritten files (the rewrite contract)
-        val rid = featuresAsOf(base, prevV.get).contains("rowid")
-        val remaining = readEntries(s, base, touched, schema,
-          withRowIds = rid)
-          .filter(!rowPred)
-        commitAt(s, base, remaining, "delete", statsCols, prevV,
-          beforePublish = beforePublish,
-          bloomCols = bloomCols,
-          footprint = ReadScope(touched.map(_.path).toSet, Some(mapped)))(
-          fresh => (fresh, touched.map(_.path)))
+        commitAt(s, base, sc.rows(s).filter(!rowPred), "delete",
+          statsCols, Some(sc.prevV), beforePublish = beforePublish,
+          bloomCols = bloomCols, footprint = sc.footprint)(sc.replace)
       }
     }
 
@@ -2229,58 +2322,13 @@ object VersionedTable {
     retrying(maxAttempts) {
       val prevV = latestVersion(base)
       require(prevV.isDefined, s"nothing to delete from in $base")
-      // NULL keys can never match the anti-join (SQL equality), and a
-      // NULL-only frame would give n>0 with null extrema (NPE below) —
-      // drop them up front. Key types are gated to what the zone-map
-      // footprint can soundly describe: strings (StrRange) and
-      // integrals (LongRange) — a double/timestamp key would fall into
-      // the LongRange branch and misprune.
-      val keyType = keys.schema(keyCol).dataType
-      val isStr = keyType == StringType
-      require(isStr || (keyType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }), s"commitDeleteKeys key '$keyCol' must be string or integral, " +
-        s"got $keyType")
-      val k = keys.select(col(keyCol)).filter(col(keyCol).isNotNull)
-        .distinct().persist()
-      try {
-        val ext = k.agg(min(col(keyCol)).as("__lo"),
-          max(col(keyCol)).as("__hi"),
-          count(lit(1)).as("__n")).head()
-        val n = ext.getAs[Long]("__n")
-        if (n == 0L) prevV.get
-        else {
-          val ranges: Seq[PruneRange] =
-            if (isStr) Seq(StrRange(keyCol, ext.getAs[String]("__lo"),
-              ext.getAs[String]("__hi")))
-            else Seq(LongRange(keyCol,
-              ext.getAs[Number]("__lo").longValue,
-              ext.getAs[Number]("__hi").longValue))
-          val (es, schema) = replay(base, prevV.get)
-          val probes: Seq[PruneRange] =
-            if (n <= probeLimit)
-              normalizedKeyProbe(schema, keyCol,
-                k.collect().map(_.get(0)).toIndexedSeq)
-            else Seq.empty
-          val mapped = ColumnMapping.mapRanges(schema, ranges ++ probes)
-          val touched = pruneTyped(es, mapped)
-          if (touched.isEmpty) prevV.get
-          else {
-            val rid = featuresAsOf(base, prevV.get).contains("rowid")
-            val rows = readEntries(s, base, touched, schema,
-              withRowIds = rid)
-            val side = if (n <= probeLimit) broadcast(k) else k
-            val remaining = rows.join(side,
-              rows(keyCol) === side(keyCol), "left_anti")
-            commitAt(s, base, remaining, "delete", statsCols, prevV,
-              bloomCols = bloomCols,
-              footprint = ReadScope(touched.map(_.path).toSet,
-                Some(mapped)))(
-              fresh => (fresh, touched.map(_.path)))
-          }
-        }
-      } finally { k.unpersist(); () }
+      withKeyScope(base, prevV.get, "commitDeleteKeys", keyCol, keys,
+          probeLimit) { (sc, dropKeyed) =>
+        if (sc.touched.isEmpty) sc.prevV
+        else commitAt(s, base, dropKeyed(sc.rows(s)), "delete",
+          statsCols, prevV, bloomCols = bloomCols,
+          footprint = sc.footprint)(sc.replace)
+      }
     }
 
   /** KEYED REPLACE in ONE publish (r14 advice): the new snapshot is
@@ -2290,10 +2338,12 @@ object VersionedTable {
     * are already manifest-deleted but their replacements never landed,
     * and a txn-gated replay then reads the truncated state as "prior"
     * (exactly the GraphIndexPipeline adjacency-merge bug this method
-    * closes). Footprint, key-type gating, zone-map/bloom pruning and
-    * the rebase-or-republish discipline are [[commitDeleteKeys]]'s;
-    * only files that can hold a matching key are rewritten, and the
-    * replacement files land in the same manifest publish.
+    * closes). Footprint, key-type gating and zone-map/bloom pruning
+    * come from [[withKeyScope]], shared with [[commitDeleteKeys]], as
+    * does the rebase-or-republish discipline; only files that can hold
+    * a matching key are rewritten, and the replacement files land in
+    * the same manifest publish. An empty key set rewrites no file: the
+    * replacement is appended.
     *
     * `reshape` runs over (remaining ∪ replacement) before the write —
     * the layout seam (e.g. re-clustering by range) since the union
@@ -2325,51 +2375,16 @@ object VersionedTable {
       } else {
         require(!featuresAsOf(base, prevV.get).contains("rowid"),
           s"commitReplaceKeys does not support row-tracking tables ($base)")
-        val keyType = keys.schema(keyCol).dataType
-        val isStr = keyType == StringType
-        require(isStr || (keyType match {
-          case ByteType | ShortType | IntegerType | LongType => true
-          case _ => false
-        }), s"commitReplaceKeys key '$keyCol' must be string or integral, " +
-          s"got $keyType")
-        val k = keys.select(col(keyCol)).filter(col(keyCol).isNotNull)
-          .distinct().persist()
-        try {
-          val ext = k.agg(min(col(keyCol)).as("__lo"),
-            max(col(keyCol)).as("__hi"),
-            count(lit(1)).as("__n")).head()
-          val n = ext.getAs[Long]("__n")
-          val ranges: Seq[PruneRange] =
-            if (n == 0L) Seq.empty
-            else if (isStr) Seq(StrRange(keyCol, ext.getAs[String]("__lo"),
-              ext.getAs[String]("__hi")))
-            else Seq(LongRange(keyCol,
-              ext.getAs[Number]("__lo").longValue,
-              ext.getAs[Number]("__hi").longValue))
-          val (es, schema) = replay(base, prevV.get)
-          val probes: Seq[PruneRange] =
-            if (n > 0L && n <= probeLimit)
-              normalizedKeyProbe(schema, keyCol,
-                k.collect().map(_.get(0)).toIndexedSeq)
-            else Seq.empty
-          val mapped = ColumnMapping.mapRanges(schema, ranges ++ probes)
-          val touched = if (n == 0L) Seq.empty else pruneTyped(es, mapped)
+        withKeyScope(base, prevV.get, "commitReplaceKeys", keyCol, keys,
+            probeLimit) { (sc, dropKeyed) =>
           val out =
-            if (touched.isEmpty) reshape(replacement)
-            else {
-              val rows = readEntries(s, base, touched, schema,
-                withRowIds = false)
-              val side = if (n <= probeLimit) broadcast(k) else k
-              val remaining = rows.join(side,
-                rows(keyCol) === side(keyCol), "left_anti")
-              reshape(remaining.unionByName(replacement))
-            }
-          val fp = if (n == 0L) ReadNothing
-            else ReadScope(touched.map(_.path).toSet, Some(mapped))
+            if (sc.touched.isEmpty) reshape(replacement)
+            else reshape(dropKeyed(sc.rows(s))
+              .unionByName(replacement))
           commitAt(s, base, out, "replace_keys", statsCols, prevV,
-            bloomCols = bloomCols, txn = txn, footprint = fp)(
-            fresh => (fresh, touched.map(_.path)))
-        } finally { k.unpersist(); () }
+            bloomCols = bloomCols, txn = txn,
+            footprint = sc.footprint)(sc.replace)
+        }
       }
     }
 
@@ -2421,13 +2436,10 @@ object VersionedTable {
                       pruneProbes: Seq[PruneRange] = Nil,
                       maxPositions: Long = 10000000L): Long =
     retrying(maxAttempts) {
-      val prevV = latestVersion(base)
-      require(prevV.isDefined, s"nothing to delete from in $base")
-      val (es, schema) = replay(base, prevV.get)
-      val touched = pruneTyped(es, ColumnMapping.mapRanges(schema,
-        pruneRanges.map { case (c, lo, hi) => LongRange(c, lo, hi) } ++
-          pruneProbes))
-      if (touched.isEmpty) prevV.get
+      val sc = predicateScope(base, s"nothing to delete from in $base",
+        pruneRanges, pruneProbes)
+      val DmlScope(_, prevV, es, schema, touched, _) = sc
+      if (touched.isEmpty) prevV
       else {
         // shallow-cloned entries reference the SOURCE's files through
         // relative traversal — DV position bookkeeping is keyed by the
@@ -2439,15 +2451,11 @@ object VersionedTable {
           s"commitDeleteMoR touches shallow-cloned (cross-base) " +
             s"file(s) in $base — use the copy-on-write commitDelete " +
             "or OPTIMIZE to localize the clone first")
-        val untouched = es.filterNot(touched.toSet)
-        if (verifyFootprint && untouched.nonEmpty) {
-          val leaked = readEntries(s, base, untouched, schema)
-            .filter(rowPred).count()
-          require(leaked == 0L,
-            s"commitDeleteMoR footprint violation: $leaked row(s) " +
-              s"matching rowPred live in the ${untouched.size} file(s) " +
-              "pruneRanges excluded — the delete would be silently " +
-              "incomplete")
+        if (verifyFootprint) sc.audit(s, rowPred) { (leaked, files) =>
+          s"commitDeleteMoR footprint violation: $leaked row(s) " +
+            s"matching rowPred live in the $files file(s) " +
+            "pruneRanges excluded — the delete would be silently " +
+            "incomplete"
         }
         // matching LIVE positions (DV-applied read: already-deleted
         // rows can't re-match, so stacked deletes stay exact)
@@ -2478,12 +2486,12 @@ object VersionedTable {
               s"$maxPositions): this is a wide delete — use the " +
               "copy-on-write commitDelete, which rewrites instead of " +
               "accumulating vectors that large")
-          if (cnt == 0L) prevV.get // provable no-op: commit nothing
+          if (cnt == 0L) prevV // provable no-op: commit nothing
           else {
             val byFile = matchedDf.collect()
               .map(r => (r.getString(0), r.getLong(1)))
               .groupBy(_._1).map { case (p, ps) => p -> ps.map(_._2).toSeq }
-            val next = prevV.get + 1L
+            val next = prevV + 1L
             val dir = f"d$next-${java.util.UUID.randomUUID().toString.take(8)}"
             Files.createDirectories(Paths.get(base, dir))
             // keyed by the scan-key suffix: byFile's keys come from
@@ -2509,9 +2517,7 @@ object VersionedTable {
               swapped.flatMap(_._2).map(e => "+" + formatEntry(e)))
               .mkString("", "\n", "\n")
             publish(base, next, body)
-            if (next % CheckpointEvery == 0)
-              try writeCheckpoint(base, next) catch { case _: Exception => () }
-            next
+            checkpointed(base, next)
           }
         } finally { matchedDf.unpersist(); () }
       }
@@ -2544,20 +2550,13 @@ object VersionedTable {
     require(sets.map(_._1).distinct.size == sets.size,
       s"duplicate SET columns: ${sets.map(_._1).mkString(", ")}")
     retrying(maxAttempts) {
-      val prevV = latestVersion(base)
-      require(prevV.isDefined, s"nothing to update in $base")
-      val (es, schema) = replay(base, prevV.get)
-      val mapped = ColumnMapping.mapRanges(schema,
-        pruneRanges.map { case (c, lo, hi) => LongRange(c, lo, hi) } ++
-          pruneProbes)
-      val touched = pruneTyped(es, mapped)
-      if (touched.isEmpty) prevV.get
+      val sc = predicateScope(base, s"nothing to update in $base",
+        pruneRanges, pruneProbes)
+      if (sc.touched.isEmpty) sc.prevV
       else {
         // updated rows KEEP their identity (the row-tracking UPDATE
         // contract: an update is a new version of the same row)
-        val rid = featuresAsOf(base, prevV.get).contains("rowid")
-        val rows = readEntries(s, base, touched, schema,
-          withRowIds = rid)
+        val rows = sc.rows(s)
         val setMap = sets.toMap
         setMap.keys.foreach(c => require(rows.columns.contains(c),
           s"SET column '$c' is not a table column " +
@@ -2568,10 +2567,8 @@ object VersionedTable {
               .cast(rows.schema(c).dataType).as(c))
             .getOrElse(col(c))
         }: _*)
-        commitAt(s, base, rewritten, "update", statsCols, prevV,
-          bloomCols = bloomCols,
-          footprint = ReadScope(touched.map(_.path).toSet, Some(mapped)))(
-          fresh => (fresh, touched.map(_.path)))
+        commitAt(s, base, rewritten, "update", statsCols, Some(sc.prevV),
+          bloomCols = bloomCols, footprint = sc.footprint)(sc.replace)
       }
     }
   }
@@ -3457,8 +3454,7 @@ object VersionedTable {
         }
         throw t
     }
-    if ((forkV + 1L) % CheckpointEvery == 0)
-      try writeCheckpoint(base, forkV + 1L) catch { case _: Exception => () }
+    checkpointed(base, forkV + 1L)
     // step 4: the branch state now IS main — consume it
     dropBranch(base, name)
     forkV + 1L
@@ -3525,9 +3521,7 @@ object VersionedTable {
           removes.map("-" + _) ++ adds.map(e => "+" + formatEntry(e)))
           .mkString("", "\n", "\n")
         publish(base, next, body)
-        if (next % CheckpointEvery == 0)
-          try writeCheckpoint(base, next) catch { case _: Exception => () }
-        next
+        checkpointed(base, next)
       }
     }
 
@@ -3545,10 +3539,7 @@ object VersionedTable {
   def analyze(s: SparkSession, base: String,
               ndvCols: Seq[String], maxAttempts: Int = 5): Long = {
     require(ndvCols.nonEmpty, "analyze needs at least one column")
-    ndvCols.foreach { c =>
-      require(!c.contains('=') && !c.contains('\t') && !c.contains('#'),
-        s"ndv column name '$c' would corrupt the manifest line format")
-    }
+    ndvCols.foreach(requireTokenName("ndv", _))
     retrying(maxAttempts) {
       val latest = latestVersion(base).getOrElse(
         throw new IllegalArgumentException(s"nothing to analyze in $base"))
@@ -3593,9 +3584,7 @@ object VersionedTable {
           restated.map(e => "+" + formatEntry(e)))
           .mkString("", "\n", "\n")
         publish(base, next, body)
-        if (next % CheckpointEvery == 0)
-          try writeCheckpoint(base, next) catch { case _: Exception => () }
-        next
+        checkpointed(base, next)
       }
     }
   }
@@ -3630,11 +3619,7 @@ object VersionedTable {
     require(dup.isEmpty,
       s"duplicate column name(s) in ADD COLUMNS: ${dup.mkString(", ")}")
     retrying(maxAttempts) {
-      val latest = latestVersion(base).getOrElse(
-        throw new IllegalArgumentException(s"no graft table at $base"))
-      val prev = declaredSchema(base, latest).getOrElse(
-        throw new IllegalArgumentException(
-          s"$base predates schema headers — no declared schema to alter"))
+      val (latest, prev) = alterBase(base)
       val prevNames = ColumnMapping.visible(prev)
         .fieldNames.map(_.toLowerCase).toSet
       newCols.foreach { f =>
@@ -3653,9 +3638,7 @@ object VersionedTable {
       publish(base, next,
         Seq(s"#op=alter_schema", schemaHeader(declared))
           .mkString("", "\n", "\n"))
-      if (next % CheckpointEvery == 0)
-        try writeCheckpoint(base, next) catch { case _: Exception => () }
-      next
+      checkpointed(base, next)
     }
   }
 
@@ -3767,9 +3750,7 @@ object VersionedTable {
     publish(base, next,
       Seq(s"#op=alter_schema", s"#features=${feats.mkString(",")}",
         schemaHeader(declared)).mkString("", "\n", "\n"))
-    if (next % CheckpointEvery == 0)
-      try writeCheckpoint(base, next) catch { case _: Exception => () }
-    next
+    checkpointed(base, next)
   }
 
   /** Change data feed between two committed versions: one row per key
@@ -3929,6 +3910,17 @@ object VersionedTable {
       StructType(p.fields ++ added)
   }
 
+  /** Refuses a column name that would corrupt the manifest line format
+    * as a `kind` stat token's key: `=`, tab and `#` delimit tokens, and
+    * `extra` lists the delimiters of kinds whose token names several
+    * columns.
+    */
+  private def requireTokenName(kind: String, c: String,
+                               extra: String = ""): Unit =
+    require(!c.exists(ch => ch == '=' || ch == '\t' || ch == '#' ||
+      extra.contains(ch)),
+      s"$kind column name '$c' would corrupt the manifest line format")
+
   /** One commit ATTEMPT at pinned snapshot `prevV`: write data files
     * to an attempt-private dir, collect stats, publish the DELTA
     * manifest at prevV+1 (a ConcurrentModificationException here means
@@ -3977,17 +3969,13 @@ object VersionedTable {
       // zone-map absent-stat rule)
       declared.filter(df.columns.contains)
     }
-    effNdvCols.foreach { c =>
-      require(!c.contains('=') && !c.contains('\t') && !c.contains('#'),
-        s"ndv column name '$c' would corrupt the manifest line format")
-    }
+    effNdvCols.foreach(requireTokenName("ndv", _))
     txn.foreach { case (appId, _) =>
       require(appId.nonEmpty && !appId.exists(c => c == '\n' || c == '\t'),
         s"txn appId must be non-empty and tab/newline-free: '$appId'")
     }
     statsCols.foreach { c =>
-      require(!c.contains('=') && !c.contains('\t') && !c.contains('#'),
-        s"stats column name '$c' would corrupt the manifest line format")
+      requireTokenName("stats", c)
       val ok = df.schema(c).dataType match {
         case ByteType | ShortType | IntegerType | LongType | DateType |
              TimestampType | TimestampNTZType | StringType => true
@@ -3997,8 +3985,7 @@ object VersionedTable {
         s"or string for zone maps, got ${df.schema(c).dataType}")
     }
     bloomCols.foreach { c =>
-      require(!c.contains('=') && !c.contains('\t') && !c.contains('#'),
-        s"bloom column name '$c' would corrupt the manifest line format")
+      requireTokenName("bloom", c)
       val ok = df.schema(c).dataType match {
         case IntegerType | LongType | StringType => true
         case _ => false
@@ -4038,11 +4025,7 @@ object VersionedTable {
         })
     }
     effLayout.foreach { l =>
-      l.cols.foreach { c =>
-        require(!c.contains('=') && !c.contains('\t') && !c.contains('#') &&
-          !c.contains(','),
-          s"${l.kind} column name '$c' would corrupt the manifest line format")
-      }
+      l.cols.foreach(requireTokenName(l.kind, _, ","))
       // bucket hashes and truncate floors are defined (and murmur3 is
       // stable across engines) for these key types only
       def intLongOrString(c: String): Unit = {
@@ -4329,10 +4312,7 @@ object VersionedTable {
           }
       }
     }
-    if (attemptV % CheckpointEvery == 0)
-      // best-effort: replay works without it, content is deterministic
-      try writeCheckpoint(base, attemptV) catch { case _: Exception => () }
-    attemptV
+    checkpointed(base, attemptV)
   }
 
   /** Per-file row count + min/max of the declared stats columns over a
