@@ -208,7 +208,10 @@ object Main {
     @tailrec def parse(rest: List[String]): Unit = rest match {
       case Nil =>
       case (opt @ ("--pause" | "-p")) :: v :: t =>
-        pause = intValue(opt, v); parse(t)
+        pause = intValue(opt, v)
+        if (pause < 0)
+          throw BadParameter(s"Option '$opt' must be 0 or more, got '$v'")
+        parse(t)
       case "--once" :: t => once = true; parse(t)
       case p :: t if !p.startsWith("-") => pos :+= p; parse(t)
       case opt :: Nil if Set("--pause", "-p")(opt) => missingValue(opt)

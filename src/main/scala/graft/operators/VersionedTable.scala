@@ -2244,7 +2244,9 @@ object VersionedTable {
     * it's opt-in: the audit mode for when the predicate's footprint
     * is hand-derived rather than mechanical). Returns the new version,
     * or the current one unchanged when no file can contain a match (a
-    * provable no-op commits nothing). A delete that removes EVERY row
+    * provable no-op commits nothing; `verifyFootprint` still audits
+    * it, so a footprint that excludes every matching row refuses
+    * rather than passing as a no-op). A delete that removes EVERY row
     * publishes an empty manifest that still reads cleanly (zero-row
     * frame under the declared schema). Deleted rows remain
     * time-travelable at older versions until [[vacuum]] passes
@@ -2279,17 +2281,15 @@ object VersionedTable {
     retrying(maxAttempts) {
       val sc = predicateScope(base, s"nothing to delete from in $base",
         pruneRanges, pruneProbes)
-      if (sc.touched.isEmpty) sc.prevV
-      else {
-        if (verifyFootprint) sc.audit(s, rowPred) { (leaked, files) =>
-          s"commitDelete footprint violation: $leaked row(s) matching " +
-            s"rowPred live in the $files file(s) pruneRanges " +
-            "excluded — the delete would be silently incomplete"
-        }
-        commitAt(s, base, sc.rows(s).filter(!rowPred), "delete",
-          statsCols, Some(sc.prevV), beforePublish = beforePublish,
-          bloomCols = bloomCols, footprint = sc.footprint)(sc.replace)
+      if (verifyFootprint) sc.audit(s, rowPred) { (leaked, files) =>
+        s"commitDelete footprint violation: $leaked row(s) matching " +
+          s"rowPred live in the $files file(s) pruneRanges " +
+          "excluded — the delete would be silently incomplete"
       }
+      if (sc.touched.isEmpty) sc.prevV
+      else commitAt(s, base, sc.rows(s).filter(!rowPred), "delete",
+        statsCols, Some(sc.prevV), beforePublish = beforePublish,
+        bloomCols = bloomCols, footprint = sc.footprint)(sc.replace)
     }
 
   /** DELETE BY KEY SET, keys as a DATAFRAME — [[commitDelete]] for the
@@ -2439,6 +2439,12 @@ object VersionedTable {
       val sc = predicateScope(base, s"nothing to delete from in $base",
         pruneRanges, pruneProbes)
       val DmlScope(_, prevV, es, schema, touched, _) = sc
+      if (verifyFootprint) sc.audit(s, rowPred) { (leaked, files) =>
+        s"commitDeleteMoR footprint violation: $leaked row(s) " +
+          s"matching rowPred live in the $files file(s) " +
+          "pruneRanges excluded — the delete would be silently " +
+          "incomplete"
+      }
       if (touched.isEmpty) prevV
       else {
         // shallow-cloned entries reference the SOURCE's files through
@@ -2451,12 +2457,6 @@ object VersionedTable {
           s"commitDeleteMoR touches shallow-cloned (cross-base) " +
             s"file(s) in $base — use the copy-on-write commitDelete " +
             "or OPTIMIZE to localize the clone first")
-        if (verifyFootprint) sc.audit(s, rowPred) { (leaked, files) =>
-          s"commitDeleteMoR footprint violation: $leaked row(s) " +
-            s"matching rowPred live in the $files file(s) " +
-            "pruneRanges excluded — the delete would be silently " +
-            "incomplete"
-        }
         // matching LIVE positions (DV-applied read: already-deleted
         // rows can't re-match, so stacked deletes stay exact)
         val rawPhys = readFiles(s, base, touched.map(_.path), schema)

@@ -60,11 +60,22 @@ object WatchPipeline {
     * (below) overwrites a batch_id partition, so a crash between sink
     * commit and checkpoint commit replays into the same partition
     * instead of appending duplicates.
+    *
+    * The query runs no no-data micro-batches: without them a drain is
+    * one micro-batch, not one plus a trailing batch that only moves the
+    * watermark. Nothing is lost by that. The only stateful operator,
+    * the dedup, emits no row when it evicts a key, so a no-data batch
+    * can never add a sink row; the next data batch evicts the expired
+    * keys itself. The watermark it filters with is carried by the
+    * commit log (`nextBatchWatermarkMs`), so a restarted query starts
+    * from the same one. The query clones the session conf when it is
+    * created, so the setting is made on `spark` only around `start()`
+    * and the caller's own setting is then put back.
     */
   def start(spark: SparkSession, rawDir: String, checkpointDir: String,
             analyzer: ExpenseAnalyzer, sink: (DataFrame, Long) => Unit,
-            trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    contentAddressed(rawScans(spark, rawDir))
+            trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
+    val writer = contentAddressed(rawScans(spark, rawDir))
       .writeStream
       .queryName("graft_watch")
       .trigger(trigger)
@@ -74,7 +85,16 @@ object WatchPipeline {
         sink(ReceiptPipeline.summarize(ReceiptPipeline.flattenSummary(responses)),
           batchId)
       }
-      .start()
+    val prior = spark.conf.getAll.get(NoDataBatches)
+    spark.conf.set(NoDataBatches, "false")
+    try writer.start()
+    finally prior match {
+      case Some(v) => spark.conf.set(NoDataBatches, v)
+      case None => spark.conf.unset(NoDataBatches)
+    }
+  }
+
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
 
   /** Idempotent-per-batch parquet sink: replaying batch N overwrites
     * exactly batch N's partition.

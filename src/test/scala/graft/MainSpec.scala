@@ -187,6 +187,8 @@ class MainSpec extends SparkSuite {
     assert(c3 === 2 && o3.head.contains("requires an argument"))
     val (c4, o4) = runCli("db", "init", "--db-url")
     assert(c4 === 2 && o4.head.contains("requires an argument"))
+    val (c5, o5) = runCli("watch", d1, d2, "--pause", "-3")
+    assert(c5 === 2 && o5.head.contains("must be 0 or more"), o5)
   }
 
   test("same-directory guard sees through path aliases") {

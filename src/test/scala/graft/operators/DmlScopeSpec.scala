@@ -3,11 +3,14 @@ package graft.operators
 import java.nio.file.{Files, Paths}
 
 import graft.{SparkSuite, TempDirs}
+import graft.streaming.WatchPipelineSpec.JobDescriptions
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField}
 
 /** The shared DML paths of [[VersionedTable]]: the predicate scope's
-  * footprint audit on the merge-on-read delete, the key-set scope's
+  * footprint audit on both deletes (also where the footprint excludes
+  * every file), the key-set scope's
   * extrema-only and empty-key footprints, its key-type gate, and the
   * checkpoint cadence every commit kind publishes through. One case
   * per row; each runs on a fresh table.
@@ -44,7 +47,49 @@ class DmlScopeSpec extends SparkSuite {
     ks.toDF("k")
   }
 
+  /** Both predicate deletes, scoped to a `k` range no file overlaps. */
+  private val outOfRangeDeletes: Seq[(String, (String, Column, Boolean) => Long)] = Seq(
+    ("commitDelete", (base, pred, verify) => VersionedTable.commitDelete(spark, base,
+      pred, pruneRanges = Seq(("k", 100L, 200L)), verifyFootprint = verify)),
+    ("commitDeleteMoR", (base, pred, verify) => VersionedTable.commitDeleteMoR(spark, base,
+      pred, pruneRanges = Seq(("k", 100L, 200L)), verifyFootprint = verify)))
+
+  /** `body`'s result and the number of Spark jobs it ran. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new JobDescriptions
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val r = body
+      jobs.fence(spark)
+      (r, jobs.seen.size - 1) // less the fence's own marker job
+    } finally spark.sparkContext.removeSparkListener(jobs)
+  }
+
   private val dmlCases: Seq[(String, String => Unit)] = Seq(
+    ("verifyFootprint audits a delete whose footprint excludes every file",
+      base => {
+        binned(base, 1)
+        for ((op, delete) <- outOfRangeDeletes) {
+          val e = intercept[IllegalArgumentException] {
+            delete(base, col("k") === 3L, true)
+          }
+          assert(e.getMessage.contains(s"$op footprint violation"), e.getMessage)
+          assert(VersionedTable.latestVersion(base) === Some(1L))
+        }
+        assert(values(base).keySet === (0L until 10L).toSet)
+      }),
+    ("a delete whose footprint excludes every file commits nothing; only the audit scans",
+      base => {
+        binned(base, 1)
+        for ((op, delete) <- outOfRangeDeletes) {
+          val (audited, auditJobs) = jobsOf(delete(base, col("k") === 500L, true))
+          assert(audited === 1L && auditJobs > 0, op)
+          val (unaudited, jobs) = jobsOf(delete(base, col("k") === 500L, false))
+          assert(unaudited === 1L && jobs === 0, op)
+        }
+        assert(VersionedTable.latestVersion(base) === Some(1L))
+        assert(values(base).keySet === (0L until 10L).toSet)
+      }),
     ("commitDeleteMoR verifyFootprint refuses a too-narrow pruneRanges",
       base => {
         binned(base, 2)

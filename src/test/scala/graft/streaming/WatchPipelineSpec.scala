@@ -1,19 +1,22 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import graft.SparkSuite
 import graft.functions.SyntheticImages
 import graft.receipts.{ExpenseAnalyzer, TextractJson}
 
 /** T1-T4 semantics: end-to-end AvailableNow run, checkpointed
-  * exactly-once across restarts (T3), and cross-batch content dedup.
+  * exactly-once across restarts (T3), cross-batch content dedup, and
+  * a drain that is one micro-batch (no watermark-only trailing batch).
   */
 class WatchPipelineSpec extends SparkSuite {
 
@@ -74,6 +77,43 @@ class WatchPipelineSpec extends SparkSuite {
     assert(listing.isEmpty, listing)
   }
 
+  private def batchDirs(out: String): Seq[String] =
+    Option(new java.io.File(out).list()).toSeq.flatten.filter(_.startsWith("batch_id=")).sorted
+
+  test("a --once drain is one micro-batch: one progress event, one batch_id partition") {
+    import WatchPipelineSpec._
+    val (raw, out, ckpt, _) = freshDirs()
+    for (i <- 1 to 6) scan(raw, f"Scan_$i%03d.png", i)
+    scan(raw, "Rescan_001.png", 1)
+
+    val events = new QueryEvents
+    spark.streams.addListener(events)
+    try {
+      WatchPipeline.runAvailableNow(spark, raw.toString, out, ckpt, new StubAnalyzer)
+      events.awaitTerminated()
+    } finally spark.streams.removeListener(events)
+
+    assert(events.progress.asScala.map(_.batchId).toSeq === Seq(0L))
+    assert(batchDirs(out) === Seq("batch_id=0"))
+    assert(spark.read.parquet(out).count() === 6)
+  }
+
+  test("start leaves the caller's noDataMicroBatches setting as it was") {
+    import WatchPipelineSpec._
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    for (prior <- Seq(None, Some("true"))) {
+      val (raw, out, ckpt, _) = freshDirs()
+      scan(raw, "Scan_001.png", 1)
+      prior.foreach(spark.conf.set(key, _))
+      try {
+        WatchPipeline.runAvailableNow(spark, raw.toString, out, ckpt, new StubAnalyzer)
+        assert(spark.conf.getAll.get(key) === prior)
+        // the query itself still ran without the trailing batch
+        assert(batchDirs(out) === Seq("batch_id=0"), prior)
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("parquet batch sink is idempotent per batchId (replay-safe T3)") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_sink").toString
@@ -128,6 +168,23 @@ object WatchPipelineSpec {
         ("OTHER", Some("CASHIER"), id.take(4))),
         Seq(("PATCH", "$6.99", "1")))
     }
+  }
+
+  /** The progress events of the queries that run while registered;
+    * `awaitTerminated` waits for a query's end, which the listener bus
+    * delivers after all of its progress events.
+    */
+  final class QueryEvents extends StreamingQueryListener {
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    private val terminated = new CountDownLatch(1)
+
+    def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
+    def onQueryTerminated(e: QueryTerminatedEvent): Unit = terminated.countDown()
+
+    def awaitTerminated(): Unit =
+      require(terminated.await(30, TimeUnit.SECONDS),
+        "no query-terminated event arrived")
   }
 
   /** Descriptions of the jobs started while registered. */
