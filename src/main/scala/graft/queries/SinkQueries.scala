@@ -1,7 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.operators.VersionedTable
 
 /** Sink surface registered as a driver-checkable query: q73 pushes an
   * aggregate THROUGH the K1 JDBC batch-insert path (Derby in-memory —
@@ -18,6 +20,42 @@ object SinkQueries {
   // reference's batch-insert semantics), so reusing one db across
   // registry re-runs would accumulate duplicates
   private val runId = new java.util.concurrent.atomic.AtomicLong
+
+  /** The table fixtures' batch sink (the reference's one insert per
+    * chunk, `db.py:5-13`): one `commitAppend` per distinct `bin` of
+    * `binned`, each that bin's `cols` as one file. Bins commit in
+    * ascending order of the bin column's own type (numeric for long
+    * bins: 0..15, never "10" before "2"), so on an empty table the
+    * i-th bin in that order (from 0) is version i + 1, and both
+    * engines count one file per bin present (an empty bin writes no
+    * file).
+    */
+  private[queries] def appendBins(s: SparkSession, base: String,
+                                  binned: DataFrame, cols: Seq[String],
+                                  statsCols: Seq[String],
+                                  bloomCols: Seq[String] = Nil,
+                                  ndvCols: Seq[String] = Nil): Unit =
+    binned.select(col("bin")).distinct().collect().map(_.get(0))
+      .sortWith(_.asInstanceOf[Comparable[Any]].compareTo(_) < 0)
+      .foreach { v =>
+        VersionedTable.commitAppend(s, base,
+          binned.filter(col("bin") === lit(v)).select(cols.map(col): _*)
+            .coalesce(1),
+          statsCols = statsCols, bloomCols = bloomCols, ndvCols = ndvCols)
+      }
+
+  /** `t` with `bin` = `n` equal-width ranges of the long column `key`
+    * (`(key - lo) * n div span`, all operands non-negative, so Spark
+    * `div` ≡ DuckDB `//` in the oracle twins), plus the `lo` and `span`
+    * of the one min/max job that bounds them.
+    */
+  private[queries] def rangeBins(t: DataFrame, key: String,
+                                 n: Int): (DataFrame, Long, Long) = {
+    val b = t.agg(min(col(key)), max(col(key))).head()
+    val (lo, span) = (b.getLong(0), b.getLong(1) - b.getLong(0) + 1)
+    (t.withColumn("bin", expr(s"($key - ${lo}L) * $n div ${span}L")),
+      lo, span)
+  }
 
   val all: Seq[Q] = Seq(
     Q("q73_jdbc_roundtrip",
@@ -117,7 +155,7 @@ object SinkQueries {
     // and two 16-group span aggregates.
     Q("q133_zorder_layout",
       (s, d) => {
-        val zvalue = graft.operators.VersionedTable.zValue _
+        val zvalue = VersionedTable.zValue _
         // persisted: t feeds the bounds aggregate AND the binned frame,
         // x feeds both span aggregates — without the persists the scan
         // and the 32-term z expression would re-run per consumer
@@ -220,12 +258,12 @@ object SinkQueries {
           .select(col("user_id"), col("ts"), col("event_id"),
             graft.functions.ColumnOps.e2(col("value")).as("value_e2"))
         (0 to 2).foreach { b =>
-          graft.operators.VersionedTable.commitMerge(
+          VersionedTable.commitMerge(
             s, base, p.filter(pmod(col("event_id"), lit(3)) === b),
             keyCol = "user_id", ordCols = Seq("ts", "event_id"))
         }
         (1 to 3).map { v =>
-          graft.operators.VersionedTable.readVersion(s, base, v)
+          VersionedTable.readVersion(s, base, v)
             .agg(count(lit(1)).as("n_users"),
               sum(col("value_e2")).as("state_value_e2"),
               max(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")).as("max_ts"))
@@ -277,12 +315,11 @@ object SinkQueries {
           .select(col("user_id"), col("ts"), col("event_id"),
             graft.functions.ColumnOps.e2(col("value")).as("value_e2"))
         (0 to 2).foreach { b =>
-          graft.operators.VersionedTable.commitMerge(
+          VersionedTable.commitMerge(
             s, base, p.filter(pmod(col("event_id"), lit(3)) === b),
             keyCol = "user_id", ordCols = Seq("ts", "event_id"))
         }
-        graft.operators.VersionedTable
-          .changesBetween(s, base, 2L, 3L, keyCol = "user_id")
+        VersionedTable.changesBetween(s, base, 2L, 3L, keyCol = "user_id")
           .select(col("user_id"), col("change_type"),
             date_format(col("ts_old"), "yyyy-MM-dd HH:mm:ss").as("ts_old"),
             col("value_e2_old"),
@@ -347,15 +384,15 @@ object SinkQueries {
           .select(col("user_id"), col("ts"), col("event_id"),
             graft.functions.ColumnOps.e2(col("value")).as("value_e2"))
         (0 to 2).foreach { b =>
-          graft.operators.VersionedTable.commitMerge(
+          VersionedTable.commitMerge(
             s, base, p.filter(pmod(col("event_id"), lit(3)) === b),
             keyCol = "user_id", ordCols = Seq("ts", "event_id"))
         }
         val grp = pmod(col("user_id"), lit(10)).as("grp")
-        val v2agg = graft.operators.VersionedTable.readVersion(s, base, 2L)
+        val v2agg = VersionedTable.readVersion(s, base, 2L)
           .groupBy(grp)
           .agg(count(lit(1)).as("n_v2"), sum(col("value_e2")).as("sum_v2"))
-        val delta = graft.operators.VersionedTable
+        val delta = VersionedTable
           .changesBetween(s, base, 2L, 3L, keyCol = "user_id")
           .groupBy(pmod(col("user_id"), lit(10)).as("grp"))
           .agg(
@@ -434,7 +471,6 @@ object SinkQueries {
     // the domain with assert_true).
     Q("q153_manifest_skipping",
       (s, d) => {
-        import graft.operators.VersionedTable
         val zvalue = VersionedTable.zValue _
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
@@ -456,19 +492,11 @@ object SinkQueries {
         def build(binExpr: String,
                   tag: String): org.apache.spark.sql.DataFrame = {
           val base = graft.TempDirs.scoped(s"graft_q153_$tag")
-          val binned = t.withColumn("bin", expr(binExpr))
           // ≤16 bins present in the data (both engines enumerate the
           // same set — empty bins write no file on either side)
-          val bins = binned.select(col("bin")).distinct()
-            .collect().map(_.getLong(0)).sorted
-          bins.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("l_partkey"),
-                  col("l_suppkey"), col("qty_e2"))
-                .coalesce(1),
-              statsCols = Seq("l_partkey", "l_suppkey"))
-          }
+          appendBins(s, base, t.withColumn("bin", expr(binExpr)),
+            Seq("l_orderkey", "l_partkey", "l_suppkey", "qty_e2"),
+            statsCols = Seq("l_partkey", "l_suppkey"))
           val v = VersionedTable.latestVersion(base).get
           val es = VersionedTable.entries(base, v)
           val kept = VersionedTable.prune(es, Seq(("l_partkey", lo, hi)))
@@ -563,25 +591,14 @@ object SinkQueries {
     // repays); vacuum is driver-plane manifest arithmetic + deletes.
     Q("q155_compaction_lifecycle",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q155")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 16 div ${ohi - olo + 1}L"))
-        val bins = binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        bins.foreach { bn =>
-          VersionedTable.commitAppend(s, base,
-            binned.filter(col("bin") === bn)
-              .select(col("l_orderkey"), col("l_partkey"), col("qty_e2"))
-              .coalesce(1),
-            statsCols = Seq("l_partkey"))
-        }
+        appendBins(s, base, rangeBins(t, "l_orderkey", 16)._1,
+          Seq("l_orderkey", "l_partkey", "qty_e2"),
+          statsCols = Seq("l_partkey"))
         val preV = VersionedTable.latestVersion(base).get
         val filesBefore = VersionedTable.entries(base, preV).size.toLong
         val postV = VersionedTable.compact(s, base, numFiles = 4,
@@ -641,7 +658,6 @@ object SinkQueries {
     // driver-plane (GraftDataSource.scala scaladoc).
     Q("q157_dsv2_skipping",
       (s, d) => {
-        import graft.operators.VersionedTable
         val zvalue = VersionedTable.zValue _
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
@@ -659,17 +675,9 @@ object SinkQueries {
         def build(binExpr: String,
                   tag: String): org.apache.spark.sql.DataFrame = {
           val base = graft.TempDirs.scoped(s"graft_q157_$tag")
-          val binned = t.withColumn("bin", expr(binExpr))
-          val bins = binned.select(col("bin")).distinct()
-            .collect().map(_.getLong(0)).sorted
-          bins.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("l_partkey"),
-                  col("l_suppkey"), col("qty_e2"))
-                .coalesce(1),
-              statsCols = Seq("l_partkey", "l_suppkey"))
-          }
+          appendBins(s, base, t.withColumn("bin", expr(binExpr)),
+            Seq("l_orderkey", "l_partkey", "l_suppkey", "qty_e2"),
+            statsCols = Seq("l_partkey", "l_suppkey"))
           // the engine-facing read: format + ordinary filter, no
           // pruning API in sight
           val agg = s.read.format("graft").load(base)
@@ -776,12 +784,11 @@ object SinkQueries {
           .select(col("user_id"), col("ts"), col("event_id"),
             graft.functions.ColumnOps.e2(col("value")).as("value_e2"))
         (0 to 2).foreach { b =>
-          graft.operators.VersionedTable.commitMerge(
+          VersionedTable.commitMerge(
             s, base, p.filter(pmod(col("event_id"), lit(3)) === b),
             keyCol = "user_id", ordCols = Seq("ts", "event_id"))
         }
-        graft.operators.VersionedTable
-          .changesPerCommit(s, base, 0L, 3L, keyCol = "user_id")
+        VersionedTable.changesPerCommit(s, base, 0L, 3L, keyCol = "user_id")
           .select(col("version"), col("user_id"), col("change_type"),
             date_format(col("ts_old"), "yyyy-MM-dd HH:mm:ss").as("ts_old"),
             col("value_e2_old"),
@@ -854,7 +861,6 @@ object SinkQueries {
     // filter translation that keeps the wrong file set hash-fails.
     Q("q159_string_date_skipping",
       (s, d) => {
-        import graft.operators.VersionedTable
         val t = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority"),
             to_date(col("o_orderdate")).as("o_date"),
@@ -876,17 +882,9 @@ object SinkQueries {
                      org.apache.spark.sql.DataFrame,
                    tag: String): org.apache.spark.sql.DataFrame = {
           val base = graft.TempDirs.scoped(s"graft_q159_$tag")
-          val binned = t.withColumn("bin", binCol)
-          val bins = binned.select(col("bin")).distinct()
-            .collect().map(_.get(0)).sortBy(_.toString)
-          bins.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === lit(bn))
-                .select(col("o_orderkey"), col("o_orderpriority"),
-                  col("o_date"), col("price_e2"))
-                .coalesce(1),
-              statsCols = Seq(statsCol))
-          }
+          appendBins(s, base, t.withColumn("bin", binCol),
+            Seq("o_orderkey", "o_orderpriority", "o_date", "price_e2"),
+            statsCols = Seq(statsCol))
           val agg = pred(s.read.format("graft").load(base))
             .agg(count(lit(1)).as("n_rows"),
               sum(col("price_e2")).as("price_e2")).head()
@@ -1035,7 +1033,6 @@ object SinkQueries {
     // commit — exactly-once across restarts, checked by arithmetic.
     Q("q164_stream_format_tail",
       (s, d) => {
-        import graft.operators.VersionedTable
         import org.apache.spark.sql.streaming.Trigger
         val base = graft.TempDirs.scoped("graft_q164")
         val sink = graft.TempDirs.scoped("graft_q164_sink")
@@ -1102,26 +1099,15 @@ object SinkQueries {
     // time travel hash-fails.
     Q("q165_sql_delete",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q165")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
+        val (binned, olo, span) = rangeBins(t, "l_orderkey", 8)
         val (dlo, dhi) = (olo + (span * 5) / 16, olo + (span * 7) / 16 - 1)
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 8 div ${span}L"))
-        val bins = binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        bins.foreach { bn =>
-          VersionedTable.commitAppend(s, base,
-            binned.filter(col("bin") === bn)
-              .select(col("l_orderkey"), col("qty_e2")).coalesce(1),
-            statsCols = Seq("l_orderkey"))
-        }
+        appendBins(s, base, binned, Seq("l_orderkey", "qty_e2"),
+          statsCols = Seq("l_orderkey"))
         s.sql("DROP TABLE IF EXISTS graft_q165_t")
         s.sql(s"CREATE TABLE graft_q165_t USING graft OPTIONS (path '$base')")
         try {
@@ -1198,7 +1184,6 @@ object SinkQueries {
     // the delete diff hash-fails.
     Q("q166_stream_change_feed",
       (s, d) => {
-        import graft.operators.VersionedTable
         import org.apache.spark.sql.streaming.Trigger
         val base = graft.TempDirs.scoped("graft_q166")
         val sink = graft.TempDirs.scoped("graft_q166_sink")
@@ -1305,7 +1290,6 @@ object SinkQueries {
     // mis-decoded epoch-day, a collation-divergent string bound).
     Q("q167_manifest_aggregates",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q167")
         val t = Tables.orders(s, d)
           .select(col("o_orderkey"),
@@ -1370,26 +1354,15 @@ object SinkQueries {
     // row, an over-rewritten bin, or broken time travel hash-fails.
     Q("q168_sql_update",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q168")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
+        val (binned, olo, span) = rangeBins(t, "l_orderkey", 8)
         val (dlo, dhi) = (olo + (span * 5) / 16, olo + (span * 7) / 16 - 1)
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 8 div ${span}L"))
-        val bins = binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        bins.foreach { bn =>
-          VersionedTable.commitAppend(s, base,
-            binned.filter(col("bin") === bn)
-              .select(col("l_orderkey"), col("qty_e2")).coalesce(1),
-            statsCols = Seq("l_orderkey"))
-        }
+        appendBins(s, base, binned, Seq("l_orderkey", "qty_e2"),
+          statsCols = Seq("l_orderkey"))
         t.unpersist()
         s.sql("DROP TABLE IF EXISTS graft_q168_t")
         s.sql(s"CREATE TABLE graft_q168_t USING graft OPTIONS (path '$base')")
@@ -1462,7 +1435,6 @@ object SinkQueries {
     // matched, or an over-rewritten bin hash-fails.
     Q("q169_sql_merge",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q169")
         val t = Tables.lineitem(s, d)
           .select((col("l_orderkey") * 10 +
@@ -1471,24 +1443,14 @@ object SinkQueries {
           .groupBy(col("rid")).agg(max(col("qty_e2")).as("qty_e2"))
           .withColumn("ok", expr("rid div 10"))
           .persist()
-        val b = t.agg(min(col("ok")), max(col("ok"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
+        val (binned, olo, span) = rangeBins(t, "ok", 8)
         def lo(n: Long) = olo + (span * n) / 16
         val (ulo, uhi) = (lo(2), lo(3) - 1)   // update span
         val (xlo, xhi) = (lo(9), lo(10) - 1)  // delete span
         val (ilo, ihi) = (lo(12), lo(13) - 1) // insert-source span
-        val shift = (ohi + 1) * 10            // out of every bin's range
-        val binned = t.withColumn("bin",
-          expr(s"(ok - ${olo}L) * 8 div ${span}L"))
-        val bins = binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        bins.foreach { bn =>
-          VersionedTable.commitAppend(s, base,
-            binned.filter(col("bin") === bn)
-              .select(col("rid"), col("qty_e2")).coalesce(1),
-            statsCols = Seq("rid"))
-        }
+        val shift = (olo + span) * 10         // out of every bin's range
+        appendBins(s, base, binned, Seq("rid", "qty_e2"),
+          statsCols = Seq("rid"))
         t.filter(col("ok").between(ulo, uhi))
           .select(col("rid"), (pmod(col("rid"), lit(1000)) + 1).as("nq"))
           .unionAll(t.filter(col("ok").between(xlo, xhi))
@@ -1579,7 +1541,6 @@ object SinkQueries {
     // bucket hash-fails.
     Q("q170_stream_ivm",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q170")
         val view = graft.TempDirs.scoped("graft_q170_view")
         val t = Tables.lineitem(s, d)
@@ -1661,7 +1622,6 @@ object SinkQueries {
     // probe that stopped consulting the bloom, or a lost row fails.
     Q("q171_bloom_skipping",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q171")
         val sample = Tables.lineitem(s, d)
           .select((col("l_orderkey") * 10 +
@@ -1816,7 +1776,6 @@ object SinkQueries {
     // wrong hash-fails.
     Q("q173_sql_tvfs",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q173")
         val t = Tables.lineitem(s, d)
           .select((col("l_orderkey") * 10 +
@@ -1901,28 +1860,17 @@ object SinkQueries {
     // the wrong version number hash-fails.
     Q("q174_sql_restore",
       (s, d) => {
-        import graft.operators.VersionedTable
         val ns = s"q174_${java.util.UUID.randomUUID().toString.take(8)}"
-        val base =
-          s"${System.getProperty("java.io.tmpdir")}/graft_warehouse/$ns/t"
+        val wh = s.conf.get("spark.sql.catalog.graft.warehouse")
+        val base = s"$wh/$ns/t"
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
+        val (binned, olo, span) = rangeBins(t, "l_orderkey", 8)
         val (dlo, dhi) = (olo + (span * 5) / 16, olo + (span * 7) / 16 - 1)
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 8 div ${span}L"))
-        val bins = binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        bins.foreach { bn =>
-          VersionedTable.commitAppend(s, base,
-            binned.filter(col("bin") === bn)
-              .select(col("l_orderkey"), col("qty_e2")).coalesce(1),
-            statsCols = Seq("l_orderkey"))
-        }
+        appendBins(s, base, binned, Seq("l_orderkey", "qty_e2"),
+          statsCols = Seq("l_orderkey"))
         try {
           s.sql(s"DELETE FROM graft.$ns.t WHERE l_orderkey " +
             s"BETWEEN ${dlo}L AND ${dhi}L")
@@ -2008,25 +1956,14 @@ object SinkQueries {
     // 100 TB, where copy-on-write pays full file rewrites.
     Q("q175_dv_lifecycle",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q175")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 16 div ${ohi - olo + 1}L"))
-        val bins = binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        bins.foreach { bn =>
-          VersionedTable.commitAppend(s, base,
-            binned.filter(col("bin") === bn)
-              .select(col("l_orderkey"), col("l_partkey"), col("qty_e2"))
-              .coalesce(1),
-            statsCols = Seq("l_orderkey"))
-        }
+        appendBins(s, base, rangeBins(t, "l_orderkey", 16)._1,
+          Seq("l_orderkey", "l_partkey", "qty_e2"),
+          statsCols = Seq("l_orderkey"))
         def dvState(v: Long): (Long, Long, Long) = {
           val es = VersionedTable.entries(base, v)
           (es.size.toLong,
@@ -2117,28 +2054,16 @@ object SinkQueries {
     // minority of files — re-absorbed at the next compaction.
     Q("q176_dsv2_dv_read",
       (s, d) => {
-        import graft.operators.VersionedTable
         val ns = s"q176_${java.util.UUID.randomUUID().toString.take(8)}"
-        val base =
-          s"${System.getProperty("java.io.tmpdir")}/graft_warehouse/$ns/t"
+        val wh = s.conf.get("spark.sql.catalog.graft.warehouse")
+        val base = s"$wh/$ns/t"
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 8 div ${span}L"))
-        val bins = binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        bins.foreach { bn =>
-          VersionedTable.commitAppend(s, base,
-            binned.filter(col("bin") === bn)
-              .select(col("l_orderkey"), col("l_partkey"), col("qty_e2"))
-              .coalesce(1),
-            statsCols = Seq("l_orderkey"))
-        }
+        val (binned, olo, span) = rangeBins(t, "l_orderkey", 8)
+        appendBins(s, base, binned, Seq("l_orderkey", "l_partkey", "qty_e2"),
+          statsCols = Seq("l_orderkey"))
         try {
           VersionedTable.commitDeleteMoR(s, base,
             col("l_partkey") % 19 === 0)
@@ -2221,23 +2146,13 @@ object SinkQueries {
     // overlapping files, decided driver-plane once per query.
     Q("q177_runtime_pruning",
       (s, d) => {
-        import graft.operators.VersionedTable
         val li = Tables.lineitem(s, d)
           .select(col("l_orderkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"))
           .persist()
-        val kb = li.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (klo, khi) = (kb.getLong(0), kb.getLong(1))
         val base = graft.TempDirs.scoped("graft_q177_fact")
-        val binned = li.withColumn("bin",
-          expr(s"(l_orderkey - ${klo}L) * 16 div ${khi - klo + 1}L"))
-        binned.select(col("bin")).distinct().collect().map(_.getLong(0))
-          .sorted.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("qty_e2")).coalesce(1),
-              statsCols = Seq("l_orderkey"))
-          }
+        appendBins(s, base, rangeBins(li, "l_orderkey", 16)._1,
+          Seq("l_orderkey", "qty_e2"), statsCols = Seq("l_orderkey"))
         // the dimension: parquet-backed so its Filter survives the
         // optimizer (a filtered LocalRelation constant-folds away)
         val ord = Tables.orders(s, d)
@@ -2315,7 +2230,6 @@ object SinkQueries {
     // write, so exactly-once costs zero extra I/O.
     Q("q178_stream_sink",
       (s, d) => {
-        import graft.operators.VersionedTable
         import org.apache.spark.sql.streaming.{OutputMode, Trigger}
         val src = graft.TempDirs.scoped("graft_q178_src")
         val dst = graft.TempDirs.scoped("graft_q178_dst")
@@ -2504,7 +2418,6 @@ object SinkQueries {
     // O(table), from plain SQL.
     Q("q183_scoped_optimize",
       (s, d) => {
-        import graft.operators.VersionedTable
         val ns = s"q183_${java.util.UUID.randomUUID().toString.take(8)}"
         val wh = s.conf.get("spark.sql.catalog.graft.warehouse")
         val base = s"$wh/$ns/t"
@@ -2512,38 +2425,30 @@ object SinkQueries {
           .select(col("l_orderkey"), col("l_suppkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"))
           .persist()
-        val kb = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (klo, khi) = (kb.getLong(0), kb.getLong(1))
-        val span = khi - klo + 1
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${klo}L) * 12 div ${span}L"))
-        binned.select(col("bin")).distinct().collect().map(_.getLong(0))
-          .sorted.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("l_suppkey"), col("qty_e2"))
-                .coalesce(1),
-              statsCols = Seq("l_orderkey"))
-          }
+        val (binned, klo, span) = rangeBins(t, "l_orderkey", 12)
+        appendBins(s, base, binned, Seq("l_orderkey", "l_suppkey", "qty_e2"),
+          statsCols = Seq("l_orderkey"))
         val v0 = VersionedTable.latestVersion(base).get
         val before = VersionedTable.entries(base, v0)
         val scopeLo = klo + (span * 2) / 3
         try {
           s.sql(s"CALL graft.system.zorder_where('$ns.t', 'l_orderkey', " +
-            s"${scopeLo}L, ${khi}L, 'l_orderkey,l_suppkey', 2)")
+            s"${scopeLo}L, ${klo + span - 1}L, 'l_orderkey,l_suppkey', 2)")
           val v1 = VersionedTable.latestVersion(base).get
           val after = VersionedTable.entries(base, v1)
           val touched = before.size - after.map(_.path).toSet
             .intersect(before.map(_.path).toSet).size
           val agg = s.read.format("graft").load(base)
             .agg(count(lit(1)).as("n"), sum(col("qty_e2")).as("q")).head()
-          t.unpersist()
           import s.implicits._
           Seq((before.size.toLong, touched.toLong, after.size.toLong,
             agg.getLong(0), agg.getLong(1)))
             .toDF("files_before", "files_touched", "files_after",
               "n_rows", "qty_e2")
-        } finally { s.sql(s"DROP TABLE IF EXISTS graft.$ns.t"); () }
+        } finally {
+          s.sql(s"DROP TABLE IF EXISTS graft.$ns.t")
+          t.unpersist(); ()
+        }
       },
       Some("""
         WITH t AS (
@@ -2592,23 +2497,13 @@ object SinkQueries {
     // fold at plan time — never a table scan.
     Q("q184_manifest_ndv",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q184")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_suppkey"))
           .persist()
-        val kb = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (klo, khi) = (kb.getLong(0), kb.getLong(1))
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${klo}L) * 8 div ${khi - klo + 1}L"))
-        binned.select(col("bin")).distinct().collect().map(_.getLong(0))
-          .sorted.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("l_suppkey")).coalesce(1),
-              statsCols = Seq("l_orderkey"),
-              ndvCols = Seq("l_orderkey", "l_suppkey"))
-          }
+        appendBins(s, base, rangeBins(t, "l_orderkey", 8)._1,
+          Seq("l_orderkey", "l_suppkey"), statsCols = Seq("l_orderkey"),
+          ndvCols = Seq("l_orderkey", "l_suppkey"))
         val ndv = VersionedTable.ndvEstimates(base,
           VersionedTable.latestVersion(base).get)
         val ex = t.agg(
@@ -2672,24 +2567,13 @@ object SinkQueries {
     // non-predictable column, so the query projects everything else.
     Q("q185_describe_detail",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q185")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_suppkey")).persist()
-        val kb = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (klo, khi) = (kb.getLong(0), kb.getLong(1))
-        val span = khi - klo + 1
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${klo}L) * 6 div ${span}L"))
-        binned.select(col("bin")).distinct().collect().map(_.getLong(0))
-          .sorted.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("l_suppkey")).coalesce(1),
-              statsCols = Seq("l_orderkey"),
-              bloomCols = Seq("l_suppkey"),
-              ndvCols = Seq("l_suppkey"))
-          }
+        val (binned, klo, span) = rangeBins(t, "l_orderkey", 6)
+        appendBins(s, base, binned, Seq("l_orderkey", "l_suppkey"),
+          statsCols = Seq("l_orderkey"), bloomCols = Seq("l_suppkey"),
+          ndvCols = Seq("l_suppkey"))
         VersionedTable.addConstraint(s, base, "okey_pos", "l_orderkey >= 0")
         // MoR-delete HALF of bin 2's span — partial-file deletions, so
         // deletion vectors genuinely exist (a span covering a whole
@@ -2762,7 +2646,6 @@ object SinkQueries {
     // happened fails the engine-side require.
     Q("q186_cbo_broadcast_flip",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q186")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"),
@@ -2855,25 +2738,15 @@ object SinkQueries {
     // a rewrite hash-fails.
     Q("q187_disjoint_dml_race",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q187")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
         // the q165 8-bin one-file-per-commit fixture (zone maps on key)
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 8 div ${span}L"))
-        binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("qty_e2")).coalesce(1),
-              statsCols = Seq("l_orderkey"))
-          }
+        val (binned, olo, span) = rangeBins(t, "l_orderkey", 8)
+        appendBins(s, base, binned, Seq("l_orderkey", "qty_e2"),
+          statsCols = Seq("l_orderkey"))
         // A's span straddles bins 2-3; B's straddles bins 6-7 —
         // off-bin-edge by construction so both rewrites are non-empty
         val (alo, ahi) = (olo + (span * 5) / 16, olo + (span * 7) / 16 - 1)
@@ -2981,7 +2854,6 @@ object SinkQueries {
     // raw lineitem with the same sixteenth-span arithmetic.
     Q("q189_column_mapping",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q189")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"),
@@ -2989,19 +2861,9 @@ object SinkQueries {
             graft.functions.ColumnOps.e2(col("l_discount")).as("disc_e2"),
             col("l_linenumber"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 8 div ${span}L"))
-        binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("qty_e2"), col("disc_e2"))
-                .coalesce(1),
-              statsCols = Seq("l_orderkey"))
-          }
+        val (binned, olo, span) = rangeBins(t, "l_orderkey", 8)
+        appendBins(s, base, binned, Seq("l_orderkey", "qty_e2", "disc_e2"),
+          statsCols = Seq("l_orderkey"))
         val filesBefore = VersionedTable.entries(base, 8L).map(_.path).toSet
         // pre-drop discount total, via time travel AFTER the alters
         VersionedTable.alterRenameColumn(base, "l_orderkey", "okey")
@@ -3087,7 +2949,6 @@ object SinkQueries {
     // with the same eighth-bin/sixteenth-span arithmetic.
     Q("q191_refs_clone",
       (s, d) => {
-        import graft.operators.VersionedTable
         val root = graft.TempDirs.scoped("graft_q191")
         val src = s"$root/src"
         val tgt = s"$root/branch"
@@ -3096,19 +2957,9 @@ object SinkQueries {
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"),
             col("l_linenumber"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 8 div ${span}L"))
-        binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted.foreach { bn =>
-            VersionedTable.commitAppend(s, src,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("qty_e2"))
-                .coalesce(1),
-              statsCols = Seq("l_orderkey"))
-          }
+        val (binned, olo, span) = rangeBins(t, "l_orderkey", 8)
+        appendBins(s, src, binned, Seq("l_orderkey", "qty_e2"),
+          statsCols = Seq("l_orderkey"))
         // release pin mid-history: bins 0-3
         VersionedTable.createTag(src, "rc", 4L)
         // zero-copy branch at the head
@@ -3280,26 +3131,15 @@ object SinkQueries {
     // hash-check against the raw-parquet UNION twin.
     Q("q193_replace_where",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q193")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"),
             col("l_linenumber"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 8 div ${span}L"))
-        val bins = binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        bins.foreach { bn =>
-          VersionedTable.commitAppend(s, base,
-            binned.filter(col("bin") === bn)
-              .select(col("l_orderkey"), col("qty_e2")).coalesce(1),
-            statsCols = Seq("l_orderkey"))
-        }
+        val (binned, olo, span) = rangeBins(t, "l_orderkey", 8)
+        appendBins(s, base, binned, Seq("l_orderkey", "qty_e2"),
+          statsCols = Seq("l_orderkey"))
         // the replaced slice: the EXACT key range of bins 2-3 (span
         // arithmetic rounds; the data's own bin extrema don't)
         val pr = binned.filter(col("bin").isin(2L, 3L))
@@ -3379,26 +3219,16 @@ object SinkQueries {
     // pair wrong rows and every downstream number would shift.
     Q("q194_row_tracking",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q194")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"),
             col("l_linenumber"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 8 div ${span}L"))
-        binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("qty_e2"),
-                  col("l_linenumber")).coalesce(1),
-              statsCols = Seq("l_orderkey"))
-          }
+        val (binned, olo, span) = rangeBins(t, "l_orderkey", 8)
+        appendBins(s, base, binned,
+          Seq("l_orderkey", "qty_e2", "l_linenumber"),
+          statsCols = Seq("l_orderkey"))
         VersionedTable.enableRowIds(base)
         val v0 = VersionedTable.latestVersion(base).get
         def ext(bn: Long): (Long, Long) = {
@@ -3488,26 +3318,16 @@ object SinkQueries {
     // delete and the totals shift.
     Q("q195_cdc_by_rowid",
       (s, d) => {
-        import graft.operators.VersionedTable
         val base = graft.TempDirs.scoped("graft_q195")
         val t = Tables.lineitem(s, d)
           .select(col("l_orderkey"),
             graft.functions.ColumnOps.e2(col("l_quantity")).as("qty_e2"),
             col("l_linenumber"))
           .persist()
-        val b = t.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
-        val binned = t.withColumn("bin",
-          expr(s"(l_orderkey - ${olo}L) * 8 div ${span}L"))
-        binned.select(col("bin")).distinct()
-          .collect().map(_.getLong(0)).sorted.foreach { bn =>
-            VersionedTable.commitAppend(s, base,
-              binned.filter(col("bin") === bn)
-                .select(col("l_orderkey"), col("qty_e2"),
-                  col("l_linenumber")).coalesce(1),
-              statsCols = Seq("l_orderkey"))
-          }
+        val (binned, _, _) = rangeBins(t, "l_orderkey", 8)
+        appendBins(s, base, binned,
+          Seq("l_orderkey", "qty_e2", "l_linenumber"),
+          statsCols = Seq("l_orderkey"))
         val v0 = VersionedTable.enableRowIds(base)
         def ext(bn: Long): (Long, Long) = {
           val r = binned.filter(col("bin") === bn)
@@ -3679,7 +3499,6 @@ object SinkQueries {
     // HistogramJoinOrderSpec carries the plan-level asserts.
     Q("q198_histogram_join_order",
       (s, _) => {
-        import graft.operators.VersionedTable
         val sq = s
         import sq.implicits._
         val factB = graft.TempDirs.scoped("graft_q198_fact")
@@ -4119,7 +3938,6 @@ object SinkQueries {
     // after.
     Q("q203_branch_wap",
       (s, d) => {
-        import graft.operators.VersionedTable
         val ns = s"q203_${java.util.UUID.randomUUID().toString.take(8)}"
         val wh = s.conf.get("spark.sql.catalog.graft.warehouse")
         val tBase = s"$wh/$ns/t"
