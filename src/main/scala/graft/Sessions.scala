@@ -48,6 +48,17 @@ object Sessions {
   /** [[local]]'s engine settings without the environment's overrides:
     * specs build their session from this, so a variable left in the
     * shell cannot change what they test.
+    *
+    * The `file:` scheme is bound to [[graft.io.NioLocalFileSystem]] and
+    * [[graft.io.NioLocalFs]]. Without `libhadoop.so`, Hadoop's local
+    * filesystem starts one process per `chmod` (each checkpoint temp
+    * file, parquet part file and committer dir) and per `readlink`
+    * (each checkpoint rename), about 170 for one `watch --once` drain
+    * of 48 scans; these set modes and read links through `java.nio`.
+    * They leave the rest as it was: checkpoint atomicity is Hadoop's
+    * own rename logic, `.crc` sidecars are written, and a sticky mode or
+    * a real symlink takes Hadoop's stock path. [[deployment]] keeps the
+    * cluster's filesystems: its checkpoints are on replicated storage.
     */
   private[graft] def localBuilder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
@@ -69,6 +80,8 @@ object Sessions {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         Int.MaxValue.toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
 
   def local(cpus: String): SparkSession = {
     val b = localBuilder(cpus)

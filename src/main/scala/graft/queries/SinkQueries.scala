@@ -1707,20 +1707,19 @@ object SinkQueries {
           .groupBy(col("rid")).agg(max(col("qty_e2")).as("qty_e2"))
           .withColumn("ok", expr("rid div 10"))
           .persist()
-        val b = src.agg(min(col("ok")), max(col("ok"))).head()
-        val (olo, ohi) = (b.getLong(0), b.getLong(1))
-        val span = ohi - olo + 1
-        val (dlo, dhi) = (olo + (span * 5) / 16, olo + (span * 7) / 16 - 1)
-        src.createOrReplaceTempView("graft_q172_src")
-        s.sql(s"CREATE TABLE $t (rid BIGINT, qty_e2 BIGINT)")
         try {
+          val b = src.agg(min(col("ok")), max(col("ok"))).head()
+          val (olo, ohi) = (b.getLong(0), b.getLong(1))
+          val span = ohi - olo + 1
+          val (dlo, dhi) = (olo + (span * 5) / 16, olo + (span * 7) / 16 - 1)
+          src.createOrReplaceTempView("graft_q172_src")
+          s.sql(s"CREATE TABLE $t (rid BIGINT, qty_e2 BIGINT)")
           s.sql(s"INSERT INTO $t SELECT rid, qty_e2 " +
             s"FROM graft_q172_src WHERE ok % 2 = 0")
           s.sql(s"INSERT INTO $t SELECT rid, qty_e2 " +
             s"FROM graft_q172_src WHERE ok % 2 = 1")
           s.sql(s"DELETE FROM $t WHERE rid BETWEEN ${dlo * 10} " +
             s"AND ${dhi * 10 + 9}")
-          src.unpersist()
           // materialized INSIDE the try: the finally drops the table,
           // and the driver writes the returned frame lazily after
           val r = s.sql(
@@ -1734,7 +1733,10 @@ object SinkQueries {
           Seq((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
             r.getLong(4)))
             .toDF("n_created", "n_pre", "qty_pre", "n_post", "qty_post")
-        } finally { s.sql(s"DROP TABLE IF EXISTS $t"); () }
+        } finally {
+          s.sql(s"DROP TABLE IF EXISTS $t")
+          src.unpersist(); ()
+        }
       },
       Some("""
         WITH t AS (

@@ -20,6 +20,8 @@ class LocalConfSpec extends SparkSuite {
     // other specs make on the shared session
     val conf = spark.newSession().conf.getAll -- SparkOwn
     assert(conf === Map(
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.io.NioLocalFs",
+      "spark.hadoop.fs.file.impl" -> "graft.io.NioLocalFileSystem",
       "spark.master" -> "local[4]",
       "spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
       "spark.sql.catalog.graft.warehouse" ->

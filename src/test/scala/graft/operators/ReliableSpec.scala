@@ -51,6 +51,25 @@ class ReliableSpec extends SparkSuite {
     } finally spark.conf.set(Reliable.Flag, "false") // shared-JVM session
   }
 
+  test("deployment profile leaves the file: scheme's filesystem as the cluster has it") {
+    // getOrCreate applies a builder's settings to the running session, so
+    // a key deployment set would overwrite the marker; the zone is the
+    // control that the marker sees what deployment does set
+    val markers = Seq("spark.hadoop.fs.file.impl" -> "marker",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "marker",
+      "spark.sql.session.timeZone" -> "America/Chicago")
+    val prior = markers.map { case (k, _) => k -> spark.conf.get(k) }
+    val dir = Files.createTempDirectory("graft-deploy-ckpt").toString
+    try {
+      markers.foreach { case (k, v) => spark.conf.set(k, v) }
+      val s = graft.Sessions.deployment(dir)
+      assert(markers.map { case (k, _) => s.conf.get(k) } === Seq("marker", "marker", "UTC"))
+    } finally {
+      prior.foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.conf.set(Reliable.Flag, "false")
+    }
+  }
+
   test("GlobalRank and ConnectedComponents stay correct under the flag") {
     withFlag {
       val ranked = GlobalRank.withGlobalRank(

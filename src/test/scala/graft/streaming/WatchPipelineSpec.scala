@@ -1,10 +1,12 @@
 package graft.streaming
 
+import java.net.URI
 import java.nio.file.{Files, Path}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -12,11 +14,13 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import graft.SparkSuite
 import graft.functions.SyntheticImages
+import graft.io.{LocalFsSpec, NioLocalFileSystem, NioLocalFs}
 import graft.receipts.{ExpenseAnalyzer, TextractJson}
 
 /** T1-T4 semantics: end-to-end AvailableNow run, checkpointed
-  * exactly-once across restarts (T3), cross-batch content dedup, and
-  * a drain that is one micro-batch (no watermark-only trailing batch).
+  * exactly-once across restarts (T3), cross-batch content dedup, a
+  * drain that is one micro-batch (no watermark-only trailing batch) and
+  * starts no `chmod` or `readlink` process.
   */
 class WatchPipelineSpec extends SparkSuite {
 
@@ -58,10 +62,21 @@ class WatchPipelineSpec extends SparkSuite {
 
     val jobs = new JobDescriptions
     spark.sparkContext.addSparkListener(jobs)
-    try {
+    val (_, spawned) = try LocalFsSpec.processStarts {
       WatchPipeline.runAvailableNow(spark, raw.toString, out, ckpt, new StubAnalyzer)
       jobs.fence(spark)
     } finally spark.sparkContext.removeSparkListener(jobs)
+    // the checkpoint log, state store and parquet sink set no mode and
+    // read no link through a child process
+    val chmodOrReadlink = spawned.filter(LocalFsSpec.isChmodOrReadlink)
+    assert(chmodOrReadlink.size === 0, chmodOrReadlink.take(3))
+    // the filesystems the session really gets: the FileSystem cache keys
+    // on scheme and user, so an instance built before the session wins
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val file = URI.create("file:///")
+    assert(FileSystem.get(file, hadoopConf).getClass === classOf[NioLocalFileSystem])
+    assert(FileContext.getFileContext(file, hadoopConf).getDefaultFileSystem.getClass ===
+      classOf[NioLocalFs])
 
     val rows = spark.read.parquet(out).collect()
     val ids = rows.map(_.getAs[String]("img_id"))
