@@ -59,6 +59,23 @@ object Sessions {
     * own rename logic, `.crc` sidecars are written, and a sticky mode or
     * a real symlink takes Hadoop's stock path. [[deployment]] keeps the
     * cluster's filesystems: its checkpoints are on replicated storage.
+    *
+    * Artifact isolation is off. Each streaming query runs on a clone of
+    * the session, and with isolation on (Spark 4.1's default) every
+    * clone is a new artifact session, whose jobs get a fresh executor
+    * class loader. Spark's codegen cache keys on that loader, so a
+    * streaming query run again in the same JVM would compile all of its
+    * generated classes again, byte-identical to the last run's: a second
+    * drain of the same 48 scans compiles 27. The gain is in a JVM that
+    * runs one streaming query more than once, such as the test suites
+    * or a harness that drains in a loop. A `graft watch --once`
+    * process runs one drain, which compiles all of its classes either
+    * way (31); a continuous `graft watch` is one query; and no query
+    * that [[graft.Bench]] times starts a streaming query. None of these
+    * gains. graft adds no session artifacts (no `addArtifact` or
+    * `addJar`), so isolation would keep nothing apart here.
+    * [[deployment]] keeps the cluster's setting: a cluster may serve
+    * Spark Connect clients whose artifacts must stay apart.
     */
   private[graft] def localBuilder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
@@ -82,6 +99,7 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def local(cpus: String): SparkSession = {
     val b = localBuilder(cpus)

@@ -68,9 +68,13 @@ object WatchPipeline {
     * can never add a sink row; the next data batch evicts the expired
     * keys itself. The watermark it filters with is carried by the
     * commit log (`nextBatchWatermarkMs`), so a restarted query starts
-    * from the same one. The query clones the session conf when it is
-    * created, so the setting is made on `spark` only around `start()`
-    * and the caller's own setting is then put back.
+    * from the same one. The query clones the session when it is
+    * created: the clone copies the session conf, so the setting is made
+    * on `spark` only around `start()` and the caller's own setting is
+    * then put back. The clone is also a new artifact session; the local
+    * profile turns artifact isolation off, so its jobs reuse the code
+    * that earlier queries in the same JVM compiled (see
+    * [[graft.Sessions.localBuilder]]).
     */
   def start(spark: SparkSession, rawDir: String, checkpointDir: String,
             analyzer: ExpenseAnalyzer, sink: (DataFrame, Long) => Unit,

@@ -23,6 +23,7 @@ class LocalConfSpec extends SparkSuite {
       "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.io.NioLocalFs",
       "spark.hadoop.fs.file.impl" -> "graft.io.NioLocalFileSystem",
       "spark.master" -> "local[4]",
+      "spark.sql.artifact.isolation.enabled" -> "false",
       "spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
       "spark.sql.catalog.graft.warehouse" ->
         s"${System.getProperty("java.io.tmpdir")}/graft_warehouse",

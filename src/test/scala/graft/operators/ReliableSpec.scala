@@ -52,18 +52,24 @@ class ReliableSpec extends SparkSuite {
   }
 
   test("deployment profile leaves the file: scheme's filesystem as the cluster has it") {
-    // getOrCreate applies a builder's settings to the running session, so
-    // a key deployment set would overwrite the marker; the zone is the
-    // control that the marker sees what deployment does set
+    // and artifact isolation as the cluster has it too. getOrCreate
+    // applies a builder's settings to the running session, so a key
+    // deployment set would overwrite the marker; the zone is the control
+    // that the marker sees what deployment does set. Isolation is a
+    // boolean, and either value could be an explicit set, so it is unset
+    // instead and must stay unset
     val markers = Seq("spark.hadoop.fs.file.impl" -> "marker",
       "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "marker",
       "spark.sql.session.timeZone" -> "America/Chicago")
-    val prior = markers.map { case (k, _) => k -> spark.conf.get(k) }
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val prior = (markers.map(_._1) :+ isolation).map(k => k -> spark.conf.get(k))
     val dir = Files.createTempDirectory("graft-deploy-ckpt").toString
     try {
       markers.foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.conf.unset(isolation)
       val s = graft.Sessions.deployment(dir)
       assert(markers.map { case (k, _) => s.conf.get(k) } === Seq("marker", "marker", "UTC"))
+      assert(!s.conf.getAll.contains(isolation))
     } finally {
       prior.foreach { case (k, v) => spark.conf.set(k, v) }
       spark.conf.set(Reliable.Flag, "false")

@@ -7,6 +7,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileContext, FileSystem}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -19,8 +20,9 @@ import graft.receipts.{ExpenseAnalyzer, TextractJson}
 
 /** T1-T4 semantics: end-to-end AvailableNow run, checkpointed
   * exactly-once across restarts (T3), cross-batch content dedup, a
-  * drain that is one micro-batch (no watermark-only trailing batch) and
-  * starts no `chmod` or `readlink` process.
+  * drain that is one micro-batch (no watermark-only trailing batch),
+  * starts no `chmod` or `readlink` process and, once warm, compiles no
+  * generated class.
   */
 class WatchPipelineSpec extends SparkSuite {
 
@@ -95,16 +97,25 @@ class WatchPipelineSpec extends SparkSuite {
   private def batchDirs(out: String): Seq[String] =
     Option(new java.io.File(out).list()).toSeq.flatten.filter(_.startsWith("batch_id=")).sorted
 
-  test("a --once drain is one micro-batch: one progress event, one batch_id partition") {
-    import WatchPipelineSpec._
-    val (raw, out, ckpt, _) = freshDirs()
+  /** Six scans and one re-scan, written once and only read by the drains
+    * of the tests that share them; each drain has its own sink and
+    * checkpoint. */
+  private lazy val sixScansAndARescan: Path = {
+    val (raw, _, _, _) = freshDirs()
     for (i <- 1 to 6) scan(raw, f"Scan_$i%03d.png", i)
     scan(raw, "Rescan_001.png", 1)
+    raw
+  }
+
+  test("a --once drain is one micro-batch: one progress event, one batch_id partition") {
+    import WatchPipelineSpec._
+    val (_, out, ckpt, _) = freshDirs()
 
     val events = new QueryEvents
     spark.streams.addListener(events)
     try {
-      WatchPipeline.runAvailableNow(spark, raw.toString, out, ckpt, new StubAnalyzer)
+      WatchPipeline.runAvailableNow(spark, sixScansAndARescan.toString, out, ckpt,
+        new StubAnalyzer)
       events.awaitTerminated()
     } finally spark.streams.removeListener(events)
 
@@ -139,6 +150,26 @@ class WatchPipelineSpec extends SparkSuite {
     assert(spark.read.parquet(out).count() === 2) // overwrote, not appended
     sink(batch, 8L) // a genuinely new batch appends
     assert(spark.read.parquet(out).count() === 4)
+  }
+
+  test("a warm drain compiles no generated class: the codegen cache outlives the query") {
+    val (_, _, _, base) = freshDirs()
+    def drain(name: String): String = {
+      val out = s"$base/$name/out"
+      WatchPipeline.runAvailableNow(spark, sixScansAndARescan.toString, out,
+        s"$base/$name/ckpt", new WatchPipelineSpec.StubAnalyzer)
+      out
+    }
+
+    val first = drain("first")
+    // one count per CodeGenerator.compile that missed the cache, JVM-wide
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val second = drain("second")
+    assert(compiles.getCount - before === 0L)
+    val rows = spark.read.parquet(first).collect().toSet
+    assert(rows.size === 6)
+    assert(spark.read.parquet(second).collect().toSet === rows)
   }
 
   test("checkpoint recovery is exactly-once; dedup state survives (T3)") {
